@@ -622,23 +622,6 @@ def q_politeness_waves(spark, sf_dir):
     return out.select(doc_id_expr().alias("doc_id"), "wave")
 
 
-def q_latest_capture_semi(spark, sf_dir):
-    """Semi-join latest-capture strategy (N3 alternative plan): light-column
-    winners aggregate + left-semi join — payload rows never shuffle or sort.
-    Must keep exactly one row per url with the newest warc_ts, byte-equal to
-    the window strategy (oracle = BASE_TS + doc_id seconds arithmetic;
-    corpus.capture_rows adds a 1h-older stale capture for doc_id % 5 == 0)."""
-    from ollama_ocr_spark.operators.extract import synthesize_stage
-    from ollama_ocr_spark.operators.maintenance import doc_id_expr, latest_capture
-
-    pages = synthesize_stage(_docs(spark, sf_dir))
-    deduped = latest_capture(pages, strategy="semi")
-    return deduped.select(
-        doc_id_expr().alias("doc_id"),
-        F.unix_micros(F.col("warc_ts").cast("timestamp_ltz")).alias("ts_us"),
-    )
-
-
 def q_top_docs_by_chars(spark, sf_dir):
     """Top-k largest docs (N4), deterministic tie-break."""
     from ollama_ocr_spark.operators.reports import top_k_largest
@@ -3090,215 +3073,227 @@ def _utc_wrapped(fn):
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: _utc_wrapped(fn) for name, fn in _QUERIES.items()}
+    return {fn.__name__[2:]: _utc_wrapped(fn) for fn, _ in REGISTRY}
 
 
-_QUERIES = {
-        # Never-driver-sampled queries lead: the driver's CORRECTNESS
-        # gate samples the FIRST 50 entries in dict order (the rotation
-        # the round-3/round-4 verdicts asked for). The round-5
-        # additions lead newest-first (zero driver evidence of any kind
-        # yet), then the round-3/4 band the r4 judge swept green; the
-        # names pushed past the 50-window by round-5 growth are all
-        # judge-green in r4 and swept green every sitting (latest:
-        # 193/193 at the fourth-sitting close).
-        # --- round-5 additions (insert new queries HERE) ---
-        "host_kcore": q_host_kcore,
-        "host_hits": q_host_hits,
-        "source_token_kl": q_source_token_kl,
-        "tpch_local_supplier_revenue": q_tpch_local_supplier_revenue,
-        "event_cooccurrence": q_event_cooccurrence,
-        "host_pagerank_delta": q_host_pagerank_delta,
-        "interevent_histogram": q_interevent_histogram,
-        "heaps_law": q_heaps_law,
-        "host_mirrors": q_host_mirrors,
-        "host_seed_distance": q_host_seed_distance,
-        "crawl_reachability": q_crawl_reachability,
-        "event_transitions": q_event_transitions,
-        "event_stationary": q_event_stationary,
-        "user_transition_entropy": q_user_transition_entropy,
-        "state_dwell_stats": q_state_dwell_stats,
-        "cdc_chunks": q_cdc_chunks,
-        "host_reciprocity": q_host_reciprocity,
-        "token_gini": q_token_gini,
-        "host_assortativity": q_host_assortativity,
-        "host_communities": q_host_communities,
-        "normalize_text_nfkc": q_normalize_text_nfkc,
-        "wave_makespan_mix": q_wave_makespan_mix,
-        "community_quarantine": q_community_quarantine,
-        "bpe_learn": q_bpe_learn,
-        "community_budget": q_community_budget,
-        "snapshot_gc_report": q_snapshot_gc_report,
-        # --- r3/early-r4 band, judge-green in r4, never driver-sampled ---
-        "vocab_coverage": q_vocab_coverage,
-        "dedup_savings": q_dedup_savings,
-        "split_leakage": q_split_leakage,
-        "lsh_bucket_histogram": q_lsh_bucket_histogram,
-        "remove_dup_spans": q_remove_dup_spans,
-        "ann_recall_eval": q_ann_recall_eval,
-        "nb_quality": q_nb_quality,
-        "robots_filter": q_robots_filter,
-        "crawl_budget": q_crawl_budget,
-        "bigram_logprob": q_bigram_logprob,
-        "zipf_slope": q_zipf_slope,
-        "quality_deciles": q_quality_deciles,
-        "dedup_representatives": q_dedup_representatives,
-        "lsh_precision_eval": q_lsh_precision_eval,
-        "curation_funnel": q_curation_funnel,
-        "dedup_lines": q_dedup_lines,
-        "encoding_health": q_encoding_health,
-        "fix_encoding": q_fix_encoding,
-        "hapax_rate": q_hapax_rate,
-        "packing_efficiency": q_packing_efficiency,
-        "url_aliases": q_url_aliases,
-        "dedup_cluster_sizes": q_dedup_cluster_sizes,
-        "tokenizer_fertility": q_tokenizer_fertility,
-        "data_budget_plan": q_data_budget_plan,
-        "quality_sample": q_quality_sample,
-        "mix_manifest": q_mix_manifest,
-        "oov_rate": q_oov_rate,
-        "url_filter": q_url_filter,
-        "domain_quality": q_domain_quality,
-        "lang_segments": q_lang_segments,
-        "embedding_near_dupes_lsh": q_embedding_near_dupes_lsh,
-        "semantic_dedup": q_semantic_dedup,
-        "host_link_graph": q_host_link_graph,
-        "host_pagerank": q_host_pagerank,
-        "crawl_diff": q_crawl_diff,
-        "unigram_logprob": q_unigram_logprob,
-        "ngram_span_coverage": q_ngram_span_coverage,
-        "anchor_text_stats": q_anchor_text_stats,
-        "phrase_search": q_phrase_search,
-        "and_search": q_and_search,
-        "recrawl_schedule": q_recrawl_schedule,
-        "tfidf_top_terms": q_tfidf_top_terms,
-        "bpe_pair_counts": q_bpe_pair_counts,
-        "dsir_importance": q_dsir_importance,
-        "group_holdout_split": q_group_holdout_split,
-        "temperature_mix": q_temperature_mix,
-        "zorder_key": q_zorder_key,
-        "shingle_novelty": q_shingle_novelty,
-        "chunk_documents": q_chunk_documents,
-        "cross_corpus_dedup": q_cross_corpus_dedup,
-        "training_batches": q_training_batches,
-        # --- driver-sampled in r1-r4 (green in CORRECTNESS_r0*) ---
-        "selection_drift": q_selection_drift,
-        "filter_attribution": q_filter_attribution,
-        "token_drift": q_token_drift,
-        "pii_stats": q_pii_stats,
-        "shard_manifest": q_shard_manifest,
-        "normalize_text": q_normalize_text,
-        "bbit_minhash_eval": q_bbit_minhash_eval,
-        "weighted_sample": q_weighted_sample,
-        "event_funnel": q_event_funnel,
-        "retention_cohorts": q_retention_cohorts,
-        "host_triangles": q_host_triangles,
-        "event_anomalies": q_event_anomalies,
-        "bot_suspects": q_bot_suspects,
-        "stratified_sample": q_stratified_sample,
-        "sessionized_funnel": q_sessionized_funnel,
-        "image_resize": q_image_resize,
-        "frame_sample": q_frame_sample,
-        "robots_rule_stats": q_robots_rule_stats,
-        "minhash_band_recall": q_minhash_band_recall,
-        "containment_histogram": q_containment_histogram,
-        "quality_by_crawl_round": q_quality_by_crawl_round,
-        "wave_makespan": q_wave_makespan,
-        "host_topic_labels": q_host_topic_labels,
-        "simhash_band_recall": q_simhash_band_recall,
-        "crawl_priority": q_crawl_priority,
-        "chunk_dedup": q_chunk_dedup,
-        "winnow_near_pairs": q_winnow_near_pairs,
-        "host_content_entropy": q_host_content_entropy,
-        "dedup_methods_overlap": q_dedup_methods_overlap,
-        "quality_confusion": q_quality_confusion,
-        "fetch_frontier": q_fetch_frontier,
-        "minhash_accuracy_eval": q_minhash_accuracy_eval,
-        "simhash_near_pairs": q_simhash_near_pairs,
-        "jaccard_histogram": q_jaccard_histogram,
-        "host_template_entropy": q_host_template_entropy,
-        "host_degree_stats": q_host_degree_stats,
-        "bigram_stats": q_bigram_stats,
-        "length_histogram": q_length_histogram,
-        "retrieval_rerank": q_retrieval_rerank,
-        "bm25_topk": q_bm25_topk,
-        "compaction_plan": q_compaction_plan,
-        "host_trustrank": q_host_trustrank,
-        "pretraining_export": q_pretraining_export,
-        "containment_pairs": q_containment_pairs,
-        "topic_mix": q_topic_mix,
-        "shard_plan": q_shard_plan,
-        "family_split": q_family_split,
-        "curate_corpus_incremental": q_curate_corpus_incremental,
-        "chunk_ann_topk": q_chunk_ann_topk,
-        "contamination_by_source": q_contamination_by_source,
-        "quality_scores": q_quality_scores,
-        "repetition_stats": q_repetition_stats,
-        "url_normalize": q_url_normalize,
-        "langid_confusion": q_langid_confusion,
-        "fingerprints": q_fingerprints,
-        "ann_cosine_topk": q_ann_cosine_topk,
-        "ann_lsh_topk": q_ann_lsh_topk,
-        "ann_ivf_topk": q_ann_ivf_topk,
-        "embedding_near_dupes": q_embedding_near_dupes,
-        "vocab_topk": q_vocab_topk,
-        "golden_compare": q_golden_compare,
-        "tpch_shipping_revenue": q_tpch_shipping_revenue,
-        "nation_revenue": q_nation_revenue,
-        "events_daily": q_events_daily,
-        "sessionize": q_sessionize,
-        "session_windows": q_session_windows,
-        "extract_text_roundtrip": q_extract_text_roundtrip,
-        "extract_handwriting": q_extract_handwriting,
-        "extract_pdf_fold": q_extract_pdf_fold,
-        "extract_route_counts": q_extract_route_counts,
-        "extract_error_rows": q_extract_error_rows,
-        "structured_receipts": q_structured_receipts,
-        "structured_forms": q_structured_forms,
-        "structured_price_tags": q_structured_price_tags,
-        "analyze_metadata": q_analyze_metadata,
-        "multi_step": q_multi_step,
-        "image_metadata": q_image_metadata,
-        "media_metadata": q_media_metadata,
-        "image_features": q_image_features,
-        "template_mining": q_template_mining,
-        "host_skew_counts": q_host_skew_counts,
-        "corpus_cardinality": q_corpus_cardinality,
-        "latest_event_per_user": q_latest_event_per_user,
-        "resume_anti_join": q_resume_anti_join,
-        "resume_anti_join_bloom": q_resume_anti_join_bloom,
-        "extract_image_text": q_extract_image_text,
-        "extract_text_plain": q_extract_text_plain,
-        "politeness_waves": q_politeness_waves,
-        "latest_capture_semi": q_latest_capture_semi,
-        "pii_scrub": q_pii_scrub,
-        "paragraph_dedup": q_paragraph_dedup,
-        "boilerplate_paragraphs": q_boilerplate_paragraphs,
-        "line_filter": q_line_filter,
-        "hash_split": q_hash_split,
-        "dedup_components": q_dedup_components,
-        "normalize_embeddings": q_normalize_embeddings,
-        "pack_sequences": q_pack_sequences,
-        "quantize_embeddings": q_quantize_embeddings,
-        "deterministic_sample": q_deterministic_sample,
-        "top_docs_by_chars": q_top_docs_by_chars,
-        "report_cube": q_report_cube,
-        "quantile_report": q_quantile_report,
-        "as_of_join": q_as_of_join,
-        "range_join_binned": q_range_join_binned,
-        "time_rollup": q_time_rollup,
-        "lang_summary": q_lang_summary,
-        "dedup_exact": q_dedup_exact,
-        "ngram_jaccard_pairs": q_ngram_jaccard_pairs,
-        "minhash_lsh_candidates": q_minhash_lsh_candidates,
-        "winnow_fingerprints": q_winnow_fingerprints,
-        "simhash_buckets": q_simhash_buckets,
-        "token_counts": q_token_counts,
-        "curation_verdict": q_curation_verdict,
-        "curate_corpus": q_curate_corpus,
-        "benchmark_contamination": q_benchmark_contamination,
-        "domain_mix": q_domain_mix,
-}
+# The query registry: one row per query, (query function, bench tier);
+# the query name is the function's name without its ``q_`` prefix.
+# Adding a query means one row here plus one ``oracle_sql()`` entry.
+#
+# Row order matters: the correctness harness samples the FIRST 50 rows,
+# so never-sampled queries lead (newest first), then the round-3/4 band
+# the oracle sweep keeps green, then the already-sampled rest.
+#
+# Tiers, as bench.py times them (each tier in row order):
+#   headline  best-of-2 on every run; their sum is the headline suite secs
+#   default   one timed pass each on a default run, until the wall budget
+#             is spent (the rest are skipped and named)
+#   opt_in    already-evidenced extras, timed only with
+#             SPARK_GRAFT_BENCH_ALL_EXTRAS=1
+#   untimed   checked by the oracle sweep only
+REGISTRY = (
+    # --- round-5 additions (insert new queries HERE) ---
+    (q_host_kcore, "default"),
+    (q_host_hits, "default"),
+    (q_source_token_kl, "default"),
+    (q_tpch_local_supplier_revenue, "default"),
+    (q_event_cooccurrence, "default"),
+    (q_host_pagerank_delta, "default"),
+    (q_interevent_histogram, "default"),
+    (q_heaps_law, "default"),
+    (q_host_mirrors, "default"),
+    (q_host_seed_distance, "default"),
+    (q_crawl_reachability, "default"),
+    (q_event_transitions, "default"),
+    (q_event_stationary, "default"),
+    (q_user_transition_entropy, "default"),
+    (q_state_dwell_stats, "default"),
+    # runs both chunkers (gear-window CDC and fixed 32/24)
+    (q_cdc_chunks, "default"),
+    (q_host_reciprocity, "default"),
+    (q_token_gini, "default"),
+    (q_host_assortativity, "default"),
+    (q_host_communities, "default"),
+    (q_normalize_text_nfkc, "default"),
+    (q_wave_makespan_mix, "default"),
+    (q_community_quarantine, "default"),
+    # sf0.1 cost is the 6 rounds' fixed scheduling, not the corpus
+    (q_bpe_learn, "default"),
+    (q_community_budget, "default"),
+    # times the icetbl lifecycle: 3 appends + compact + expire
+    (q_snapshot_gc_report, "default"),
+    # --- round-3/early-round-4 band: oracle-green, never sampled ---
+    (q_vocab_coverage, "default"),
+    (q_dedup_savings, "default"),
+    (q_split_leakage, "default"),
+    (q_lsh_bucket_histogram, "default"),
+    (q_remove_dup_spans, "default"),
+    (q_ann_recall_eval, "default"),
+    (q_nb_quality, "default"),
+    (q_robots_filter, "default"),
+    (q_crawl_budget, "default"),
+    (q_bigram_logprob, "default"),
+    (q_zipf_slope, "default"),
+    (q_quality_deciles, "default"),
+    (q_dedup_representatives, "default"),
+    (q_lsh_precision_eval, "default"),
+    (q_curation_funnel, "default"),
+    (q_dedup_lines, "default"),
+    (q_encoding_health, "default"),
+    (q_fix_encoding, "default"),
+    (q_hapax_rate, "default"),
+    (q_packing_efficiency, "default"),
+    (q_url_aliases, "default"),
+    (q_dedup_cluster_sizes, "default"),
+    (q_tokenizer_fertility, "default"),
+    (q_data_budget_plan, "default"),
+    (q_quality_sample, "default"),
+    (q_mix_manifest, "default"),
+    (q_oov_rate, "opt_in"),
+    (q_url_filter, "opt_in"),
+    (q_domain_quality, "opt_in"),
+    (q_lang_segments, "untimed"),
+    (q_embedding_near_dupes_lsh, "opt_in"),
+    (q_semantic_dedup, "opt_in"),
+    (q_host_link_graph, "opt_in"),
+    (q_host_pagerank, "opt_in"),
+    (q_crawl_diff, "opt_in"),
+    (q_unigram_logprob, "opt_in"),
+    (q_ngram_span_coverage, "opt_in"),
+    (q_anchor_text_stats, "opt_in"),
+    (q_phrase_search, "opt_in"),
+    (q_and_search, "opt_in"),
+    (q_recrawl_schedule, "opt_in"),
+    (q_tfidf_top_terms, "opt_in"),
+    (q_bpe_pair_counts, "opt_in"),
+    (q_dsir_importance, "opt_in"),
+    (q_group_holdout_split, "opt_in"),
+    (q_temperature_mix, "opt_in"),
+    (q_zorder_key, "opt_in"),
+    (q_shingle_novelty, "opt_in"),
+    (q_chunk_documents, "opt_in"),
+    (q_cross_corpus_dedup, "opt_in"),
+    (q_training_batches, "opt_in"),
+    # --- sampled in rounds 1-4 (green in CORRECTNESS_r0*) ---
+    (q_selection_drift, "opt_in"),
+    (q_filter_attribution, "opt_in"),
+    (q_token_drift, "opt_in"),
+    (q_pii_stats, "opt_in"),
+    (q_shard_manifest, "opt_in"),
+    (q_normalize_text, "opt_in"),
+    (q_bbit_minhash_eval, "opt_in"),
+    (q_weighted_sample, "opt_in"),
+    (q_event_funnel, "opt_in"),
+    (q_retention_cohorts, "opt_in"),
+    (q_host_triangles, "opt_in"),
+    (q_event_anomalies, "opt_in"),
+    (q_bot_suspects, "opt_in"),
+    (q_stratified_sample, "opt_in"),
+    (q_sessionized_funnel, "opt_in"),
+    (q_image_resize, "opt_in"),
+    (q_frame_sample, "opt_in"),
+    (q_robots_rule_stats, "default"),
+    (q_minhash_band_recall, "untimed"),
+    (q_containment_histogram, "opt_in"),
+    (q_quality_by_crawl_round, "opt_in"),
+    (q_wave_makespan, "opt_in"),
+    (q_host_topic_labels, "opt_in"),
+    # simhash_band_recall / minhash_band_recall stay untimed: sample-scale
+    # evals (~20 s cold at sf0.1; one 8-bit simhash band holds 3058/5000
+    # docs on this template-clustered corpus), checked by the oracle only.
+    (q_simhash_band_recall, "untimed"),
+    (q_crawl_priority, "opt_in"),
+    (q_chunk_dedup, "opt_in"),
+    (q_winnow_near_pairs, "opt_in"),
+    (q_host_content_entropy, "opt_in"),
+    (q_dedup_methods_overlap, "opt_in"),
+    (q_quality_confusion, "opt_in"),
+    (q_fetch_frontier, "opt_in"),
+    (q_minhash_accuracy_eval, "default"),
+    (q_simhash_near_pairs, "default"),
+    (q_jaccard_histogram, "default"),
+    (q_host_template_entropy, "default"),
+    (q_host_degree_stats, "default"),
+    (q_bigram_stats, "default"),
+    (q_length_histogram, "default"),
+    (q_retrieval_rerank, "default"),
+    (q_bm25_topk, "default"),
+    (q_compaction_plan, "default"),
+    (q_host_trustrank, "default"),
+    (q_pretraining_export, "default"),
+    (q_containment_pairs, "default"),
+    (q_topic_mix, "default"),
+    (q_shard_plan, "default"),
+    (q_family_split, "default"),
+    (q_curate_corpus_incremental, "default"),
+    (q_chunk_ann_topk, "default"),
+    (q_contamination_by_source, "default"),
+    (q_quality_scores, "headline"),
+    (q_repetition_stats, "untimed"),
+    (q_url_normalize, "untimed"),
+    (q_langid_confusion, "untimed"),
+    (q_fingerprints, "untimed"),
+    (q_ann_cosine_topk, "headline"),
+    (q_ann_lsh_topk, "untimed"),
+    (q_ann_ivf_topk, "untimed"),
+    (q_embedding_near_dupes, "untimed"),
+    (q_vocab_topk, "opt_in"),
+    (q_golden_compare, "untimed"),
+    (q_tpch_shipping_revenue, "headline"),
+    (q_nation_revenue, "headline"),
+    (q_events_daily, "headline"),
+    (q_sessionize, "headline"),
+    (q_session_windows, "untimed"),
+    (q_extract_text_roundtrip, "headline"),
+    (q_extract_handwriting, "opt_in"),
+    (q_extract_pdf_fold, "headline"),
+    (q_extract_route_counts, "headline"),
+    (q_extract_error_rows, "untimed"),
+    (q_structured_receipts, "untimed"),
+    (q_structured_forms, "untimed"),
+    (q_structured_price_tags, "untimed"),
+    (q_analyze_metadata, "untimed"),
+    (q_multi_step, "untimed"),
+    (q_image_metadata, "untimed"),
+    (q_media_metadata, "untimed"),
+    (q_image_features, "opt_in"),
+    (q_template_mining, "untimed"),
+    (q_host_skew_counts, "untimed"),
+    (q_corpus_cardinality, "untimed"),
+    (q_latest_event_per_user, "headline"),
+    (q_resume_anti_join, "untimed"),
+    (q_resume_anti_join_bloom, "opt_in"),
+    (q_extract_image_text, "untimed"),
+    (q_extract_text_plain, "untimed"),
+    (q_politeness_waves, "untimed"),
+    (q_pii_scrub, "untimed"),
+    (q_paragraph_dedup, "untimed"),
+    (q_boilerplate_paragraphs, "opt_in"),
+    (q_line_filter, "untimed"),
+    (q_hash_split, "untimed"),
+    (q_dedup_components, "untimed"),
+    (q_normalize_embeddings, "untimed"),
+    (q_pack_sequences, "untimed"),
+    (q_quantize_embeddings, "untimed"),
+    (q_deterministic_sample, "untimed"),
+    (q_top_docs_by_chars, "untimed"),
+    (q_report_cube, "untimed"),
+    (q_quantile_report, "untimed"),
+    (q_as_of_join, "opt_in"),
+    (q_range_join_binned, "opt_in"),
+    (q_time_rollup, "opt_in"),
+    (q_lang_summary, "untimed"),
+    (q_dedup_exact, "headline"),
+    (q_ngram_jaccard_pairs, "headline"),
+    (q_minhash_lsh_candidates, "headline"),
+    (q_winnow_fingerprints, "untimed"),
+    (q_simhash_buckets, "untimed"),
+    (q_token_counts, "headline"),
+    (q_curation_verdict, "opt_in"),
+    (q_curate_corpus, "opt_in"),
+    (q_benchmark_contamination, "opt_in"),
+    (q_domain_mix, "opt_in"),
+)
 
 
 # ---------------------------------------------------------------------------
@@ -5575,12 +5570,6 @@ def oracle_sql() -> dict[str, str]:
                    ((row_number() OVER (PARTITION BY host ORDER BY url) - 1)
                     // 16)::INT AS wave
             FROM u
-        """,
-        "latest_capture_semi": """
-            SELECT doc_id,
-                   epoch_us(TIMESTAMP '2024-01-01 00:00:00'
-                            + to_seconds(doc_id::BIGINT)) AS ts_us
-            FROM documents
         """,
         "top_docs_by_chars": """
             SELECT doc_id, n_chars FROM documents

@@ -7,8 +7,8 @@ The LAST stdout line is a compact (<1.5 KB) JSON object:
    "scaling_efficiency": ..., "scaling_per_trial": [...],
    "scaling_median": ..., "extras_timed": N, "extras_skipped": N,
    "bench_wall_secs": ...}
-Detail lines (full extras maps, runs arrays, scaling_note prose) print
-earlier — see "Budget discipline" below for the exact line protocol.
+Detail lines (the ``queries_extra`` map, runs arrays, scaling_note prose)
+print earlier — see "Budget discipline" below for the exact line protocol.
 
 Method:
 - The pages corpus (deterministic function of documents.parquet, replicated
@@ -30,7 +30,11 @@ Method:
   ~10 busy cores (memory bandwidth), so 8→32 cannot show >2.3× for ANY
   allocation-heavy workload; on a real cluster each executor adds its own
   memory bandwidth, which is what N→4N executor scaling assumes.
-- Headline queries run once on the local[CPUS] session.
+- Which queries are timed is data, not code: each row of
+  ``__spark_entry__.REGISTRY`` carries a tier. The ``headline`` tier runs
+  best-of-2 on the local[CPUS] session; the ``default`` tier (plus the
+  ``opt_in`` tier under SPARK_GRAFT_BENCH_ALL_EXTRAS=1) runs as extras,
+  each tier in registry order.
 
 Budget discipline (round-3 lesson: rc=124 with no JSON; round-4 lesson:
 rc=0 but the driver keeps only a 2000-char stdout TAIL, so a multi-KB
@@ -41,7 +45,7 @@ JSON lines, in order:
   2. COMPACT core line (<1 KB: same core numbers, no prose/runs arrays) —
      so a driver that kills the process mid-extras still finds one
      complete object inside its tail window;
-  3. DETAIL superset line (core + per-query extras maps + skip names);
+  3. DETAIL superset line (core + the queries_extra map + skip names);
   4. COMPACT final line (<1 KB: core numbers + extras_timed/extras_skipped
      counts) — the LAST line, guaranteed to fit whole inside a 2000-char
      tail, which is what the driver actually parses.
@@ -55,6 +59,7 @@ SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_BENCH_REPL (default 80),
 SPARK_GRAFT_BENCH_TRIALS (default 2), SPARK_GRAFT_BENCH_SMALL (default 2),
 SPARK_GRAFT_BENCH_BUDGET (total wall secs, default 810),
 SPARK_GRAFT_BENCH_SKIP_SCALING=1, SPARK_GRAFT_BENCH_SKIP_QUERIES=1,
+SPARK_GRAFT_BENCH_ALL_EXTRAS=1 (also time the opt_in tier),
 SPARK_GRAFT_BENCH_SCALE_RETRIES (extra big-level-only scaling samples
 bought when the estimate lands under 0.8 and budget remains, default 6 —
 a loaded window starves the 4N level first while N stays stable, so
@@ -76,7 +81,7 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 REPL = int(os.environ.get("SPARK_GRAFT_BENCH_REPL", "80"))
 TRIALS = int(os.environ.get("SPARK_GRAFT_BENCH_TRIALS", "2"))
 SMALL = int(os.environ.get("SPARK_GRAFT_BENCH_SMALL", "2"))
-# Total wall-clock budget: once exceeded, remaining EXTRA* queries are
+# Total wall-clock budget: once exceeded, remaining extra queries are
 # skipped (never the core headline/extract/scaling — those finish first and
 # their JSON line is already flushed by the time extras start). 810 s keeps
 # ~50 s of margin under the slowest KNOWN-good driver wall (r2 ran 859 s to
@@ -103,202 +108,12 @@ PAGES_DIR = (
     f"/tmp/bench_pages_{os.path.basename(SF_DIR)}_x{REPL}_{_corpus_tag()}"
 )
 
-HEADLINE = (
-    "extract_text_roundtrip",
-    "extract_pdf_fold",
-    "extract_route_counts",
-    "latest_event_per_user",
-    "dedup_exact",
-    "ngram_jaccard_pairs",
-    "minhash_lsh_candidates",
-    "token_counts",
-    "quality_scores",
-    "ann_cosine_topk",
-    "tpch_shipping_revenue",
-    "nation_revenue",
-    "events_daily",
-    "sessionize",
-)
+def tier_names(tier: str) -> list[str]:
+    """Names of one bench tier of ``__spark_entry__.REGISTRY``, in row
+    order (the registry comment defines the tiers)."""
+    import __spark_entry__ as entry
 
-# Round-2/3 operators, timed the same way but reported SEPARATELY
-# (queries_r2 / queries_r3) so the headline suite total stays comparable
-# across rounds. Since round 5 these are NOT in the default timed set:
-# every name here has driver-grade (BENCH_r02) or repeated self-measured
-# (BENCH.md) evidence, and the r4 driver run burned its extras budget
-# re-proving them while skipping 82 never-driver-timed names. Set
-# SPARK_GRAFT_BENCH_ALL_EXTRAS=1 to time them too (local validation runs).
-EXTRA = (
-    "embedding_near_dupes_lsh",
-    "curation_verdict",
-    "as_of_join",
-    "range_join_binned",
-    "time_rollup",
-    "vocab_topk",
-    "extract_handwriting",
-    "resume_anti_join_bloom",
-)
-
-EXTRA3 = (
-    "curate_corpus",
-    "image_features",
-    "benchmark_contamination",
-    "domain_mix",
-    "host_link_graph",
-    "host_pagerank",
-    "crawl_diff",
-    "unigram_logprob",
-    "ngram_span_coverage",
-    "semantic_dedup",
-    "anchor_text_stats",
-    "recrawl_schedule",
-    "tfidf_top_terms",
-    "phrase_search",
-    "and_search",
-    "bpe_pair_counts",
-    "dsir_importance",
-    "group_holdout_split",
-    "temperature_mix",
-    "zorder_key",
-    "shingle_novelty",
-    "chunk_documents",
-    "cross_corpus_dedup",
-    "url_filter",
-    "training_batches",
-    "domain_quality",
-    "boilerplate_paragraphs",
-    "oov_rate",
-)
-
-# Round-5 operators — timed FIRST among the extras (zero perf evidence of
-# any kind until this round's runs).
-EXTRA5: tuple[str, ...] = (
-    "event_cooccurrence",
-    "host_pagerank_delta",
-    "source_token_kl",
-    "tpch_local_supplier_revenue",
-    "host_kcore",
-    "host_hits",
-    "interevent_histogram",
-    "heaps_law",
-    "host_communities",
-    "normalize_text_nfkc",
-    "wave_makespan_mix",
-    "community_quarantine",
-    # bpe_learn at sf0.1 is ~5 s warm, nearly all of it the 6 rounds'
-    # fixed scheduling (agg + argmax + checkpoint per round over a
-    # 31-word-type table) — the corpus contributes ONE pass; at real
-    # scale the rounds cost |vocabulary|, not |corpus|.
-    "bpe_learn",
-    "community_budget",
-    # snapshot_gc_report times the icetbl lifecycle itself (3 distributed
-    # appends + compact + expire over a doc_id-only projection).
-    "snapshot_gc_report",
-    # cdc_chunks runs BOTH chunkers (gear-window CDC + fixed 32/24) over
-    # the doc_id%11 slice plus its planted insertion copies.
-    "cdc_chunks",
-    "host_reciprocity",
-    "token_gini",
-    "host_assortativity",
-    "event_transitions",
-    "host_mirrors",
-    "host_seed_distance",
-    "event_stationary",
-    "crawl_reachability",
-    "user_transition_entropy",
-    "state_dwell_stats",
-)
-
-# Round-4 operators the r4 DRIVER run never reached (its budget cut the
-# list after 28 names) — the default timed set, ordered expensive/scale-
-# relevant first so a budget cut on a slow box drops cheap sub-second
-# report queries whose self-measured numbers (BENCH.md) are already
-# boring, not the plans whose cost structure matters.
-# simhash_band_recall / minhash_band_recall stay untimed by design:
-# sample-scale evals (~20 s cold at sf0.1 on this template-clustered
-# corpus — one 8-bit simhash band holds 3058/5000 docs), driver-verified
-# via the sf0.01 oracle instead.
-EXTRA4_NEVER: tuple[str, ...] = (
-    "lsh_precision_eval",
-    "curate_corpus_incremental",
-    "chunk_ann_topk",
-    "family_split",
-    "retrieval_rerank",
-    "bm25_topk",
-    "host_trustrank",
-    "pretraining_export",
-    "dedup_representatives",
-    "nb_quality",
-    "ann_recall_eval",
-    "minhash_accuracy_eval",
-    "simhash_near_pairs",
-    "containment_pairs",
-    "lsh_bucket_histogram",
-    "split_leakage",
-    "remove_dup_spans",
-    "dedup_savings",
-    "contamination_by_source",
-    "bigram_stats",
-    "bigram_logprob",
-    "jaccard_histogram",
-    "dedup_lines",
-    "curation_funnel",
-    "robots_filter",
-    "robots_rule_stats",
-    "crawl_budget",
-    "host_template_entropy",
-    "host_degree_stats",
-    "length_histogram",
-    "compaction_plan",
-    "topic_mix",
-    "shard_plan",
-    "quality_sample",
-    "mix_manifest",
-    "data_budget_plan",
-    "tokenizer_fertility",
-    "dedup_cluster_sizes",
-    "url_aliases",
-    "fix_encoding",
-    "hapax_rate",
-    "packing_efficiency",
-    "encoding_health",
-    "zipf_slope",
-    "quality_deciles",
-    "vocab_coverage",
-)
-
-# Round-4 operators the r4 driver DID time (BENCH_r04 tail carries their
-# numbers) — evidenced, so opt-in only (SPARK_GRAFT_BENCH_ALL_EXTRAS=1),
-# like EXTRA/EXTRA3.
-EXTRA4_TIMED: tuple[str, ...] = (
-    "selection_drift",
-    "filter_attribution",
-    "token_drift",
-    "pii_stats",
-    "shard_manifest",
-    "normalize_text",
-    "bbit_minhash_eval",
-    "weighted_sample",
-    "event_funnel",
-    "retention_cohorts",
-    "host_triangles",
-    "event_anomalies",
-    "bot_suspects",
-    "stratified_sample",
-    "sessionized_funnel",
-    "image_resize",
-    "frame_sample",
-    "fetch_frontier",
-    "quality_confusion",
-    "dedup_methods_overlap",
-    "host_content_entropy",
-    "winnow_near_pairs",
-    "chunk_dedup",
-    "crawl_priority",
-    "host_topic_labels",
-    "wave_makespan",
-    "quality_by_crawl_round",
-    "containment_histogram",
-)
+    return [fn.__name__[2:] for fn, t in entry.REGISTRY if t == tier]
 
 
 def _session(cores: int):
@@ -340,17 +155,7 @@ def _pipeline(spark, cores: int):
     # One task wave (partitions == cores): measured 91k vs 55-64k docs/s at
     # local[32] against 2x/4x over-partitioning — each extra wave re-pays
     # Arrow pipeline spin-up per partition; AQE handles any stragglers.
-    mode = os.environ.get("SPARK_GRAFT_DEDUP", "window")
-    if mode == "none":          # ceiling probe: no dedup at all
-        return extract_stage(pages.coalesce(cores))
-    if mode == "window":
-        return extract_stage(
-            latest_capture(balance_by_url(pages, cores), strategy="window"))
-    # semi dedup: winners computed from a light (url, ts) column-pruned
-    # scan, broadcast back — payload rows never shuffle; coalesce (narrow)
-    # gives the one task wave the repartition used to provide.
-    deduped = latest_capture(pages, broadcast_winners=True)
-    return extract_stage(deduped.coalesce(cores))
+    return extract_stage(latest_capture(balance_by_url(pages, cores)))
 
 
 def timed_extract(spark, cores: int) -> dict:
@@ -583,6 +388,7 @@ def main() -> None:
         import __spark_entry__ as entry
 
         qs = entry.queries()
+        headline = tier_names("headline")
         # Priming pass at sf0.01: identical plan shapes compile every
         # query's whole-stage codegen and give C2 enough invocations to
         # JIT the hot expression paths (~15s total). Cold single-pass
@@ -592,10 +398,10 @@ def main() -> None:
         # best-of-2 fresh plans (rebuilt per pass — reusing one DataFrame
         # would skip stages via shuffle reuse): best-of rides out the
         # ±30-40% co-tenant bursts, same estimator the extract levels use.
-        for name in HEADLINE:
+        for name in headline:
             qs[name](spark, "/root/testdata/sf0.01").write.mode(
                 "overwrite").format("noop").save()
-        for name in HEADLINE:
+        for name in headline:
             passes = []
             for _ in range(2):
                 t0 = time.monotonic()
@@ -722,15 +528,11 @@ def main() -> None:
 
     # -- pass 3: extras under the wall-clock budget -------------------------
     # Single timed pass per query after an sf0.01 prime (best-of-2 made the
-    # r3 driver run time out); queries are per-suite priority-ordered
-    # (round-5 first, then the round-4 names the r4 driver never reached)
-    # and the remainder is skipped — and named — once BUDGET is exceeded.
-    # Already-driver-evidenced suites (EXTRA4_TIMED/EXTRA/EXTRA3) are
-    # opt-in via SPARK_GRAFT_BENCH_ALL_EXTRAS=1.
-    qtimes_r2: dict[str, float] = {}
-    qtimes_r3: dict[str, float] = {}
-    qtimes_r4: dict[str, float] = {}
-    qtimes_r5: dict[str, float] = {}
+    # r3 run time out): the "default" tier in registry order, then
+    # the already-evidenced "opt_in" tier when SPARK_GRAFT_BENCH_ALL_EXTRAS
+    # is set; the remainder is skipped — and named — once BUDGET is
+    # exceeded.
+    qtimes_extra: dict[str, float] = {}
     skipped: list[str] = []
     if not os.environ.get("SPARK_GRAFT_BENCH_SKIP_QUERIES"):
         spark = _session(CPUS)
@@ -747,12 +549,11 @@ def main() -> None:
         # compiles little of the shared text/shuffle/Arrow infrastructure.
         qs["retrieval_rerank"](spark, SF_DIR).write.mode("overwrite").format(
             "noop").save()
-        suites = [(EXTRA5, qtimes_r5), (EXTRA4_NEVER, qtimes_r4)]
+        tiers = ["default"]
         if os.environ.get("SPARK_GRAFT_BENCH_ALL_EXTRAS"):
-            suites += [(EXTRA4_TIMED, qtimes_r4), (EXTRA, qtimes_r2),
-                       (EXTRA3, qtimes_r3)]
-        for names, sink in suites:
-            for name in names:
+            tiers.append("opt_in")
+        for tier in tiers:
+            for name in tier_names(tier):
                 if time.monotonic() - t_start > BUDGET:
                     skipped.append(name)
                     continue
@@ -761,19 +562,14 @@ def main() -> None:
                 t0 = time.monotonic()
                 qs[name](spark, SF_DIR).write.mode("overwrite").format(
                     "noop").save()
-                sink[name] = round(time.monotonic() - t0, 3)
+                qtimes_extra[name] = round(time.monotonic() - t0, 3)
         spark.stop()
 
-    out["queries_r2"] = qtimes_r2
-    out["queries_r3"] = qtimes_r3
-    out["queries_r4"] = qtimes_r4
-    out["queries_r5"] = qtimes_r5
+    out["queries_extra"] = qtimes_extra
     if skipped:
         out["extras_skipped_on_budget"] = skipped
     out["bench_wall_secs"] = round(time.monotonic() - t_start, 1)
-    n_timed = sum(len(s) for s in (qtimes_r2, qtimes_r3, qtimes_r4,
-                                   qtimes_r5))
-    # DETAIL superset line (per-query extras maps + skip names) for humans
+    # DETAIL superset line (the queries_extra map + skip names) for humans
     # and tooling...
     print(json.dumps(out), flush=True)
     # ...then the COMPACT final line LAST: the driver keeps only a
@@ -781,7 +577,8 @@ def main() -> None:
     # complete inside it (BENCH_r03 rc=124 / BENCH_r04 parsed:null were
     # both this contract being violated).
     print(json.dumps(
-        _compact(out, extras_timed=n_timed, extras_skipped=len(skipped))
+        _compact(out, extras_timed=len(qtimes_extra),
+                 extras_skipped=len(skipped))
     ), flush=True)
 
 

@@ -384,17 +384,3 @@ def capture_rows(doc_id: int, text: str, lang: str, source: str):
             None,
             lang,
         )
-
-
-def synthesize_pages_pandas(docs_df):
-    """documents pandas.DataFrame → pages pandas.DataFrame (pure, seedless)."""
-    import pandas as pd
-
-    rows = []
-    for doc_id, text, lang, source in zip(
-        docs_df["doc_id"], docs_df["text"], docs_df["lang"], docs_df["source"]
-    ):
-        rows.extend(capture_rows(int(doc_id), text, lang, source))
-    return pd.DataFrame(
-        rows, columns=["url", "warc_ts", "html", "text", "lang"]
-    )

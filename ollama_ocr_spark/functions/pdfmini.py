@@ -28,6 +28,13 @@ class PdfError(ValueError):
     """Deterministic PDF parse failure (message is part of golden output)."""
 
 
+# Inflated FlateDecode bytes allowed per document: a decompression bomb
+# (a few KB of deflate that inflates to GBs) becomes an error row instead
+# of a worker OOM. Real page content streams are orders of magnitude
+# smaller.
+FLATE_CAP = 32 << 20
+
+
 # --------------------------------------------------------------------------
 # Writer (fixtures only — the engine never writes PDFs at runtime)
 # --------------------------------------------------------------------------
@@ -148,6 +155,7 @@ def extract_pdf_pages(data: bytes) -> list[str]:
         raise PdfError("malformed pdf: no pages")
 
     pages: list[str] = []
+    inflate_budget = FLATE_CAP
     for num in kid_nums:
         body = objects.get(num)
         if body is None:
@@ -163,10 +171,16 @@ def extract_pdf_pages(data: bytes) -> list[str]:
             raise PdfError("malformed pdf: missing stream data")
         stream = sm.group(1)
         if b"/FlateDecode" in content_obj:
+            inflater = zlib.decompressobj()
             try:
-                stream = zlib.decompress(stream)
+                stream = inflater.decompress(stream, inflate_budget + 1)
             except zlib.error as exc:
                 raise PdfError("malformed pdf: bad flate stream") from exc
+            if len(stream) > inflate_budget:
+                raise PdfError("pdf flate output exceeds cap")
+            if not inflater.eof:  # truncated, as zlib.decompress rejects
+                raise PdfError("malformed pdf: bad flate stream")
+            inflate_budget -= len(stream)
         parts = [_unescape_pdf_string(m.group(1)) for m in _TJ_RE.finditer(stream)]
         pages.append("".join(parts))
     return pages

@@ -246,43 +246,14 @@ def golden_text_expr(doc_id_col: str = "doc_id", text_col: str = "text"):
 
 
 def latest_capture(pages: DataFrame, key: str = "url",
-                   ts: str = "warc_ts", strategy: str = "window",
-                   broadcast_winners: bool = False) -> DataFrame:
+                   ts: str = "warc_ts") -> DataFrame:
     """Keep the newest capture per url (N3).
 
-    ``strategy="window"`` (default): ``row_number`` over (key → ts desc).
-    One payload shuffle + per-partition sort; combined with
-    :func:`balance_by_url` the payload crosses the wire exactly once, and
-    it keeps exactly one row per key even on (key, ts) ties. Measured
-    fastest end-to-end at bench scale (67.5k vs 62.4k docs/s pinned-8) and
-    the honest default at cluster scale, where the winner set of a 100 TB
-    corpus cannot broadcast and "semi" would degrade to the same
-    shuffle+sort plus an extra aggregate.
-
-    ``strategy="semi"``: winners = ``groupBy(key).max(ts)`` over the two
-    LIGHT columns only (HashAggregate with map-side partial combine — the
-    parquet scan for this branch prunes to key+ts), then a ``left_semi``
-    join back to the full rows. With ``broadcast_winners=True`` (or when
-    AQE sizes the winner set under its threshold) this becomes a
-    BroadcastHashJoin(semi): payload rows are NEVER shuffled or sorted.
-    Use when the unique-key count is known-bounded (resume over a finite
-    crawl list, bounded-url recrawl) — the driver round-trip + relation
-    build costs more than the shuffle at small scale, but at scale the
-    payload-shuffle elimination dominates whenever winners fit memory.
-    Keeps every row tied for max ts, so keys must have distinct ts
-    (corpus timestamps are: stale captures are 1h older,
-    corpus.capture_rows).
-
-    ``broadcast_winners=True`` force-hints the broadcast when the caller
-    knows the unique-key count is small relative to executor memory (AQE's
-    adaptive threshold is conservative and won't broadcast a winner set it
-    sizes above ~10 MB even when it trivially fits).
+    ``row_number`` over (key → ts desc): one payload shuffle +
+    per-partition sort. Combined with :func:`balance_by_url` the payload
+    crosses the wire exactly once, and it keeps exactly one row per key
+    even on (key, ts) ties.
     """
-    if strategy == "semi":
-        winners = pages.groupBy(key).agg(F.max(ts).alias(ts))
-        if broadcast_winners:
-            winners = F.broadcast(winners)
-        return pages.join(winners, [key, ts], "left_semi")
     w = Window.partitionBy(key).orderBy(F.col(ts).desc())
     return (
         pages.withColumn("__rn", F.row_number().over(w))

@@ -12,8 +12,3 @@ TABLES = (
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for name in TABLES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -576,6 +576,26 @@ def _last_events_per_user(df: DataFrame) -> DataFrame:
     )
 
 
+def _prior_state(spark: SparkSession, state_tbl: IceTable,
+                 batch_id: int) -> DataFrame | None:
+    """The carried-state rows a micro-batch may see: those committed
+    before ``batch_id``. Read with ``mergeSchema`` because a log that
+    was written before batch_id stamping existed and appended to after
+    it mixes files with and without the column; without merging, the
+    inferred schema follows one file and either drops the column (the
+    replay window reopens) or reads the legacy rows' batch_id as NULL
+    (the filter drops them). Unstamped rows are prior state by
+    construction, hence the ``coalesce(batch_id, -1)``."""
+    snap = state_tbl.snapshot()
+    if snap is None or not snap.files:
+        return None
+    log = spark.read.option("mergeSchema", "true").parquet(*snap.files)
+    if "batch_id" not in log.columns:  # a purely pre-stamping log
+        return log
+    return log.filter(
+        F.coalesce(F.col("batch_id"), F.lit(-1)) < F.lit(batch_id))
+
+
 def _transitions_commit(spark: SparkSession, batch_df: DataFrame,
                         batch_id: int, matrix_tbl: IceTable,
                         state_tbl: IceTable) -> None:
@@ -592,14 +612,8 @@ def _transitions_commit(spark: SparkSession, batch_df: DataFrame,
     from ..operators.reports import _transition_pairs
 
     base = batch_df.select("user_id", "event_id", "event_type", "ts_us")
-    state_log = state_tbl.read(spark)
-    if state_log is not None:
-        # a state log written before batch_id stamping existed has no
-        # batch_id column — all of it is prior state by construction
-        prior = (
-            state_log.filter(F.col("batch_id") < F.lit(batch_id))
-            if "batch_id" in state_log.columns else state_log
-        )
+    prior = _prior_state(spark, state_tbl, batch_id)
+    if prior is not None:
         carried = _last_events_per_user(prior).join(
             base.select("user_id").distinct(), "user_id", "left_semi"
         )
@@ -723,13 +737,8 @@ def _interevent_commit(spark: SparkSession, batch_df: DataFrame,
     from ..operators.reports import _gap_buckets
 
     base = batch_df.select("user_id", "event_id", "event_type", "ts_us")
-    state_log = state_tbl.read(spark)
-    if state_log is not None:
-        # pre-stamping state logs have no batch_id column — all prior
-        prior = (
-            state_log.filter(F.col("batch_id") < F.lit(batch_id))
-            if "batch_id" in state_log.columns else state_log
-        )
+    prior = _prior_state(spark, state_tbl, batch_id)
+    if prior is not None:
         carried = _last_events_per_user_type(prior).join(
             base.select("user_id", "event_type").distinct(),
             ["user_id", "event_type"], "left_semi",

@@ -141,21 +141,17 @@ def test_monotone_load_decay_order_bias_symmetry():
 
 
 def test_bench_name_lists_resolve_in_queries():
-    """Every name bench.py would time must exist in queries() — a query
-    rename otherwise KeyErrors mid-bench AFTER the core line, silently
-    truncating the extras evidence."""
+    """bench.py derives every timed name from __spark_entry__.REGISTRY, so
+    the registry itself must be well-formed: one row per name, a known
+    tier per row, the extras warm-up query present, and a non-empty
+    headline suite."""
     import __spark_entry__ as entry
-    from bench import (EXTRA, EXTRA3, EXTRA4_NEVER, EXTRA4_TIMED, EXTRA5,
-                       HEADLINE)
+    from bench import tier_names
 
-    qs = set(entry._QUERIES)
-    for names in (HEADLINE, EXTRA, EXTRA3, EXTRA4_NEVER, EXTRA4_TIMED,
-                  EXTRA5):
-        missing = [n for n in names if n not in qs]
-        assert not missing, missing
-    # the extras-phase warmup query is pinned by name too
-    assert "retrieval_rerank" in qs
-    # no name is timed twice across suites
-    all_names = list(EXTRA) + list(EXTRA3) + list(EXTRA4_NEVER) \
-        + list(EXTRA4_TIMED) + list(EXTRA5)
-    assert len(all_names) == len(set(all_names))
+    names = [fn.__name__[2:] for fn, _ in entry.REGISTRY]
+    assert len(names) == len(set(names))
+    assert {t for _, t in entry.REGISTRY} <= {
+        "headline", "default", "opt_in", "untimed"}
+    # the extras-phase warm-up query is pinned by name
+    assert "retrieval_rerank" in names
+    assert tier_names("headline")

@@ -191,6 +191,24 @@ def test_pdf_errors_are_deterministic():
         extract_pdf_pages(b"%PDF-1.4 garbage")
 
 
+def test_pdf_flate_bomb_is_an_error_row(monkeypatch):
+    """A content stream that inflates past FLATE_CAP stops at the cap and
+    becomes a fixed-message error row instead of a worker OOM."""
+    from ollama_ocr_spark.functions import pdfmini
+
+    bomb = write_pdf(["A" * pdfmini.FLATE_CAP])
+    assert len(bomb) < pdfmini.FLATE_CAP // 100  # small on the wire
+    r = extract_document("https://h/bomb.pdf", bomb)
+    assert (r.engine, r.doc_type, r.chars) == ("error", "error", 0)
+    assert r.error == "pdf flate output exceeds cap"
+
+    # the cap spans the whole document, not each page's stream
+    monkeypatch.setattr(pdfmini, "FLATE_CAP", 200)
+    assert extract_pdf_pages(write_pdf(["x" * 60])) == ["x" * 60]
+    with pytest.raises(PdfError, match="^pdf flate output exceeds cap$"):
+        extract_pdf_pages(write_pdf(["x" * 60, "y" * 60, "z" * 60]))
+
+
 # -------------------------------------------------------------- router ----
 
 def test_sniff():

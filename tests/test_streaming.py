@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from ollama_ocr_spark.operators.extract import synthesize_stage
 from ollama_ocr_spark.sources.icetbl import IceTable
 from ollama_ocr_spark.streaming.incremental import (
@@ -603,3 +605,48 @@ def test_interevent_commit_replay_after_state_append(spark, tmp_path):
     assert got[("click", 11)] == 1     # the cross-batch 1024s gap, once
     # the polluted-replay artifact would be a zero-second gap (bucket 1)
     assert ("click", 1) not in got
+
+
+@pytest.mark.parametrize("twin", ["transitions", "interevent"])
+def test_commit_replay_over_mixed_state_log(spark, tmp_path, twin):
+    """A state log written before batch_id stamping existed and appended
+    to after it mixes files with and without the column. Replaying a
+    batch over such a log must write exactly the delta rows of a run
+    that was stamped from the start: legacy rows stay prior state, and
+    the replay still cannot see its own state rows."""
+    from ollama_ocr_spark.streaming import incremental as inc
+
+    commit, last_events = {
+        "transitions": (inc._transitions_commit, inc._last_events_per_user),
+        "interevent": (inc._interevent_commit,
+                       inc._last_events_per_user_type),
+    }[twin]
+    us = 1_000_000
+    cols = ["user_id", "event_id", "event_type", "ts_us"]
+    b0 = spark.createDataFrame(
+        [(1, 1, "a", 0), (1, 2, "b", 3 * us), (2, 3, "a", 5 * us),
+         (4, 9, "a", 1 * us)], cols)
+    b1 = spark.createDataFrame(
+        [(1, 4, "b", 1027 * us), (2, 5, "a", 40 * us), (3, 6, "c", 7 * us)],
+        cols)
+    b2 = spark.createDataFrame(
+        [(1, 7, "a", 2000 * us), (3, 8, "c", 9 * us), (4, 10, "a", 60 * us)],
+        cols)
+
+    def run(root: str, legacy: bool) -> list[tuple]:
+        out = IceTable(str(tmp_path / root / "out"))
+        state = IceTable(str(tmp_path / root / "state"))
+        if legacy:  # batch 0 was committed before stamping existed
+            state.append(last_events(b0))
+        else:
+            commit(spark, b0, 0, out, state)
+        commit(spark, b1, 1, out, state)
+        commit(spark, b2, 2, out, state)
+        commit(spark, b2, 2, out, state)  # replay after the state append
+        rows = out.read(spark).filter("batch_id >= 1")
+        return sorted(tuple(r) for r in rows.select(sorted(rows.columns))
+                      .collect())
+
+    clean = run("clean", legacy=False)
+    assert run("mixed", legacy=True) == clean
+    assert {r[0] for r in clean} == {1, 2}  # both batches wrote deltas

@@ -1,18 +1,20 @@
 """Local stand-in for the driver's correctness gate: run each
 ``__spark_entry__.queries()`` entry on Spark AND its ``oracle_sql()`` twin on
 DuckDB at sf0.01, compare row count + column names + order-insensitive value
-hash. Usage: python tools/check_oracle.py [names...]"""
+hash. Usage: python tools/check_oracle.py [names...]
+
+Names not in ``queries()`` are rejected (exit 2) before Spark starts, so a
+typo or a retired name cannot turn into an empty, passing sweep."""
 
 from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-
-import os
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
 
@@ -61,7 +63,12 @@ def main() -> int:
     from ollama_ocr_spark.session import get_spark
     from ollama_ocr_spark.sources.testdata import TABLES
 
+    qs = entry.queries()
     only = set(sys.argv[1:])
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print(f"unknown query names: {' '.join(unknown)}", file=sys.stderr)
+        return 2
     spark = get_spark(app="check-oracle", master="local[8]",
                       shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
@@ -71,7 +78,6 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
         )
 
-    qs = entry.queries()
     oracles = entry.oracle_sql()
     failures = []
     for name, fn in qs.items():
