@@ -43,8 +43,9 @@ def _ensure_shipped(spark: SparkSession) -> None:
         _SHIPPED.add(key)
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+def _docs(spark: SparkSession, sf_dir: str, keep=None) -> DataFrame:
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return docs if keep is None else docs.filter(keep)
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -59,14 +60,31 @@ def _tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def _extracted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full engine path: synthesize pages → latest-capture dedup → extract,
-    with the recovered doc_id column for oracle joins."""
+def _extracted(spark: SparkSession, sf_dir: str, keep=None) -> DataFrame:
+    """Full engine path: synthesize pages → url-balanced latest-capture
+    dedup → extract, with the recovered doc_id column for oracle joins.
+
+    ``keep`` is an optional predicate on ``documents.doc_id``, applied to
+    the scan before synthesis. Every capture url embeds its own doc_id
+    (``corpus.url_for``), so this keeps exactly the rows a filter on the
+    url-derived ``doc_id`` after the kernel would keep, without
+    synthesizing, shuffling or parsing the rest. ``balance_by_url`` is the
+    ``run_extract`` composition: the dedup window reuses its exchange, and
+    its fixed partition count spreads the kernel over every core (a
+    one-file parquet scans as one partition, and AQE would coalesce a
+    bare window exchange back to one)."""
     from ollama_ocr_spark.operators.extract import extract_stage, synthesize_stage
-    from ollama_ocr_spark.operators.maintenance import doc_id_expr, latest_capture
+    from ollama_ocr_spark.operators.maintenance import (
+        balance_by_url,
+        doc_id_expr,
+        latest_capture,
+    )
 
     _ensure_shipped(spark)
-    pages = synthesize_stage(_docs(spark, sf_dir))
+    pages = balance_by_url(
+        synthesize_stage(_docs(spark, sf_dir, keep)),
+        spark.sparkContext.defaultParallelism,
+    )
     return extract_stage(latest_capture(pages)).withColumn(
         "doc_id", doc_id_expr()
     )
@@ -93,8 +111,7 @@ def entry(spark: SparkSession) -> DataFrame:
 def q_extract_text_roundtrip(spark, sf_dir):
     """North rule: byte-identical extracted text per document (HTML paths)."""
     return (
-        _extracted(spark, sf_dir)
-        .filter(F.col("doc_id") % 10 <= 6)
+        _extracted(spark, sf_dir, F.col("doc_id") % 10 <= 6)
         .select("doc_id", "text", "chars")
     )
 
@@ -102,8 +119,7 @@ def q_extract_text_roundtrip(spark, sf_dir):
 def q_extract_pdf_fold(spark, sf_dir):
     """PDF page explode/fold with byte-exact '--- Page N ---' separators."""
     return (
-        _extracted(spark, sf_dir)
-        .filter(F.col("doc_id") % 10 == 7)
+        _extracted(spark, sf_dir, F.col("doc_id") % 10 == 7)
         .select("doc_id", "text", "chars", "pages")
     )
 
@@ -114,8 +130,7 @@ def q_extract_handwriting(spark, sf_dir):
     reproduce the source layout byte-for-byte — newlines and indentation
     preserved, never whitespace-collapsed."""
     return (
-        _extracted(spark, sf_dir)
-        .filter((F.col("doc_id") % 10).isin(4, 6))
+        _extracted(spark, sf_dir, (F.col("doc_id") % 10).isin(4, 6))
         .select("doc_id", "text", "chars", "engine")
     )
 
@@ -133,18 +148,21 @@ def q_extract_error_rows(spark, sf_dir):
     """Error-row contract: (engine='error', 0 chars, 0 pages) for junk/null
     payloads + the image rows (comment-text extraction, never errors)."""
     return (
-        _extracted(spark, sf_dir)
-        .filter(F.col("doc_id") % 10 >= 8)
+        _extracted(spark, sf_dir, F.col("doc_id") % 10 >= 8)
         .select("doc_id", "engine", "chars", "pages", "doc_type", "error")
     )
 
 
-def _latest_pages(spark, sf_dir):
+def _latest_pages(spark, sf_dir, keep=None):
+    """Synthesized pages after latest-capture dedup (no extraction).
+
+    ``keep`` filters ``documents`` on doc_id before synthesis, as in
+    :func:`_extracted`. The partitioning is left to the consumer."""
     from ollama_ocr_spark.operators.extract import synthesize_stage
     from ollama_ocr_spark.operators.maintenance import latest_capture
 
     _ensure_shipped(spark)
-    return latest_capture(synthesize_stage(_docs(spark, sf_dir)))
+    return latest_capture(synthesize_stage(_docs(spark, sf_dir, keep)))
 
 
 def q_structured_receipts(spark, sf_dir):
@@ -313,10 +331,9 @@ def q_template_mining(spark, sf_dir):
     (k <= 6). The oracle reconstructs each page's block inventory (chrome +
     content) in SQL from the corpus mapping, mirrors the per-host url-order
     sample cap, and recomputes support."""
-    from ollama_ocr_spark.operators.maintenance import doc_id_expr
     from ollama_ocr_spark.operators.templates import mine_templates
 
-    pages = _latest_pages(spark, sf_dir).filter(doc_id_expr() % 10 <= 6)
+    pages = _latest_pages(spark, sf_dir, F.col("doc_id") % 10 <= 6)
     out = mine_templates(pages, min_support=0.5)
     return out.select(
         "host", "block", F.round("support", 4).alias("support"), "n_docs"
@@ -595,8 +612,7 @@ def q_extract_image_text(spark, sf_dir):
     chunks is parsed back byte-identically — the in-sandbox OCR analog
     (production swaps the comment parser for a real OCR kernel)."""
     return (
-        _extracted(spark, sf_dir)
-        .filter(F.col("doc_id") % 10 == 8)
+        _extracted(spark, sf_dir, F.col("doc_id") % 10 == 8)
         .select("doc_id", "text", "chars", "engine", "doc_type")
     )
 
@@ -606,8 +622,7 @@ def q_extract_text_plain(spark, sf_dir):
     urls (web reality) are content-sniffed, routed Text/handwriting, and
     extract as the raw-text identity."""
     return (
-        _extracted(spark, sf_dir)
-        .filter(F.col("doc_id") % 20 == 14)
+        _extracted(spark, sf_dir, F.col("doc_id") % 20 == 14)
         .select("doc_id", "text", "chars", "engine", "doc_type")
     )
 
@@ -1137,8 +1152,7 @@ def q_golden_compare(spark, sf_dir):
     from ollama_ocr_spark.operators.maintenance import golden_compare
 
     results = (
-        _extracted(spark, sf_dir)
-        .filter(F.col("doc_id") % 10 <= 6)
+        _extracted(spark, sf_dir, F.col("doc_id") % 10 <= 6)
         .select("doc_id", "text")
     )
     from ollama_ocr_spark.operators.maintenance import golden_text_expr

@@ -21,6 +21,57 @@ def test_extract_pipeline_plan_invariants(spark, documents_smoke):
     assert "WindowGroupLimit" in report.raw
 
 
+def _noop_final_plan(df) -> str:
+    """Run ``df`` with a noop write and return the AQE final plan of that
+    execution as Spark's formatted explain text (node tree, then one
+    numbered detail block per node)."""
+    spark = df.sparkSession
+    df.write.format("noop").mode("overwrite").save()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    desc = store.executionsList().last().physicalPlanDescription()
+    assert "isFinalPlan=true" in desc, desc[:2000]
+    return desc
+
+
+def test_extract_query_slices_documents_before_synthesis(spark):
+    """An extract query's doc_id slice filters the documents scan, below
+    both Python stages (synthesis and the kernel), and the kernel reads a
+    url-balanced input: one exchange under it, a fixed-count url hash that
+    AQE may not coalesce, so the kernel runs on every core."""
+    import re
+
+    import __spark_entry__ as entry
+    from conftest import SF_SMOKE
+
+    df = entry.queries()["extract_pdf_fold"](spark, SF_SMOKE)
+
+    lines = df._jdf.queryExecution().optimizedPlan().toString().splitlines()
+    arrows = [i for i, s in enumerate(lines) if "MapInArrow" in s]
+    slices = [i for i, s in enumerate(lines)
+              if "Filter" in s and "% 10) = 7" in s]
+    assert len(arrows) == 2 and len(slices) == 1, "\n".join(lines)
+    assert slices[0] > max(arrows), "\n".join(lines)
+    assert "Relation" in lines[slices[0] + 1], "\n".join(lines)
+
+    desc = _noop_final_plan(df)
+    tree, details = desc.split("\n\n\n", 1)
+    final = tree.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    detail = dict(re.findall(r"^\((\d+)\) (\w+.*?)(?=^\(\d+\) |\Z)",
+                             details, re.S | re.M))
+    arrow_ids = re.findall(r"MapInArrow \((\d+)\)", final)
+    kernel = [i for i in arrow_ids if "_extract_batches" in detail[i]]
+    assert len(kernel) == 1, final
+    below = final.split(f"MapInArrow ({kernel[0]})", 1)[1]
+    exchanges = re.findall(r"\bExchange \((\d+)\)", below)
+    assert len(exchanges) == 1, final
+    n = spark.sparkContext.defaultParallelism
+    assert re.search(
+        rf"Arguments: hashpartitioning\(url#\d+, {n}\), REPARTITION_BY_NUM",
+        detail[exchanges[0]],
+    ), detail[exchanges[0]]
+
+
 def test_filter_pushdown_reaches_parquet_scan(spark):
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     q = docs.filter(F.col("lang") == "en").select("doc_id", "n_chars")

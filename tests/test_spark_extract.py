@@ -84,3 +84,75 @@ def test_host_expr(spark, documents_smoke):
     pages = synthesize_stage(documents_smoke.limit(20))
     hosts = pages.select(host_expr().alias("h")).distinct().collect()
     assert all(r["h"].endswith(".example.com") for r in hosts)
+
+
+def test_url_doc_id_roundtrip(spark):
+    """Every capture url embeds its document's own doc_id, and
+    ``doc_id_expr`` reads it back: ids over every residue mod 100 (all
+    archetypes and hosts), nine-digit ids, every source name."""
+    from ollama_ocr_spark.corpus import url_for
+
+    ids = list(range(200)) + [
+        m * 10_000_000 + i for m in (10, 57, 99) for i in range(0, 5000, 37)
+    ]
+    sources = [f"src{i}" for i in range(20)] + ["web"]
+    rows = [(url_for(d, s), d) for d in ids for s in sources[d % 3::3]]
+    df = spark.createDataFrame(rows, "url string, doc_id bigint")
+    bad = df.filter(~doc_id_expr().eqNullSafe(F.col("doc_id")))
+    assert bad.limit(5).collect() == []
+
+
+def test_doc_id_slice_before_synthesis_is_exact(spark, monkeypatch):
+    """Each extract query slices ``documents`` on doc_id before synthesis.
+    That must keep exactly the rows (every column, every capture's dedup
+    winner) that the same predicate keeps on the url-derived doc_id after
+    the full path."""
+    import __spark_entry__ as entry
+    from conftest import SF_SMOKE as sf
+
+    real = {"_extracted": entry._extracted,
+            "_latest_pages": entry._latest_pages}
+    seen = []
+
+    def spy(name):
+        def wrapped(spark, sf_dir, keep=None):
+            seen.append((name, keep))
+            return real[name](spark, sf_dir, keep)
+        return wrapped
+
+    for name in real:
+        monkeypatch.setattr(entry, name, spy(name))
+    consumers = ("extract_text_roundtrip", "extract_pdf_fold",
+                 "extract_handwriting", "extract_error_rows",
+                 "extract_image_text", "extract_text_plain",
+                 "golden_compare", "template_mining")
+    for q in consumers:
+        entry.queries()[q](spark, sf)
+    monkeypatch.undo()
+    assert len(seen) == len(consumers)
+    assert all(keep is not None for _, keep in seen)
+
+    def rows(df):
+        return sorted(df.collect(), key=lambda r: r["url"])
+
+    full = {
+        "_extracted": real["_extracted"](spark, sf).drop("parse_us"),
+        "_latest_pages": real["_latest_pages"](spark, sf)
+        .withColumn("doc_id", doc_id_expr()),
+    }
+    for df in full.values():
+        df.persist()
+    try:
+        for name, keep in seen:
+            sliced = real[name](spark, sf, keep)
+            expect = full[name].filter(keep)
+            if name == "_extracted":
+                sliced = sliced.drop("parse_us")
+            else:
+                expect = expect.drop("doc_id")
+            got = rows(sliced)
+            assert got, (name, str(keep))
+            assert got == rows(expect), (name, str(keep))
+    finally:
+        for df in full.values():
+            df.unpersist()
