@@ -16,4 +16,43 @@ Everything here is built from public knowledge: the PySpark API and the
 observable behavior of the reference repo.
 """
 
+import os
+import zipimport
+
 __version__ = "0.1.0"
+
+
+def _skip_unchanged_zip_rereads() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive only when
+    it changed.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` at the start of
+    every task, and on CPython 3.11 each zipimporter then re-reads its whole
+    archive directory (Spark's core jar and ``pyspark.zip``, ~0.15-0.25 CPU-s
+    per task). This wrapper keys each importer's last read on the archive's
+    ``(st_mtime_ns, st_size, st_ino)`` and calls the original only when the
+    key differs or ``os.stat`` fails, so a rewritten or re-shipped zip is
+    still re-read. Every Python worker imports this package when it unpickles
+    an engine kernel, which installs the wrapper there. Idempotent.
+    """
+    original = zipimport.zipimporter.invalidate_caches
+    if getattr(original, "stat_checked", False):
+        return
+
+    def invalidate_caches(self):
+        # stat before the read: a rewrite during the read shows up as a
+        # changed key on the next call
+        try:
+            st = os.stat(self.archive)
+            key = (st.st_mtime_ns, st.st_size, st.st_ino)
+        except OSError:
+            key = None
+        if key is None or key != getattr(self, "_archive_key", None):
+            original(self)
+            self._archive_key = key
+
+    invalidate_caches.stat_checked = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+_skip_unchanged_zip_rereads()

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import functools
 import os
 import tempfile
 import zipfile
@@ -25,15 +26,20 @@ def build_dist_zip(out_path: str) -> str:
     return out_path
 
 
+@functools.cache
+def _dist_zip() -> str:
+    """This process's engine zip, built once. A zip already at the path is
+    overwritten: an earlier process with the same pid left it, and it can
+    hold older engine code."""
+    return build_dist_zip(os.path.join(tempfile.gettempdir(),
+                                       f"ollama_ocr_spark-{os.getpid()}.zip"))
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Ship this package to executors (the local-mode analog of
     ``spark-submit --py-files engine.zip``) so Python workers can unpickle
     the mapInArrow kernels regardless of the driver's cwd."""
-    zip_path = os.path.join(tempfile.gettempdir(),
-                            f"ollama_ocr_spark-{os.getpid()}.zip")
-    if not os.path.exists(zip_path):
-        build_dist_zip(zip_path)
-    spark.sparkContext.addPyFile(zip_path)
+    spark.sparkContext.addPyFile(_dist_zip())
 
 
 def get_spark(app: str = "ollama_ocr_spark", master: str | None = None,
