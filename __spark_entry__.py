@@ -60,32 +60,29 @@ def _tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def _extracted(spark: SparkSession, sf_dir: str, keep=None) -> DataFrame:
-    """Full engine path: synthesize pages → url-balanced latest-capture
-    dedup → extract, with the recovered doc_id column for oracle joins.
+def _latest_pages(spark: SparkSession, sf_dir: str, keep=None) -> DataFrame:
+    """Synthesized pages after the engine's dedup
+    (``maintenance.latest_pages``), no extraction.
 
     ``keep`` is an optional predicate on ``documents.doc_id``, applied to
     the scan before synthesis. Every capture url embeds its own doc_id
-    (``corpus.url_for``), so this keeps exactly the rows a filter on the
-    url-derived ``doc_id`` after the kernel would keep, without
-    synthesizing, shuffling or parsing the rest. ``balance_by_url`` is the
-    ``run_extract`` composition: the dedup window reuses its exchange, and
-    its fixed partition count spreads the kernel over every core (a
-    one-file parquet scans as one partition, and AQE would coalesce a
-    bare window exchange back to one)."""
-    from ollama_ocr_spark.operators.extract import extract_stage, synthesize_stage
-    from ollama_ocr_spark.operators.maintenance import (
-        balance_by_url,
-        doc_id_expr,
-        latest_capture,
-    )
+    (``corpus.url_for``), so this keeps exactly the rows the same filter
+    on the url-derived ``doc_id`` would keep downstream, without
+    synthesizing, shuffling or parsing the rest."""
+    from ollama_ocr_spark.operators.extract import synthesize_stage
+    from ollama_ocr_spark.operators.maintenance import latest_pages
 
     _ensure_shipped(spark)
-    pages = balance_by_url(
-        synthesize_stage(_docs(spark, sf_dir, keep)),
-        spark.sparkContext.defaultParallelism,
-    )
-    return extract_stage(latest_capture(pages)).withColumn(
+    return latest_pages(synthesize_stage(_docs(spark, sf_dir, keep)))
+
+
+def _extracted(spark: SparkSession, sf_dir: str, keep=None) -> DataFrame:
+    """Full engine path: :func:`_latest_pages` → extract, with the
+    recovered doc_id column for oracle joins."""
+    from ollama_ocr_spark.operators.extract import extract_stage
+    from ollama_ocr_spark.operators.maintenance import doc_id_expr
+
+    return extract_stage(_latest_pages(spark, sf_dir, keep)).withColumn(
         "doc_id", doc_id_expr()
     )
 
@@ -153,18 +150,6 @@ def q_extract_error_rows(spark, sf_dir):
     )
 
 
-def _latest_pages(spark, sf_dir, keep=None):
-    """Synthesized pages after latest-capture dedup (no extraction).
-
-    ``keep`` filters ``documents`` on doc_id before synthesis, as in
-    :func:`_extracted`. The partitioning is left to the consumer."""
-    from ollama_ocr_spark.operators.extract import synthesize_stage
-    from ollama_ocr_spark.operators.maintenance import latest_capture
-
-    _ensure_shipped(spark)
-    return latest_capture(synthesize_stage(_docs(spark, sf_dir, keep)))
-
-
 def q_structured_receipts(spark, sf_dir):
     """T8 structured mode: schema.org JSON-LD receipt field extraction."""
     from ollama_ocr_spark.operators.maintenance import doc_id_expr
@@ -215,9 +200,9 @@ def q_analyze_metadata(spark, sf_dir):
     from ollama_ocr_spark.operators.modes import analyze_stage
 
     return (
-        analyze_stage(_latest_pages(spark, sf_dir))
+        analyze_stage(
+            _latest_pages(spark, sf_dir, F.col("doc_id") % 10 <= 6))
         .withColumn("doc_id", doc_id_expr())
-        .filter(F.col("doc_id") % 10 <= 6)
         .select("doc_id", "title", "h1", "has_structure", "doc_class")
     )
 
@@ -228,9 +213,9 @@ def q_multi_step(spark, sf_dir):
     from ollama_ocr_spark.operators.modes import multi_step_stage
 
     return (
-        multi_step_stage(_latest_pages(spark, sf_dir))
+        multi_step_stage(
+            _latest_pages(spark, sf_dir, F.col("doc_id") % 10 <= 6))
         .withColumn("doc_id", doc_id_expr())
-        .filter(F.col("doc_id") % 10 <= 6)
         .select("doc_id", "text", "chars", "title", "has_receipt",
                 "total_cents")
     )
@@ -295,7 +280,6 @@ def q_image_resize(spark, sf_dir):
     from ollama_ocr_spark.operators.maintenance import doc_id_expr
     from ollama_ocr_spark.operators.media import resize_images_stage
 
-    _ensure_shipped(spark)
     pages = _latest_pages(spark, sf_dir).filter(F.col("url").endswith(".jpg"))
     out = resize_images_stage(pages, box_w=128, box_h=128)
     return out.select(
@@ -342,11 +326,9 @@ def q_template_mining(spark, sf_dir):
 
 def q_host_skew_counts(spark, sf_dir):
     """Per-host doc counts (salting-factor input, N6)."""
-    from ollama_ocr_spark.operators.extract import synthesize_stage
-    from ollama_ocr_spark.operators.maintenance import host_expr, latest_capture
+    from ollama_ocr_spark.operators.maintenance import host_expr
 
-    _ensure_shipped(spark)
-    pages = latest_capture(synthesize_stage(_docs(spark, sf_dir)))
+    pages = _latest_pages(spark, sf_dir)
     return pages.groupBy(host_expr().alias("host")).agg(
         F.count("*").alias("n_docs")
     )
@@ -367,7 +349,6 @@ def q_corpus_cardinality(spark, sf_dir):
 
 def q_latest_event_per_user(spark, sf_dir):
     """Latest-capture dedup window (N3) on the events table."""
-    from ollama_ocr_spark.operators.maintenance import latest_capture
     from pyspark.sql import Window
 
     e = _events(spark, sf_dir)
@@ -3095,8 +3076,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # Adding a query means one row here plus one ``oracle_sql()`` entry.
 #
 # Row order matters: the correctness harness samples the FIRST 50 rows,
-# so never-sampled queries lead (newest first), then the round-3/4 band
-# the oracle sweep keeps green, then the already-sampled rest.
+# so never-sampled queries lead, then the already-sampled rest.
 #
 # Tiers, as bench.py times them (each tier in row order):
 #   headline  best-of-2 on every run; their sum is the headline suite secs
@@ -3106,7 +3086,35 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 #             SPARK_GRAFT_BENCH_ALL_EXTRAS=1
 #   untimed   checked by the oracle sweep only
 REGISTRY = (
-    # --- round-5 additions (insert new queries HERE) ---
+    # --- never sampled (insert new queries HERE) ---
+    (q_quality_sample, "default"),
+    (q_mix_manifest, "default"),
+    (q_oov_rate, "opt_in"),
+    (q_url_filter, "opt_in"),
+    (q_domain_quality, "opt_in"),
+    (q_lang_segments, "untimed"),
+    (q_embedding_near_dupes_lsh, "opt_in"),
+    (q_semantic_dedup, "opt_in"),
+    (q_host_link_graph, "opt_in"),
+    (q_host_pagerank, "opt_in"),
+    (q_crawl_diff, "opt_in"),
+    (q_unigram_logprob, "opt_in"),
+    (q_ngram_span_coverage, "opt_in"),
+    (q_anchor_text_stats, "opt_in"),
+    (q_phrase_search, "opt_in"),
+    (q_and_search, "opt_in"),
+    (q_recrawl_schedule, "opt_in"),
+    (q_tfidf_top_terms, "opt_in"),
+    (q_bpe_pair_counts, "opt_in"),
+    (q_dsir_importance, "opt_in"),
+    (q_group_holdout_split, "opt_in"),
+    (q_temperature_mix, "opt_in"),
+    (q_zorder_key, "opt_in"),
+    (q_shingle_novelty, "opt_in"),
+    (q_chunk_documents, "opt_in"),
+    (q_cross_corpus_dedup, "opt_in"),
+    (q_training_batches, "opt_in"),
+    # --- round-5 additions ---
     (q_host_kcore, "default"),
     (q_host_hits, "default"),
     (q_source_token_kl, "default"),
@@ -3136,7 +3144,7 @@ REGISTRY = (
     (q_community_budget, "default"),
     # times the icetbl lifecycle: 3 appends + compact + expire
     (q_snapshot_gc_report, "default"),
-    # --- round-3/early-round-4 band: oracle-green, never sampled ---
+    # --- round-3/early-round-4 band: oracle-green ---
     (q_vocab_coverage, "default"),
     (q_dedup_savings, "default"),
     (q_split_leakage, "default"),
@@ -3161,33 +3169,6 @@ REGISTRY = (
     (q_dedup_cluster_sizes, "default"),
     (q_tokenizer_fertility, "default"),
     (q_data_budget_plan, "default"),
-    (q_quality_sample, "default"),
-    (q_mix_manifest, "default"),
-    (q_oov_rate, "opt_in"),
-    (q_url_filter, "opt_in"),
-    (q_domain_quality, "opt_in"),
-    (q_lang_segments, "untimed"),
-    (q_embedding_near_dupes_lsh, "opt_in"),
-    (q_semantic_dedup, "opt_in"),
-    (q_host_link_graph, "opt_in"),
-    (q_host_pagerank, "opt_in"),
-    (q_crawl_diff, "opt_in"),
-    (q_unigram_logprob, "opt_in"),
-    (q_ngram_span_coverage, "opt_in"),
-    (q_anchor_text_stats, "opt_in"),
-    (q_phrase_search, "opt_in"),
-    (q_and_search, "opt_in"),
-    (q_recrawl_schedule, "opt_in"),
-    (q_tfidf_top_terms, "opt_in"),
-    (q_bpe_pair_counts, "opt_in"),
-    (q_dsir_importance, "opt_in"),
-    (q_group_holdout_split, "opt_in"),
-    (q_temperature_mix, "opt_in"),
-    (q_zorder_key, "opt_in"),
-    (q_shingle_novelty, "opt_in"),
-    (q_chunk_documents, "opt_in"),
-    (q_cross_corpus_dedup, "opt_in"),
-    (q_training_batches, "opt_in"),
     # --- sampled in rounds 1-4 (green in CORRECTNESS_r0*) ---
     (q_selection_drift, "opt_in"),
     (q_filter_attribution, "opt_in"),

@@ -149,13 +149,13 @@ def materialize_corpus(spark) -> int:
 
 def _pipeline(spark, cores: int):
     from ollama_ocr_spark.operators.extract import extract_stage
-    from ollama_ocr_spark.operators.maintenance import balance_by_url, latest_capture
+    from ollama_ocr_spark.operators.maintenance import latest_pages
 
     pages = spark.read.parquet(PAGES_DIR)
     # One task wave (partitions == cores): measured 91k vs 55-64k docs/s at
     # local[32] against 2x/4x over-partitioning — each extra wave re-pays
     # Arrow pipeline spin-up per partition; AQE handles any stragglers.
-    return extract_stage(latest_capture(balance_by_url(pages, cores)))
+    return extract_stage(latest_pages(pages, cores))
 
 
 def timed_extract(spark, cores: int) -> dict:

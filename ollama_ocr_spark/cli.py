@@ -130,7 +130,7 @@ def main(argv: list[str] | None = None) -> int:
         # then anti-join urls already committed — a re-run processes (and
         # appends) nothing new instead of duplicating every row.
         from .operators import modes as _modes
-        from .operators.maintenance import latest_capture, resume_anti_join
+        from .operators.maintenance import latest_pages, resume_anti_join
 
         if args.mode == "structured":
             def stage(p):  # noqa: E306
@@ -143,7 +143,7 @@ def main(argv: list[str] | None = None) -> int:
             }[args.mode]
             tbl_name = args.mode
         tbl = IceTable(os.path.join(args.workdir, tbl_name))
-        todo = latest_capture(pages)
+        todo = latest_pages(pages)
         done = tbl.read(spark)
         if done is not None:
             todo = resume_anti_join(todo, done)

@@ -249,10 +249,9 @@ def latest_capture(pages: DataFrame, key: str = "url",
                    ts: str = "warc_ts") -> DataFrame:
     """Keep the newest capture per url (N3).
 
-    ``row_number`` over (key → ts desc): one payload shuffle +
-    per-partition sort. Combined with :func:`balance_by_url` the payload
-    crosses the wire exactly once, and it keeps exactly one row per key
-    even on (key, ts) ties.
+    ``row_number`` over (key → ts desc): a shuffle + per-partition sort
+    that keeps exactly one row per key even on (key, ts) ties. Pages are
+    deduped through :func:`latest_pages`, which balances them first.
     """
     w = Window.partitionBy(key).orderBy(F.col(ts).desc())
     return (
@@ -423,6 +422,23 @@ def balance_by_url(pages: DataFrame, num_partitions: int) -> DataFrame:
     required (e.g. per-host politeness or parser-cache reuse).
     """
     return pages.repartition(num_partitions, F.col("url"))
+
+
+def latest_pages(pages: DataFrame,
+                 num_partitions: int | None = None) -> DataFrame:
+    """The engine's dedup: the newest capture per url, url-balanced (N3).
+
+    :func:`balance_by_url` to ``num_partitions`` (default: the session's
+    ``defaultParallelism``), then :func:`latest_capture`, whose window
+    reuses that exchange, so the payload shuffles once. The fixed count
+    is the point: a one-file parquet scans as one partition, and AQE
+    coalesces a bare window exchange back to one task, which leaves
+    every Python stage after the dedup (the kernel, the modes) on one
+    core. A ``REPARTITION_BY_NUM`` exchange is never coalesced. Every
+    dedup caller goes through here.
+    """
+    n = num_partitions or pages.sparkSession.sparkContext.defaultParallelism
+    return latest_capture(balance_by_url(pages, n))
 
 
 def salt_by_host(pages: DataFrame, num_partitions: int,

@@ -19,8 +19,7 @@ from pyspark.sql import functions as F
 
 from .operators.extract import extract_stage
 from .operators.maintenance import (
-    balance_by_url,
-    latest_capture,
+    latest_pages,
     partition_lineage,
     resume_anti_join,
 )
@@ -93,16 +92,12 @@ def run_extract(
     so a half-written run is invisible to the next attempt.
     """
     t0 = time.monotonic()
-    num_partitions = num_partitions or spark.sparkContext.defaultParallelism
 
     # Recover lineage for any results snapshot whose metrics append was
     # lost to a crash (resume correctness, SURVEY §7.3.4).
     repair_metrics(spark, results_tbl, metrics_tbl)
 
-    # One shuffle total: url-hash repartition both balances the payload
-    # bytes per task AND satisfies the dedup window's required distribution
-    # (Catalyst inserts no second exchange — see operators.maintenance).
-    deduped = latest_capture(balance_by_url(pages, num_partitions))
+    deduped = latest_pages(pages, num_partitions)
 
     done = results_tbl.read(spark)
     todo = resume_anti_join(deduped, done) if done is not None else deduped

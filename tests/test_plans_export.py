@@ -3,7 +3,9 @@
 from __future__ import annotations
 
 import csv
+import itertools
 import os
+import types
 
 import pytest
 from pyspark.sql import functions as F
@@ -70,6 +72,95 @@ def test_extract_query_slices_documents_before_synthesis(spark):
         rf"Arguments: hashpartitioning\(url#\d+, {n}\), REPARTITION_BY_NUM",
         detail[exchanges[0]],
     ), detail[exchanges[0]]
+
+
+def _dedup_consumers() -> list[str]:
+    """Registry queries whose function reaches ``_latest_pages`` or
+    ``_extracted``, directly or through other module-level helpers."""
+    import __spark_entry__ as entry
+
+    def names(code):
+        yield from code.co_names
+        for c in code.co_consts:
+            if isinstance(c, types.CodeType):
+                yield from names(c)
+
+    uses = {k: set(names(v.__code__)) for k, v in vars(entry).items()
+            if isinstance(v, types.FunctionType)}
+    reach = {"_latest_pages", "_extracted"}
+    while more := {k for k, u in uses.items() if u & reach} - reach:
+        reach |= more
+    return [fn.__name__[2:] for fn, _ in entry.REGISTRY
+            if fn.__name__ in reach]
+
+
+_DEDUP_CONSUMERS = _dedup_consumers()
+
+
+# query -> (exchanges, url dedup Windows) in its sf0.001 physical plan.
+# The graph queries with no Window materialize their pages eagerly.
+_DEDUP_CONSUMER_PLANS = {
+    "analyze_metadata": (1, 1), "anchor_text_stats": (2, 1),
+    "community_budget": (36, 6), "community_quarantine": (12, 2),
+    "crawl_priority": (5, 1), "crawl_reachability": (4, 0),
+    "domain_quality": (3, 1), "extract_error_rows": (1, 1),
+    "extract_handwriting": (1, 1), "extract_image_text": (1, 1),
+    "extract_pdf_fold": (1, 1), "extract_route_counts": (2, 1),
+    "extract_text_plain": (1, 1), "extract_text_roundtrip": (1, 1),
+    "fetch_frontier": (23, 6), "golden_compare": (3, 1),
+    "host_assortativity": (8, 0), "host_communities": (8, 1),
+    "host_content_entropy": (8, 2), "host_degree_stats": (6, 2),
+    "host_hits": (2, 0), "host_kcore": (8, 0), "host_link_graph": (2, 1),
+    "host_mirrors": (22, 0), "host_pagerank": (0, 0),
+    "host_pagerank_delta": (2, 0), "host_reciprocity": (7, 0),
+    "host_seed_distance": (0, 0), "host_skew_counts": (2, 1),
+    "host_template_entropy": (7, 2), "host_topic_labels": (61, 21),
+    "host_triangles": (20, 6), "host_trustrank": (0, 0),
+    "image_features": (1, 1), "image_metadata": (1, 1), "image_resize": (1, 1),
+    "multi_step": (1, 1), "politeness_waves": (2, 1), "robots_filter": (2, 1),
+    "robots_rule_stats": (4, 1), "structured_forms": (1, 1),
+    "structured_price_tags": (1, 1), "structured_receipts": (1, 1),
+    "template_mining": (2, 1), "token_gini": (4, 1), "url_filter": (1, 1),
+    "url_normalize": (1, 1), "wave_makespan": (12, 3),
+    "wave_makespan_mix": (27, 6),
+}
+
+
+@pytest.mark.parametrize(
+    "name", sorted(set(_DEDUP_CONSUMERS) | set(_DEDUP_CONSUMER_PLANS)))
+def test_every_dedup_consumer_reads_url_balanced_pages(spark, name):
+    """Every query built on the shared pages dedups through
+    ``maintenance.latest_pages``: each url dedup Window sits on the
+    fixed-count url hash that AQE may not coalesce, and the plan's
+    exchange and dedup-Window counts match the pinned ones."""
+    import re
+
+    import __spark_entry__ as entry
+    from conftest import SF_SMOKE
+
+    def depth(s):
+        return len(s) - len(s.lstrip(" :+-"))
+
+    assert name in _DEDUP_CONSUMERS, f"{name} no longer dedups pages"
+    assert name in _DEDUP_CONSUMER_PLANS, f"{name}: add its plan counts"
+    report = plan_report(entry.queries()[name](spark, SF_SMOKE))
+    lines = report.raw.splitlines()
+    n = spark.sparkContext.defaultParallelism
+    dedups = 0
+    for i, line in enumerate(lines):
+        if not re.search(r"\bWindow \[row_number\(\).*\], \[url#\d+\], "
+                         r"\[warc_ts#\d+ DESC", line):
+            continue
+        dedups += 1
+        d = depth(line)
+        below = list(itertools.takewhile(lambda s: depth(s) > d,
+                                         lines[i + 1:]))
+        exchange = next((s for s in below if "Exchange " in s), "")
+        assert re.search(rf"Exchange hashpartitioning\(url#\d+, {n}\), "
+                         r"REPARTITION_BY_NUM\b", exchange), \
+            "\n".join([line, *below])
+    assert (report.n_exchanges, dedups) == _DEDUP_CONSUMER_PLANS[name], \
+        report.raw
 
 
 def test_filter_pushdown_reaches_parquet_scan(spark):

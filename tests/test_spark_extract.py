@@ -103,7 +103,7 @@ def test_url_doc_id_roundtrip(spark):
 
 
 def test_doc_id_slice_before_synthesis_is_exact(spark, monkeypatch):
-    """Each extract query slices ``documents`` on doc_id before synthesis.
+    """Each sliced query cuts ``documents`` on doc_id before synthesis.
     That must keep exactly the rows (every column, every capture's dedup
     winner) that the same predicate keeps on the url-derived doc_id after
     the full path."""
@@ -112,12 +112,17 @@ def test_doc_id_slice_before_synthesis_is_exact(spark, monkeypatch):
 
     real = {"_extracted": entry._extracted,
             "_latest_pages": entry._latest_pages}
-    seen = []
+    seen, active = [], []
 
     def spy(name):
         def wrapped(spark, sf_dir, keep=None):
-            seen.append((name, keep))
-            return real[name](spark, sf_dir, keep)
+            if not active:  # _extracted's own _latest_pages call is inside
+                seen.append((name, keep))
+            active.append(name)
+            try:
+                return real[name](spark, sf_dir, keep)
+            finally:
+                active.pop()
         return wrapped
 
     for name in real:
@@ -125,7 +130,8 @@ def test_doc_id_slice_before_synthesis_is_exact(spark, monkeypatch):
     consumers = ("extract_text_roundtrip", "extract_pdf_fold",
                  "extract_handwriting", "extract_error_rows",
                  "extract_image_text", "extract_text_plain",
-                 "golden_compare", "template_mining")
+                 "golden_compare", "template_mining", "analyze_metadata",
+                 "multi_step")
     for q in consumers:
         entry.queries()[q](spark, sf)
     monkeypatch.undo()
