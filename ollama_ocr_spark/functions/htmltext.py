@@ -309,10 +309,20 @@ class _BlockParser(HTMLParser):
 # ---------------------------------------------------------------------------
 
 # One regex per tag: optional '/', name, quoted/unquoted attrs, optional '/'.
+# Linear time on any input: the attribute list and the whitespace runs are
+# possessive, so an unclosed tag is never re-split (a quoted value also
+# matches the unquoted branch: n attributes gave 2^n splits). The lookaheads
+# keep the splits backtracking used to find: a quoted value must end at
+# whitespace, '>', '/>' or EOF (else `a="x"y` is one unquoted value), and a
+# value followed by ` =` is empty (`a= b =` is two attributes). A quoted
+# value holding whitespace or '>' is no longer re-read as a shorter
+# unquoted one when the tag then fails; html.parser does not do that either.
+_VALUE_END = r"(?=\s|/?\s*>|\Z)(?!\s*=)"
 _TAG_RE = re.compile(
     r"<(/?)([a-zA-Z][a-zA-Z0-9._:-]*)"
-    r"((?:\s+[^\s=/>]+(?:\s*=\s*(?:\"[^\"]*\"|'[^']*'|[^\s>]*))?)*)"
-    r"\s*(/?)\s*>"
+    r"((?:\s++[^\s=/>]+(?:\s*=\s*(?:\"[^\"]*\"" + _VALUE_END
+    + r"|'[^']*'" + _VALUE_END + r"|[^\s>]*+(?!\s*=)))?)*+)"
+    r"\s*+(/?)\s*+>"
 )
 # Raw-text (CDATA-content) elements: markup/charrefs inert until the end tag,
 # matching html.parser's CDATA_CONTENT_ELEMENTS.

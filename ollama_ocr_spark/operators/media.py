@@ -1,62 +1,59 @@
 """Multimodal-column operators over ``binary`` payload columns.
 
 Model: media travels as an opaque ``binary`` column plus typed metadata
-columns; heavy per-item work runs in Arrow-batched Python (``mapInPandas``)
-with parsers initialized once per partition. Dimension/container metadata is
-extracted for real from file headers (functions.media); pixel-level decode
-is a clearly-marked stub (no codec libs in-sandbox) with the batching,
-schema, and partitioning contracts real and tested — production swaps the
-kernel, not the plumbing.
+columns; heavy per-item work runs in Arrow-batched Python (one
+:func:`~.extract.map_rows` stage per operator: a per-row function plus one
+``pa.schema``) with parsers initialized once per worker. Dimension/container
+metadata is extracted for real from file headers (functions.media);
+pixel-level decode is a clearly-marked stub (no codec library needed) with
+the batching, schema, and partitioning contracts real and tested —
+production swaps the kernel, not the plumbing.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.media import (image_metadata, mp4_metadata, mp4_timing,
                                wav_metadata)
+from .extract import map_rows
 
-IMAGE_META_SCHEMA = (
-    "url string, format string, width int, height int, bytes bigint"
-)
+_URL = ("url", pa.string())
 
-MEDIA_META_SCHEMA = (
-    "url string, media_type string, format string, width int, height int, "
-    "channels int, sample_rate int, duration_secs double, bytes bigint"
-)
+IMAGE_META_SCHEMA = pa.schema([
+    _URL, ("format", pa.string()), ("width", pa.int32()),
+    ("height", pa.int32()), ("bytes", pa.int64()),
+])
+
+MEDIA_META_SCHEMA = pa.schema([
+    _URL, ("media_type", pa.string()), ("format", pa.string()),
+    ("width", pa.int32()), ("height", pa.int32()), ("channels", pa.int32()),
+    ("sample_rate", pa.int32()), ("duration_secs", pa.float64()),
+    ("bytes", pa.int64()),
+])
 
 FEATURE_DIM = 8
 
-IMAGE_FEATURES_SCHEMA = (
-    f"url string, feature array<float>, feature_dim int"
-)
+IMAGE_FEATURES_SCHEMA = pa.schema([
+    _URL, ("feature", pa.list_(pa.float32())), ("feature_dim", pa.int32()),
+])
+
+
+def _image_meta_row(payload: bytes | None) -> tuple[tuple]:
+    return ((*image_metadata(payload),
+             len(payload) if payload is not None else 0),)
 
 
 def image_metadata_stage(pages: DataFrame) -> DataFrame:
     """Real header-level metadata: container format + dimensions + size.
 
-    ``mapInPandas`` over just (url, html): the Arrow exchange carries only
-    what the kernel needs; the parquet scan is pruned accordingly.
+    Only the payload reaches Python; the url passes through as Arrow and
+    the parquet scan is pruned to (url, html).
     """
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [image_metadata(p) for p in pdf["html"]]
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "format": [m[0] for m in metas],
-                    "width": pd.array([m[1] for m in metas], dtype="Int32"),
-                    "height": pd.array([m[2] for m in metas], dtype="Int32"),
-                    "bytes": [len(p) if p is not None else 0 for p in pdf["html"]],
-                }
-            )
-
-    return pages.select("url", "html").mapInPandas(kernel, IMAGE_META_SCHEMA)
+    return map_rows(pages, _image_meta_row, ("html",), IMAGE_META_SCHEMA,
+                    keep=("url",))
 
 
 def synthesize_media_stage(docs: DataFrame) -> DataFrame:
@@ -80,15 +77,26 @@ def synthesize_media_stage(docs: DataFrame) -> DataFrame:
                              seconds=1 + doc_id % 5)
         return build_mp4(timescale=600, duration=300 * (1 + doc_id % 10))
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame({
-                "url": ["media://%d.bin" % d for d in ids],
-                "html": [_payload(int(d)) for d in ids],
-            })
+    def _media_row(doc_id: int) -> tuple[tuple]:
+        return (("media://%d.bin" % doc_id, _payload(int(doc_id))),)
 
-    return docs.select("doc_id").mapInPandas(kernel, "url string, html binary")
+    return map_rows(docs, _media_row, ("doc_id",),
+                    pa.schema([_URL, ("html", pa.binary())]))
+
+
+def _media_meta_row(payload: bytes | None) -> tuple[tuple]:
+    n = len(payload) if payload else 0
+    if payload:
+        fmt, w, h = image_metadata(payload)
+        if fmt:
+            return (("image", fmt, w, h, None, None, None, n),)
+        wav = wav_metadata(payload)
+        if wav:
+            return (("audio", "wav", None, None, *wav, n),)
+        mp4 = mp4_metadata(payload)
+        if mp4:
+            return (("video", mp4[0], None, None, None, None, mp4[1], n),)
+    return ((None,) * 7 + (n,),)
 
 
 def media_metadata_stage(pages: DataFrame) -> DataFrame:
@@ -97,52 +105,24 @@ def media_metadata_stage(pages: DataFrame) -> DataFrame:
     parses of the opaque ``binary`` column, dispatched on magic bytes.
     Non-media payloads yield ``media_type=NULL`` rows (filter downstream).
     """
-
-    def _one(payload: bytes | None) -> dict:
-        row = dict(media_type=None, format=None, width=None, height=None,
-                   channels=None, sample_rate=None, duration_secs=None,
-                   bytes=len(payload) if payload else 0)
-        if not payload:
-            return row
-        fmt, w, h = image_metadata(payload)
-        if fmt:
-            row.update(media_type="image", format=fmt, width=w, height=h)
-            return row
-        wav = wav_metadata(payload)
-        if wav:
-            row.update(media_type="audio", format="wav", channels=wav[0],
-                       sample_rate=wav[1], duration_secs=wav[2])
-            return row
-        mp4 = mp4_metadata(payload)
-        if mp4:
-            row.update(media_type="video", format=mp4[0],
-                       duration_secs=mp4[1])
-        return row
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [_one(p) for p in pdf["html"]]
-            out = pd.DataFrame(rows)
-            out.insert(0, "url", pdf["url"].values)
-            for c, dt in (("width", "Int32"), ("height", "Int32"),
-                          ("channels", "Int32"), ("sample_rate", "Int32")):
-                out[c] = pd.array(out[c], dtype=dt)
-            yield out
-
-    return pages.select("url", "html").mapInPandas(kernel, MEDIA_META_SCHEMA)
+    return map_rows(pages, _media_meta_row, ("html",), MEDIA_META_SCHEMA,
+                    keep=("url",))
 
 
-RESIZE_SCHEMA = (
-    "url string, src_w int, src_h int, out_w int, out_h int, "
-    "plan_bytes bigint, resized binary"
-)
+RESIZE_SCHEMA = pa.schema([
+    _URL, ("src_w", pa.int32()), ("src_h", pa.int32()), ("out_w", pa.int32()),
+    ("out_h", pa.int32()), ("plan_bytes", pa.int64()),
+    ("resized", pa.binary()),
+])
 
-FRAME_TIMING_SCHEMA = "url string, timescale int, duration_ticks bigint"
+FRAME_TIMING_SCHEMA = pa.schema([
+    _URL, ("timescale", pa.int32()), ("duration_ticks", pa.int64()),
+])
 
-FRAME_SCHEMA = (
-    "url string, frame_idx bigint, ts_ticks bigint, ts_ms bigint, "
-    "frame binary"
-)
+FRAME_SCHEMA = pa.schema([
+    _URL, ("frame_idx", pa.int64()), ("ts_ticks", pa.int64()),
+    ("ts_ms", pa.int64()), ("frame", pa.binary()),
+])
 
 
 def _stub_resize_pixels(payload: bytes, src_w: int, src_h: int,
@@ -164,8 +144,8 @@ def _stub_frame_pixels(url: str, ts_ticks: int) -> bytes:
 # Swap seam for the pixel-level media kernels (same contract as
 # functions.router.OCR_KERNELS): production registers PIL/cv2/ffmpeg-backed
 # functions here — batching, schema, frame planning, and partitioning are
-# unchanged. The stage builders capture the registered kernel into the
-# mapInPandas closure at PLAN-BUILD time, so a driver-side
+# unchanged. The stage builders capture the registered kernel into their
+# row function's closure at PLAN-BUILD time, so a driver-side
 # register_media_kernel() call propagates to workers with the closure.
 MEDIA_KERNELS: dict[str, object] = {
     "resize_pixels": _stub_resize_pixels,
@@ -193,7 +173,7 @@ def fit_box(src_w: int, src_h: int, box_w: int, box_h: int) -> tuple[int, int]:
 
 def resize_images_stage(pages: DataFrame, box_w: int = 128,
                         box_h: int = 128, kernel=None) -> DataFrame:
-    """Distributed image resize: one Arrow-batched ``mapInPandas`` wave,
+    """Distributed image resize: one Arrow-batched ``map_rows`` wave,
     column-pruned to (url, html). REAL per row: the header dimension parse
     (JPEG SOF / PNG IHDR) and the integer fit-within-box plan
     (:func:`fit_box`, oracle-mirrored). STUB: the pixel resample
@@ -214,34 +194,19 @@ def resize_images_stage(pages: DataFrame, box_w: int = 128,
     """
     resample = kernel or MEDIA_KERNELS["resize_pixels"]
 
-    def _kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls, sws, shs, ows, ohs, pbs, bufs = [], [], [], [], [], [], []
-            for url, payload in zip(pdf["url"], pdf["html"]):
-                fmt, w, h = image_metadata(payload)
-                if fmt is None or not w or not h:
-                    continue
-                ow, oh = fit_box(w, h, box_w, box_h)
-                urls.append(url)
-                sws.append(w)
-                shs.append(h)
-                ows.append(ow)
-                ohs.append(oh)
-                pbs.append(ow * oh * 3)
-                bufs.append(resample(payload, w, h, ow, oh))
-            yield pd.DataFrame(
-                {
-                    "url": pd.array(urls, dtype="string"),
-                    "src_w": pd.array(sws, dtype="Int32"),
-                    "src_h": pd.array(shs, dtype="Int32"),
-                    "out_w": pd.array(ows, dtype="Int32"),
-                    "out_h": pd.array(ohs, dtype="Int32"),
-                    "plan_bytes": pd.array(pbs, dtype="Int64"),
-                    "resized": pd.Series(bufs, dtype="object"),
-                }
-            )
+    def _resize_row(payload: bytes | None) -> tuple[tuple, ...]:
+        fmt, w, h = image_metadata(payload)
+        if fmt is None or not w or not h:
+            return ()
+        ow, oh = fit_box(w, h, box_w, box_h)
+        return ((w, h, ow, oh, ow * oh * 3, resample(payload, w, h, ow, oh)),)
 
-    return pages.select("url", "html").mapInPandas(_kernel, RESIZE_SCHEMA)
+    return map_rows(pages, _resize_row, ("html",), RESIZE_SCHEMA,
+                    keep=("url",))
+
+
+def _frame_timing_row(payload: bytes | None) -> tuple[tuple]:
+    return (mp4_timing(payload) or (None, None),)
 
 
 def video_frame_timing_stage(videos: DataFrame) -> DataFrame:
@@ -249,25 +214,8 @@ def video_frame_timing_stage(videos: DataFrame) -> DataFrame:
     ISO-BMFF ``mvhd`` box (:func:`~ollama_ocr_spark.functions.media
     .mp4_timing`), integer-exact for frame planning. Non-video payloads
     yield NULL timing (filter downstream). Column-pruned map stage."""
-
-    def _kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            timings = [mp4_timing(p) for p in pdf["html"]]
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "timescale": pd.array(
-                        [t[0] if t else None for t in timings], dtype="Int32"
-                    ),
-                    "duration_ticks": pd.array(
-                        [t[1] if t else None for t in timings], dtype="Int64"
-                    ),
-                }
-            )
-
-    return videos.select("url", "html").mapInPandas(
-        _kernel, FRAME_TIMING_SCHEMA
-    )
+    return map_rows(videos, _frame_timing_row, ("html",), FRAME_TIMING_SCHEMA,
+                    keep=("url",))
 
 
 def sample_frames_stage(videos: DataFrame, step_ticks: int = 300,
@@ -314,17 +262,11 @@ def sample_frames_stage(videos: DataFrame, step_ticks: int = 300,
         .select("url", "frame_idx", "ts_ticks", "ts_ms")
     )
 
-    def _kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf[["url", "frame_idx", "ts_ticks", "ts_ms"]].copy()
-            out["frame"] = pd.Series(
-                [grab(u, int(t))
-                 for u, t in zip(pdf["url"], pdf["ts_ticks"])],
-                dtype="object", index=out.index,
-            )
-            yield out
+    def _frame_row(url: str, ts_ticks: int) -> tuple[tuple]:
+        return ((grab(url, int(ts_ticks)),),)
 
-    return plan.mapInPandas(_kernel, FRAME_SCHEMA)
+    return map_rows(plan, _frame_row, ("url", "ts_ticks"), FRAME_SCHEMA,
+                    keep=("url", "frame_idx", "ts_ticks", "ts_ms"))
 
 
 def image_features(payload: bytes | None) -> list[float]:
@@ -368,23 +310,14 @@ def image_features(payload: bytes | None) -> list[float]:
     ]
 
 
+def _image_features_row(payload: bytes | None) -> tuple[tuple]:
+    return ((image_features(payload), FEATURE_DIM),)
+
+
 def image_features_stage(pages: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over the opaque ``binary`` column:
-    one ``mapInPandas`` wave, column-pruned to (url, html), parser state
+    one ``map_rows`` wave, column-pruned to (url, html), parser state
     amortized per batch. The kernel (:func:`image_features`) is a real
     byte-level extractor with a bit-exact DuckDB oracle."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [image_features(p) for p in pdf["html"]]
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "feature": feats,
-                    "feature_dim": [FEATURE_DIM] * len(feats),
-                }
-            )
-
-    return pages.select("url", "html").mapInPandas(
-        kernel, IMAGE_FEATURES_SCHEMA
-    )
+    return map_rows(pages, _image_features_row, ("html",),
+                    IMAGE_FEATURES_SCHEMA, keep=("url",))

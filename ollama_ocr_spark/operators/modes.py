@@ -21,15 +21,13 @@ inside the kernel (SURVEY.md §4).
 from __future__ import annotations
 
 import json
-from collections.abc import Iterator
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from ..functions.htmltext import parse_html_blocks
 from ..functions.router import sniff_payload
-
-_TS = pa.timestamp("us", tz="UTC")
+from .extract import map_rows
 
 
 def _first_typed(ext, ld_type: str) -> dict | None:
@@ -41,9 +39,6 @@ def _first_typed(ext, ld_type: str) -> dict | None:
         if isinstance(obj, dict) and obj.get("@type") == ld_type:
             return obj
     return None
-
-
-_first_receipt = lambda ext: _first_typed(ext, "Receipt")  # noqa: E731
 
 
 # Per --data-type field schemas (reference `ollama_cloud_ocr.py:401-414`,
@@ -67,7 +62,29 @@ _STRUCTURED_TYPES = {
     ]),
 }
 
-_PA_DDL = {pa.string(): "string", pa.int64(): "bigint", pa.int32(): "int"}
+
+def _fits(value, t: pa.DataType) -> bool:
+    """A JSON-LD value fits a string column only as a ``str``, and an int
+    column only as an in-range ``int`` (not a bool, float or string)."""
+    if pa.types.is_string(t):
+        return isinstance(value, str)
+    bound = 1 << (t.bit_width - 1)
+    return (isinstance(value, int) and not isinstance(value, bool)
+            and -bound <= value < bound)
+
+
+def _typed_fields(rec: dict, fields) -> tuple[list, list[str]]:
+    """``rec``'s values for ``fields`` and the error messages of those that
+    do not fit their column (each becomes NULL): one hostile value must not
+    fail the whole Arrow batch."""
+    values, errors = [], []
+    for name, t in fields:
+        v = rec.get(name)
+        if v is not None and not _fits(v, t):
+            v = None
+            errors.append(f"invalid structured field: {name}")
+        values.append(v)
+    return values, errors
 
 
 def structured_stage(pages: DataFrame,
@@ -76,151 +93,91 @@ def structured_stage(pages: DataFrame,
     (receipt/form/price_tag — the reference's ``--data-type`` table,
     `ollama_cloud_ocr.py:401-414`). Pages without that type yield an
     error row ('no structured data found'), mirroring the reference's
-    unparseable-response path."""
+    unparseable-response path. A field value of the wrong JSON type is
+    NULL, with ``invalid structured field: <name>`` in ``error``."""
     if data_type not in _STRUCTURED_TYPES:
         raise ValueError(f"Unsupported data type: {data_type}")
     ld_type, fields = _STRUCTURED_TYPES[data_type]
-    schema = pa.schema(
-        [("url", pa.string()), *fields, ("error", pa.string())]
-    )
+    nulls = (None,) * len(fields)
 
-    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in it:
-            urls = rb.column(rb.schema.get_field_index("url")).to_pylist()
-            payloads = rb.column(rb.schema.get_field_index("html")).to_pylist()
-            cols: dict[str, list] = {f.name: [] for f in schema}
-            for url, payload in zip(urls, payloads):
-                kind, _err = sniff_payload(payload)
-                rec = None
-                err = None
-                if kind == "html":
-                    rec = _first_typed(parse_html_blocks(payload), ld_type)
-                    if rec is None:
-                        err = "no structured data found"
-                else:
-                    err = "unsupported payload for structured mode"
-                cols["url"].append(url)
-                for name, _t in fields:
-                    cols[name].append(rec.get(name) if rec else None)
-                cols["error"].append(err)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[f.name], type=f.type) for f in schema],
-                schema=schema,
-            )
+    def _structured_row(payload: bytes | None) -> tuple[tuple]:
+        kind, _err = sniff_payload(payload)
+        if kind != "html":
+            return ((*nulls, "unsupported payload for structured mode"),)
+        rec = _first_typed(parse_html_blocks(payload), ld_type)
+        if rec is None:
+            return ((*nulls, "no structured data found"),)
+        values, errors = _typed_fields(rec, fields)
+        return ((*values, "; ".join(errors) or None),)
 
-    ddl = ", ".join(
-        ["url string"]
-        + [f"{name} {_PA_DDL[t]}" for name, t in fields]
-        + ["error string"]
-    )
-    return pages.select("url", "html").mapInArrow(batches, ddl)
+    schema = pa.schema([("url", pa.string()), *fields, ("error", pa.string())])
+    return map_rows(pages, _structured_row, ("html",), schema, keep=("url",))
 
 
-_ANALYZE_SCHEMA = pa.schema(
-    [
-        ("url", pa.string()),
-        ("title", pa.string()),
-        ("h1", pa.string()),
-        ("n_blocks", pa.int32()),
-        ("n_links", pa.int32()),
-        ("has_structure", pa.bool_()),
-        ("doc_class", pa.string()),
-    ]
-)
+_ANALYZE_SCHEMA = pa.schema([
+    ("url", pa.string()),
+    ("title", pa.string()),
+    ("h1", pa.string()),
+    ("n_blocks", pa.int32()),
+    ("n_links", pa.int32()),
+    ("has_structure", pa.bool_()),
+    ("doc_class", pa.string()),
+])
 
 
-def _analyze_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    for rb in batches:
-        urls = rb.column(rb.schema.get_field_index("url")).to_pylist()
-        payloads = rb.column(rb.schema.get_field_index("html")).to_pylist()
-        cols = {f.name: [] for f in _ANALYZE_SCHEMA}
-        for url, payload in zip(urls, payloads):
-            kind, _ = sniff_payload(payload)
-            if kind != "html":
-                cols["url"].append(url)
-                cols["title"].append("")
-                cols["h1"].append("")
-                cols["n_blocks"].append(0)
-                cols["n_links"].append(0)
-                cols["has_structure"].append(False)
-                cols["doc_class"].append(kind or "error")
-                continue
-            ext = parse_html_blocks(payload)
-            cols["url"].append(url)
-            cols["title"].append(ext.title)
-            cols["h1"].append(ext.h1)
-            cols["n_blocks"].append(ext.n_blocks)
-            cols["n_links"].append(ext.n_links)
-            cols["has_structure"].append(ext.has_structure)
-            cols["doc_class"].append(
-                "structured" if ext.has_structure else "plain"
-            )
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(cols[f.name], type=f.type) for f in _ANALYZE_SCHEMA],
-            schema=_ANALYZE_SCHEMA,
-        )
+def _analyze_row(payload: bytes | None) -> tuple[tuple]:
+    kind, _ = sniff_payload(payload)
+    if kind != "html":
+        return (("", "", 0, 0, False, kind or "error"),)
+    ext = parse_html_blocks(payload)
+    return ((ext.title, ext.h1, ext.n_blocks, ext.n_links, ext.has_structure,
+             "structured" if ext.has_structure else "plain"),)
 
 
 def analyze_stage(pages: DataFrame) -> DataFrame:
     """Document-metadata mode (doc type, title, headings, layout stats)."""
-    return pages.select("url", "html").mapInArrow(
-        _analyze_batches,
-        "url string, title string, h1 string, n_blocks int, n_links int, "
-        "has_structure boolean, doc_class string",
-    )
+    return map_rows(pages, _analyze_row, ("html",), _ANALYZE_SCHEMA,
+                    keep=("url",))
 
 
-_MULTI_SCHEMA = pa.schema(
-    [
-        ("url", pa.string()),
-        ("text", pa.string()),
-        ("chars", pa.int64()),
-        ("title", pa.string()),
-        ("has_receipt", pa.bool_()),
-        ("total_cents", pa.int64()),
-        ("step_errors", pa.string()),
-    ]
-)
+_MULTI_SCHEMA = pa.schema([
+    ("url", pa.string()),
+    ("text", pa.string()),
+    ("chars", pa.int64()),
+    ("title", pa.string()),
+    ("has_receipt", pa.bool_()),
+    ("total_cents", pa.int64()),
+    ("step_errors", pa.string()),
+])
+_RECEIPT_TOTAL = [("total_cents", pa.int64())]
 
 
-def _multi_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    for rb in batches:
-        urls = rb.column(rb.schema.get_field_index("url")).to_pylist()
-        payloads = rb.column(rb.schema.get_field_index("html")).to_pylist()
-        cols = {f.name: [] for f in _MULTI_SCHEMA}
-        for url, payload in zip(urls, payloads):
-            errors: list[str] = []
-            kind, err = sniff_payload(payload)
-            text, title, rec = "", "", None
-            if kind == "html":
-                # ONE parse feeds every step (per-step error capture as in
-                # `ollama_cloud_ocr.py:574-597`)
-                ext = parse_html_blocks(payload)
-                text, title = ext.text, ext.title
-                rec = _first_receipt(ext)
-            elif kind == "text":
-                # plain-text capture: the text step succeeds, the
-                # structure-dependent steps are simply absent
-                text = payload.decode("utf-8", errors="replace").strip()
-            else:
-                errors.append(f"text: {err or 'non-html payload'}")
-            cols["url"].append(url)
-            cols["text"].append(text)
-            cols["chars"].append(len(text))
-            cols["title"].append(title)
-            cols["has_receipt"].append(rec is not None)
-            cols["total_cents"].append(rec.get("total_cents") if rec else None)
-            cols["step_errors"].append("; ".join(errors) if errors else None)
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(cols[f.name], type=f.type) for f in _MULTI_SCHEMA],
-            schema=_MULTI_SCHEMA,
-        )
+def _multi_row(payload: bytes | None) -> tuple[tuple]:
+    errors: list[str] = []
+    kind, err = sniff_payload(payload)
+    text, title, rec, total = "", "", None, None
+    if kind == "html":
+        # ONE parse feeds every step (per-step error capture as in
+        # `ollama_cloud_ocr.py:574-597`)
+        ext = parse_html_blocks(payload)
+        text, title = ext.text, ext.title
+        rec = _first_typed(ext, "Receipt")
+        if rec is not None:
+            (total,), bad = _typed_fields(rec, _RECEIPT_TOTAL)
+            errors.extend(f"receipt: {e}" for e in bad)
+    elif kind == "text":
+        # plain-text capture: the text step succeeds, the
+        # structure-dependent steps are simply absent
+        text = payload.decode("utf-8", errors="replace").strip()
+    else:
+        errors.append(f"text: {err or 'non-html payload'}")
+    return ((text, len(text), title, rec is not None, total,
+             "; ".join(errors) or None),)
 
 
 def multi_step_stage(pages: DataFrame) -> DataFrame:
-    """All analysis steps in one parse pass (T10)."""
-    return pages.select("url", "html").mapInArrow(
-        _multi_batches,
-        "url string, text string, chars bigint, title string, "
-        "has_receipt boolean, total_cents bigint, step_errors string",
-    )
+    """All analysis steps in one parse pass (T10). The url passes through;
+    ``text`` is computed (the input pages' own ``text`` column is not
+    read)."""
+    return map_rows(pages, _multi_row, ("html",), _MULTI_SCHEMA,
+                    keep=("url",))

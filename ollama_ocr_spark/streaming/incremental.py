@@ -41,6 +41,15 @@ def incremental_extract(
     extracted = extract_stage(pages)
 
     def _commit(batch_df: DataFrame, batch_id: int) -> None:
+        # Idempotent on replay (a batch retried after its append but before
+        # the checkpoint commit): a capture is (url, warc_ts), since one
+        # batch holds several captures of the same url.
+        existing = results_tbl.read(spark)
+        if existing is not None:
+            batch_df = batch_df.join(
+                existing.select("url", "warc_ts"), ["url", "warc_ts"],
+                "left_anti"
+            )
         results_tbl.append(batch_df)
 
     (

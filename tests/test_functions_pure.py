@@ -174,6 +174,46 @@ def test_fast_tokenizer_matches_stdlib():
         assert fast == std, payload
 
 
+# An unclosed tag the scanner cannot match: n=200 ambiguous attributes (a
+# quoted value also reads as an unquoted one; `x= y` as one value or two
+# attributes) and a long whitespace run before the missing '>'.
+_HOSTILE_TAGS = {
+    "dquote": "<html><body><a " + 'x="1" ' * 200,
+    "squote": "<html><body><a " + "x='1' " * 200,
+    "eq_chain": "<html><body><a " + "x= y=1 " * 200,
+    "eq_space": "<html><body><a " + "x=  y " * 200,
+    "space_run": "<html><body><a" + " " * 20000,
+}
+_US_PER_BYTE = 20  # the corpus runs ~0.1 us/byte
+
+
+@pytest.mark.parametrize("name", sorted(_HOSTILE_TAGS))
+def test_unclosed_tag_extracts_in_linear_time(name):
+    """Each hostile page extracts within a per-byte time bound. The tag
+    regex once backtracked exponentially on these, pinning a worker with
+    no error row. The kernel runs in a child process, so a regression
+    fails on the child's timeout instead of hanging the suite."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    payload = _HOSTILE_TAGS[name].encode()
+    code = (
+        "import sys, time\n"
+        "from ollama_ocr_spark.functions.router import extract_document\n"
+        "p = sys.stdin.buffer.read()\n"
+        "t = time.perf_counter()\n"
+        "extract_document('u.html', p)\n"
+        "print(time.perf_counter() - t)\n"
+    )
+    env = {**os.environ, "PYTHONPATH": str(Path(__file__).resolve().parents[1])}
+    out = subprocess.run([sys.executable, "-c", code], input=payload,
+                         capture_output=True, env=env, timeout=20, check=True)
+    elapsed = float(out.stdout)
+    assert elapsed <= _US_PER_BYTE * 1e-6 * len(payload), elapsed
+
+
 # ----------------------------------------------------------------- pdf ----
 
 @pytest.mark.parametrize("compress", [True, False])

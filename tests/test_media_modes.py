@@ -133,6 +133,69 @@ def test_structured_stage_form_and_price_tag(spark, documents_smoke):
         structured_stage(pages, data_type="invoice")
 
 
+_HOSTILE_LD = [
+    # (mode, JSON-LD record, the field whose value does not fit its column)
+    ("receipt", {"@type": "Receipt", "store_name": "S", "total_cents": "12.50"},
+     "total_cents"),
+    ("receipt", {"@type": "Receipt", "store_name": "S", "n_items": 99999999999},
+     "n_items"),
+    ("receipt", {"@type": "Receipt", "store_name": ["a"], "total_cents": 7},
+     "store_name"),
+    ("receipt", {"@type": "Receipt", "store_name": "S", "total_cents": True},
+     "total_cents"),
+    ("receipt", {"@type": "Receipt", "store_name": "S", "total_cents": 1.5},
+     "total_cents"),
+    ("form", {"@type": "Form", "form_name": "F", "n_fields": "3"}, "n_fields"),
+    ("form", {"@type": "Form", "form_name": "F", "contact_email": 5},
+     "contact_email"),
+    ("price_tag", {"@type": "PriceTag", "product_name": "P",
+                   "price_cents": 2 ** 63}, "price_cents"),
+    ("price_tag", {"@type": "PriceTag", "product_name": "P",
+                   "sku": {"a": 1}}, "sku"),
+    ("multi", {"@type": "Receipt", "total_cents": "12.50"}, "total_cents"),
+    ("multi", {"@type": "Receipt", "total_cents": True}, "total_cents"),
+    ("multi", {"@type": "Receipt", "total_cents": 1.5}, "total_cents"),
+    ("multi", {"@type": "Receipt", "total_cents": -2 ** 63 - 1},
+     "total_cents"),
+]
+
+
+@pytest.mark.parametrize("mode, record, bad", _HOSTILE_LD,
+                         ids=lambda v: v if isinstance(v, str) else None)
+def test_hostile_jsonld_value_is_a_null_and_an_error(spark, mode, record, bad):
+    """A JSON-LD value that does not fit its typed column (wrong JSON type,
+    out of range, a fraction) becomes NULL plus a fixed-message error on
+    its own row; it must not fail the Arrow batch or be coerced."""
+    import json
+
+    good = {"@type": "Receipt", "store_name": "ok", "total_cents": 250}
+    html = "<html><body><p>x</p>{}</body></html>"
+    ld = '<script type="application/ld+json">{}</script>'
+    pages = spark.createDataFrame(
+        [("u-bad", html.format(ld.format(json.dumps(record))).encode()),
+         ("u-good", html.format(ld.format(json.dumps(good))).encode())],
+        "url string, html binary",
+    )
+    if mode == "multi":
+        rows = {r["url"]: r for r in multi_step_stage(pages).collect()}
+        assert rows["u-bad"]["has_receipt"] is True
+        assert rows["u-bad"]["total_cents"] is None
+        assert rows["u-bad"]["step_errors"] == (
+            f"receipt: invalid structured field: {bad}")
+        assert rows["u-good"]["total_cents"] == 250
+        assert rows["u-good"]["step_errors"] is None
+        return
+    rows = {r["url"]: r for r in structured_stage(pages, mode).collect()}
+    assert rows["u-bad"][bad] is None
+    assert rows["u-bad"]["error"] == f"invalid structured field: {bad}"
+    for name, value in record.items():
+        if name not in ("@type", bad):
+            assert rows["u-bad"][name] == value
+    if mode == "receipt":
+        assert rows["u-good"]["total_cents"] == 250
+        assert rows["u-good"]["error"] is None
+
+
 def test_analyze_and_multistep_share_semantics(spark, documents_smoke):
     pages = _pages(documents_smoke)
     meta = {r["url"]: r for r in analyze_stage(pages).collect()}

@@ -62,7 +62,7 @@ def test_extract_query_slices_documents_before_synthesis(spark):
     detail = dict(re.findall(r"^\((\d+)\) (\w+.*?)(?=^\(\d+\) |\Z)",
                              details, re.S | re.M))
     arrow_ids = re.findall(r"MapInArrow \((\d+)\)", final)
-    kernel = [i for i in arrow_ids if "_extract_batches" in detail[i]]
+    kernel = [i for i in arrow_ids if "_extract_row" in detail[i]]
     assert len(kernel) == 1, final
     below = final.split(f"MapInArrow ({kernel[0]})", 1)[1]
     exchanges = re.findall(r"\bExchange \((\d+)\)", below)

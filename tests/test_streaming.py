@@ -36,6 +36,15 @@ def test_incremental_extract_drains_and_resumes(spark, documents_smoke, tmp_path
     incremental_extract(spark, pages_dir, results, ckpt)
     assert results.read(spark).count() == n2
 
+    # Replay: a crash after the append but before the checkpoint commit
+    # re-runs the last batch, which must not duplicate its rows.
+    commits = tmp_path / "ckpt" / "commits"
+    last = max(int(p.name) for p in commits.iterdir() if p.name.isdigit())
+    (commits / str(last)).unlink()
+    (commits / f".{last}.crc").unlink(missing_ok=True)
+    incremental_extract(spark, pages_dir, results, ckpt)
+    assert results.read(spark).count() == n2
+
 
 def test_incremental_minhash_matches_batch(spark, documents_smoke, tmp_path):
     """Draining the corpus in two micro-batch runs must emit exactly the
