@@ -9,8 +9,17 @@ plain declarative DataFrame op so Catalyst/AQE keep full visibility
 
 from __future__ import annotations
 
+import hashlib
+from collections.abc import Iterator
+
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark import TaskContext
+from pyspark.accumulators import Accumulator, AccumulatorParam
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .extract import ddl
 
 
 def host_expr(url_col: str = "url"):
@@ -539,36 +548,105 @@ def golden_compare(results: DataFrame, golden: DataFrame,
     )
 
 
-def partition_lineage(results: DataFrame) -> DataFrame:
-    """Per-partition lineage rows (north_rule):
-    ``(partition_id, doc_count, bytes_in, checksum)``.
+LINEAGE_SCHEMA = pa.schema([
+    ("partition_id", pa.int32()),
+    ("doc_count", pa.int64()),
+    ("bytes_in", pa.int64()),
+    ("stage_secs", pa.struct([("parse", pa.float64()),
+                              ("total", pa.float64())])),
+    ("checksum", pa.string()),
+])
 
-    checksum = sha256 over the sorted per-partition ``url || sha256(text)``
-    list (FIXTURES.md §4) — order-insensitive within a partition, so a
-    resumed run that re-extracts the same documents into the same partition
-    produces the same checksum.
+
+class PartitionLineage:
+    """One partition's lineage row, folded from its result batches as they
+    stream by (FIXTURES.md §4): ``doc_count``, ``sum(bytes_in)``,
+    ``sum(parse_us) / 1e6`` and ``checksum`` = sha256 over the sorted
+    ``url|sha256(coalesce(text, ''))`` keys, concatenated. A null url drops
+    out of its key, as in SQL ``concat_ws``. Sorted keys make the checksum
+    order-insensitive within a partition, so a resumed run that re-extracts
+    the same documents into the same partition produces the same checksum.
+    This is the engine's one checksum implementation.
     """
-    with_pid = results.withColumn("partition_id", F.spark_partition_id())
-    return with_pid.groupBy("partition_id").agg(
-        F.count("*").alias("doc_count"),
-        F.sum("bytes_in").alias("bytes_in"),
-        F.struct(
-            (F.sum("parse_us") / 1e6).alias("parse"),
-            (F.sum("parse_us") / 1e6).alias("total"),
-        ).alias("stage_secs"),
-        F.sha2(
-            F.concat_ws(
-                "",
-                F.sort_array(
-                    F.collect_list(
-                        F.concat_ws("|", F.col("url"),
-                                    F.sha2(F.coalesce(F.col("text"), F.lit("")), 256))
-                    )
-                ),
-            ),
-            256,
-        ).alias("checksum"),
-    )
+
+    def __init__(self) -> None:
+        self.doc_count = self.bytes_in = self.parse_us = 0
+        self.keys: list[str] = []
+
+    def add(self, rb: pa.RecordBatch) -> None:
+        self.doc_count += rb.num_rows
+        self.bytes_in += pc.sum(rb.column("bytes_in")).as_py() or 0
+        self.parse_us += pc.sum(rb.column("parse_us")).as_py() or 0
+        for url, text in zip(rb.column("url").to_pylist(),
+                             rb.column("text").to_pylist()):
+            digest = hashlib.sha256((text or "").encode()).hexdigest()
+            self.keys.append(digest if url is None else f"{url}|{digest}")
+
+    def row(self, partition_id: int) -> dict | None:
+        """The lineage row, or None for an empty partition (a SQL
+        ``groupBy`` emits no group for it)."""
+        if not self.doc_count:
+            return None
+        self.keys.sort()
+        parse = self.parse_us / 1e6
+        return {
+            "partition_id": partition_id,
+            "doc_count": self.doc_count,
+            "bytes_in": self.bytes_in,
+            "stage_secs": {"parse": parse, "total": parse},
+            "checksum": hashlib.sha256(
+                "".join(self.keys).encode()).hexdigest(),
+        }
+
+
+class RowsByPartition(AccumulatorParam):
+    """Accumulator of ``{partition_id: row}``. A retried, speculative or
+    recomputed task overwrites its own partition's row instead of adding a
+    second one."""
+
+    def zero(self, value: dict) -> dict:
+        return {}
+
+    def addInPlace(self, value1: dict, value2: dict) -> dict:
+        value1.update(value2)
+        return value1
+
+
+def lineage_tap(results: DataFrame, rows: Accumulator) -> DataFrame:
+    """Pass ``results`` through unchanged while each task folds its
+    partition's lineage row and adds it to ``rows`` (an accumulator with
+    :class:`RowsByPartition`), keyed by the task's partition id. The
+    rows are complete once the action over the returned frame returns.
+    """
+    def lineage_tap(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        fold = PartitionLineage()
+        for rb in it:
+            fold.add(rb)
+            yield rb
+        pid = TaskContext.get().partitionId()
+        row = fold.row(pid)
+        if row is not None:
+            rows.add({pid: row})
+
+    return results.mapInArrow(lineage_tap, results.schema)
+
+
+def partition_lineage(results: DataFrame) -> DataFrame:
+    """Per-partition lineage rows (north_rule), one per non-empty
+    ``spark_partition_id()`` of ``results``: ``(partition_id, doc_count,
+    bytes_in, stage_secs, checksum)``, folded by :class:`PartitionLineage`
+    in one ``mapInArrow`` task per partition."""
+    def partition_lineage(it: Iterator[pa.RecordBatch]
+                          ) -> Iterator[pa.RecordBatch]:
+        fold = PartitionLineage()
+        for rb in it:
+            fold.add(rb)
+        row = fold.row(TaskContext.get().partitionId())
+        if row is not None:
+            yield pa.RecordBatch.from_pylist([row], schema=LINEAGE_SCHEMA)
+
+    return results.select("url", "text", "bytes_in", "parse_us").mapInArrow(
+        partition_lineage, ddl(LINEAGE_SCHEMA))
 
 
 def hash_split(pages: DataFrame, key: str = "url",

@@ -1,10 +1,20 @@
 """End-to-end extraction job: the Spark-native lifecycle of the reference's
 ``python ocr_router.py`` batch run (SURVEY.md §3 EP1).
 
-    read pages → latest-capture dedup (N3) → resume anti-join vs committed
-    results (N2) → host-salt repartition (N6/N7) → mapInArrow extract
-    (R1-R3/T1-T5) → results append + lineage/metrics append (S9/S10),
-    both anchored to one snapshot id (resume correctness, SURVEY §7.3.4).
+    read pages → url-balanced latest-capture dedup (N3) → resume anti-join
+    vs committed results (N2) → mapInArrow extract (R1-R3/T1-T5) → results
+    append + lineage/metrics append (S9/S10), both anchored to one
+    snapshot id (resume correctness, SURVEY §7.3.4).
+
+``run_extract`` reads the corpus once: the results append is its only
+pass over the data. Its statistics ride along on that write instead of
+re-reading the data. ``docs_in`` is an ``Observation`` count on the
+dedup output (one row per url). Each extract task folds its partition's
+lineage row as its batches stream through ``maintenance.lineage_tap``
+and reports it through a partition-keyed accumulator, so ``docs_extracted``
+is the sum of the rows' ``doc_count``. The metrics rows are then one
+small driver-built frame. Into empty tables the run is three Spark jobs:
+scan → exchange, kernel + tap + results write, metrics write.
 
 Designed for a 1000-executor cluster; in-sandbox it runs on local[N].
 """
@@ -14,12 +24,16 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.extract import extract_stage
 from .operators.maintenance import (
+    LINEAGE_SCHEMA,
+    RowsByPartition,
     latest_pages,
+    lineage_tap,
     partition_lineage,
     resume_anti_join,
 )
@@ -62,10 +76,8 @@ def repair_metrics(spark: SparkSession, results_tbl: IceTable,
             continue
         snap = results_tbl.snapshot(sid)
         parent = results_tbl.snapshot(snap.parent) if snap.parent else None
-        new_files = [
-            f for f in snap.files
-            if parent is None or f not in set(parent.files)
-        ]
+        old_files = set(parent.files) if parent else set()
+        new_files = [f for f in snap.files if f not in old_files]
         if not new_files:
             continue
         delta = spark.read.parquet(*new_files)
@@ -97,35 +109,26 @@ def run_extract(
     # lost to a crash (resume correctness, SURVEY §7.3.4).
     repair_metrics(spark, results_tbl, metrics_tbl)
 
-    deduped = latest_pages(pages, num_partitions)
+    # One row per url (a null url included), so the count equals the
+    # input's distinct-url count.
+    docs_in = Observation()
+    deduped = latest_pages(pages, num_partitions).observe(
+        docs_in, F.count(F.lit(1)).alias("docs"))
 
     done = results_tbl.read(spark)
     todo = resume_anti_join(deduped, done) if done is not None else deduped
 
-    results = extract_stage(todo)
+    lineage = spark.sparkContext.accumulator({}, RowsByPartition())
+    snapshot_id = results_tbl.append(lineage_tap(extract_stage(todo), lineage))
 
-    # One pass computes results + lineage: cache the (small, text-only)
-    # extraction output, not the raw html.
-    results = results.persist()
-    try:
-        docs_extracted = results.count()
-        snapshot_id = results_tbl.append(results)
+    rows = sorted(lineage.value.values(), key=lambda r: r["partition_id"])
+    metrics = pa.Table.from_pylist(rows, schema=LINEAGE_SCHEMA).append_column(
+        "snapshot_id", pa.array([snapshot_id] * len(rows), pa.int32()))
+    metrics_tbl.append(spark.createDataFrame(metrics).coalesce(1))
 
-        lineage = partition_lineage(results).withColumn(
-            "snapshot_id", F.lit(snapshot_id)
-        )
-        metrics_tbl.append(lineage)
-    finally:
-        results.unpersist()
-
-    # docs_in = unique documents in the input. Counting `deduped` would
-    # RE-EXECUTE the payload repartition + dedup window (a second full
-    # pass over the corpus, just for a stat); the distinct-url count is
-    # the same number from a column-pruned scan that never touches html.
-    docs_in = pages.select("url").distinct().count()
     return RunStats(
-        docs_in=docs_in,
-        docs_extracted=docs_extracted,
+        docs_in=docs_in.get["docs"],
+        docs_extracted=sum(r["doc_count"] for r in rows),
         snapshot_id=snapshot_id,
         wall_secs=time.monotonic() - t0,
     )

@@ -87,6 +87,13 @@ class IceTable:
         """Append df as a new snapshot; returns the new snapshot id."""
         parent = self.snapshot()
         new_sid = (parent.snapshot_id + 1) if parent else 1
+        files = (parent.files if parent else []) + self._write_files(df, new_sid)
+        self._publish(new_sid, parent.snapshot_id if parent else None, files)
+        return new_sid
+
+    def _write_files(self, df: DataFrame, new_sid: int) -> list[str]:
+        """Write df to a staging dir, then move its parquet files into
+        ``data/`` as ``part-<new_sid>-<uuid>.parquet``; returns their paths."""
         staging = os.path.join(self.data_dir, f"_stage-{uuid.uuid4().hex}")
         df.write.mode("overwrite").parquet(staging)
         new_files = []
@@ -102,10 +109,7 @@ class IceTable:
         for leftover in os.listdir(staging):
             os.remove(os.path.join(staging, leftover))
         os.rmdir(staging)
-
-        files = (parent.files if parent else []) + new_files
-        self._publish(new_sid, parent.snapshot_id if parent else None, files)
-        return new_sid
+        return new_files
 
     def _publish(self, new_sid: int, parent_sid: int | None,
                  files: list[str]) -> None:
@@ -156,22 +160,8 @@ class IceTable:
         if snap is None or not snap.files:
             return None
         df = spark.read.parquet(*snap.files).coalesce(target_files)
-        staging = os.path.join(self.data_dir, f"_stage-{uuid.uuid4().hex}")
-        df.write.mode("overwrite").parquet(staging)
         new_sid = snap.snapshot_id + 1
-        new_files = []
-        for name in sorted(os.listdir(staging)):
-            if not name.endswith(".parquet"):
-                continue
-            final = os.path.join(
-                self.data_dir, f"part-{new_sid}-{uuid.uuid4().hex}.parquet"
-            )
-            os.rename(os.path.join(staging, name), final)
-            new_files.append(final)
-        for leftover in os.listdir(staging):
-            os.remove(os.path.join(staging, leftover))
-        os.rmdir(staging)
-        self._publish(new_sid, snap.snapshot_id, new_files)
+        self._publish(new_sid, snap.snapshot_id, self._write_files(df, new_sid))
         return new_sid
 
     def expire_snapshots(self, keep_last: int = 1) -> list[str]:

@@ -195,11 +195,13 @@ def test_pipeline_resume_no_duplicates(spark, documents_smoke, tmp_path):
     pages_half = synthesize_stage(docs_half)
     s1 = run_extract(spark, pages_half, results_tbl, metrics_tbl)
     assert s1.docs_extracted == docs_half.count()
+    assert s1.docs_in == pages_half.select("url").distinct().count()
 
     # Second run sees the FULL corpus; resume must extract only the rest.
     pages_all = synthesize_stage(documents_smoke)
     s2 = run_extract(spark, pages_all, results_tbl, metrics_tbl)
     assert s2.docs_extracted == documents_smoke.count() - docs_half.count()
+    assert s2.docs_in == pages_all.select("url").distinct().count()
 
     # Union of snapshots = exactly one row per url, no duplicates.
     final = results_tbl.read(spark)
@@ -209,6 +211,7 @@ def test_pipeline_resume_no_duplicates(spark, documents_smoke, tmp_path):
     # Idempotent re-run: nothing left to do, no new rows.
     s3 = run_extract(spark, pages_all, results_tbl, metrics_tbl)
     assert s3.docs_extracted == 0
+    assert s3.docs_in == pages_all.select("url").distinct().count()
     assert results_tbl.read(spark).count() == documents_smoke.count()
 
     # Lineage rows reference their results snapshot and cover all docs.
@@ -242,3 +245,130 @@ def test_snapshot_lifecycle_report_rows(spark, tmp_path):
     # disk state matches the live snapshot exactly after GC
     on_disk = glob.glob(root + "/data/*.parquet")
     assert len(on_disk) == 1
+
+
+def _sql_lineage(results):
+    """FIXTURES.md §4 as one SQL expression: the reference the engine's
+    Python lineage fold must match."""
+    return results.groupBy(F.spark_partition_id().alias("partition_id")).agg(
+        F.count("*").alias("doc_count"),
+        F.sum("bytes_in").alias("bytes_in"),
+        (F.sum("parse_us") / 1e6).alias("parse"),
+        F.sha2(F.concat_ws("", F.sort_array(F.collect_list(F.concat_ws(
+            "|", "url", F.sha2(F.coalesce("text", F.lit("")), 256))))),
+            256).alias("checksum"),
+    )
+
+
+def test_partition_lineage_matches_sql_reference(spark, documents_smoke,
+                                                 tmp_path):
+    from ollama_ocr_spark.operators.extract import extract_stage
+    from ollama_ocr_spark.operators.maintenance import (
+        latest_pages, partition_lineage)
+
+    path = str(tmp_path / "results")
+    extract_stage(latest_pages(synthesize_stage(documents_smoke))).write.parquet(
+        path)
+    results = spark.read.parquet(path)
+    none = F.lit(None).cast("string")
+    nulls = results.limit(2).withColumn("url", none).unionByName(
+        results.limit(2).withColumn("text", none))
+    nulls.write.parquet(str(tmp_path / "nulls"))
+    with_nulls = results.unionByName(spark.read.parquet(str(tmp_path / "nulls")))
+    cases = {
+        "as written": results,
+        "null url and text": with_nulls.repartition(3),
+        "empty partitions": results.filter("pages = 1").limit(5).repartition(
+            16, "url"),
+        "coalesced": with_nulls.repartition(7, "url").coalesce(3),
+    }
+    for name, df in cases.items():
+        got = sorted(
+            (r.partition_id, r.doc_count, r.bytes_in, r.stage_secs.parse,
+             r.stage_secs.total, r.checksum)
+            for r in partition_lineage(df).collect())
+        want = sorted(
+            (r.partition_id, r.doc_count, r.bytes_in, r.parse, r.parse,
+             r.checksum)
+            for r in _sql_lineage(df).collect())
+        assert got == want, name
+    assert partition_lineage(results).columns == [
+        "partition_id", "doc_count", "bytes_in", "stage_secs", "checksum"]
+    empty = cases["empty partitions"]
+    assert partition_lineage(empty).count() < empty.rdd.getNumPartitions()
+
+
+def test_lineage_accumulator_keeps_one_row_per_partition(spark):
+    """A retried or speculative task reports its partition again: the
+    accumulator keeps that partition's one row."""
+    from ollama_ocr_spark.operators.maintenance import RowsByPartition
+
+    param = RowsByPartition()
+    merged = param.zero({})
+    for update in ({0: "first"}, {1: "other"}, {0: "retry"}):
+        merged = param.addInPlace(merged, update)
+    assert merged == {0: "retry", 1: "other"}
+
+    acc = spark.sparkContext.accumulator({}, param)
+    spark.sparkContext.parallelize(range(4), 2).foreach(
+        lambda _: acc.add({7: "row"}))
+    assert acc.value == {7: "row"}
+
+
+def test_run_extract_makes_one_pass(spark, documents_smoke, tmp_path,
+                                    monkeypatch):
+    """Into empty tables: scan→exchange, kernel + lineage + results write,
+    metrics write. No cache, no recount."""
+    from pyspark.sql import DataFrame
+
+    persisted = []
+    monkeypatch.setattr(DataFrame, "persist",
+                        lambda self, *a, **k: persisted.append(self))
+    sc = spark.sparkContext
+    rdds_before = sc._jsc.getPersistentRDDs().size()
+    pages = synthesize_stage(documents_smoke.filter("doc_id < 100"))
+    sc.setJobGroup("run_extract_one_pass", "run_extract into empty tables")
+    try:
+        stats = run_extract(spark, pages, IceTable(str(tmp_path / "r")),
+                            IceTable(str(tmp_path / "m")))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("run_extract_one_pass")
+    assert (stats.docs_in, stats.docs_extracted) == (100, 100)
+    assert len(jobs) <= 3, sorted(jobs)
+    assert persisted == []
+    assert sc._jsc.getPersistentRDDs().size() == rdds_before
+
+
+def test_run_extract_on_empty_input_returns_zero(documents_smoke, tmp_path):
+    """Empty inputs of three kinds: the counts come back as (0, 0) and
+    reading them does not wait forever."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = f"""
+import sys
+sys.path.insert(0, {root!r})
+from ollama_ocr_spark.operators.extract import PAGES_SCHEMA
+from ollama_ocr_spark.pipeline import run_extract
+from ollama_ocr_spark.session import get_spark
+from ollama_ocr_spark.sources.icetbl import IceTable
+spark = get_spark(master="local[2]", shuffle_partitions=2)
+pages = spark.read.parquet({str(tmp_path / "pages")!r})
+for name, empty in (("local", spark.createDataFrame([], PAGES_SCHEMA)),
+                    ("filtered", pages.filter("url = ''")),
+                    ("limit0", pages.limit(0))):
+    s = run_extract(spark, empty, IceTable({str(tmp_path)!r} + "/r-" + name),
+                    IceTable({str(tmp_path)!r} + "/m-" + name))
+    print(name, s.docs_in, s.docs_extracted)
+"""
+    synthesize_stage(documents_smoke.limit(20)).write.parquet(
+        str(tmp_path / "pages"))
+    env = dict(os.environ, SPARK_DRIVER_MEM="1g")
+    proc = subprocess.run([sys.executable, "-c", code], capture_output=True,
+                          text=True, timeout=240, env=env)
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert proc.stdout.split() == ["local", "0", "0", "filtered", "0", "0",
+                                   "limit0", "0", "0"]
