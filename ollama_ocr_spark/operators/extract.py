@@ -41,9 +41,13 @@ def ddl(schema: pa.Schema) -> str:
     )
 
 
+BatchTap = Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]
+
+
 def map_rows(df: DataFrame, fn: Callable[..., Sequence[tuple]],
              args: Sequence[str], schema: pa.Schema,
-             keep: Sequence[str] = ()) -> DataFrame:
+             keep: Sequence[str] = (), tap: BatchTap | None = None
+             ) -> DataFrame:
     """One ``mapInArrow`` stage that runs ``fn`` once per input row.
 
     Selects ``args`` plus ``keep``, calls ``fn(*values of args)`` per row,
@@ -55,6 +59,11 @@ def map_rows(df: DataFrame, fn: Callable[..., Sequence[tuple]],
     are built in schema order, because ``mapInArrow`` binds them by
     position, not by name. The batch function carries ``fn``'s name, so
     plans read ``MapInArrow <fn>(...)``.
+
+    ``tap``, if given, wraps the iterator of output batches in the same
+    Python worker (``tap(batches)``, e.g. to fold a side statistic as they
+    stream by), so it costs no second ``mapInArrow``. It must yield the
+    batches it reads, unchanged.
     """
     kept = frozenset(keep)
     computed = [f for f in schema if f.name not in kept]
@@ -80,9 +89,10 @@ def map_rows(df: DataFrame, fn: Callable[..., Sequence[tuple]],
                 for f in schema
             ], schema=schema)
 
-    batches.__name__ = batches.__qualname__ = fn.__name__
+    run = batches if tap is None else (lambda it: tap(batches(it)))
+    run.__name__ = run.__qualname__ = fn.__name__
     cols = list(dict.fromkeys([*args, *keep]))
-    return df.select(*cols).mapInArrow(batches, ddl(schema))
+    return df.select(*cols).mapInArrow(run, ddl(schema))
 
 
 _PA_TS = pa.timestamp("us", tz="UTC")
@@ -120,7 +130,8 @@ def _extract_row(url: str, payload: bytes | None) -> tuple[tuple, ...]:
              r.chars, r.pages, r.doc_type, r.error, parse_us),)
 
 
-def extract_stage(pages: DataFrame) -> DataFrame:
+def extract_stage(pages: DataFrame, tap: BatchTap | None = None
+                  ) -> DataFrame:
     """pages(url, warc_ts, html, ..., lang) → extraction results.
 
     Column-prunes to exactly the 4 columns the kernel needs *before* the
@@ -130,10 +141,11 @@ def extract_stage(pages: DataFrame) -> DataFrame:
     Arrow arrays. Materializing a tz-aware timestamp column via
     ``to_pylist`` costs ~30us/row (every element becomes a fresh
     tzinfo-carrying datetime), a large share of the whole kernel's per-doc
-    budget.
+    budget. ``tap`` folds over the result batches in the kernel's worker
+    (:func:`map_rows`).
     """
     return map_rows(pages, _extract_row, ("url", "html"), _EXTRACT_PA_SCHEMA,
-                    keep=("url", "warc_ts", "lang"))
+                    keep=("url", "warc_ts", "lang"), tap=tap)
 
 
 def _synthesize_row(doc_id: int, text: str | None, lang: str,

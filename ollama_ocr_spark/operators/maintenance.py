@@ -10,6 +10,7 @@ plain declarative DataFrame op so Catalyst/AQE keep full visibility
 from __future__ import annotations
 
 import hashlib
+import time
 from collections.abc import Iterator
 
 import pyarrow as pa
@@ -19,7 +20,7 @@ from pyspark.accumulators import Accumulator, AccumulatorParam
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .extract import ddl
+from .extract import BatchTap, ddl
 
 
 def host_expr(url_col: str = "url"):
@@ -582,9 +583,11 @@ class PartitionLineage:
             digest = hashlib.sha256((text or "").encode()).hexdigest()
             self.keys.append(digest if url is None else f"{url}|{digest}")
 
-    def row(self, partition_id: int) -> dict | None:
+    def row(self, partition_id: int, total: float | None = None
+            ) -> dict | None:
         """The lineage row, or None for an empty partition (a SQL
-        ``groupBy`` emits no group for it)."""
+        ``groupBy`` emits no group for it). ``total`` is the stage's
+        measured seconds; without one (no kernel ran) it copies ``parse``."""
         if not self.doc_count:
             return None
         self.keys.sort()
@@ -593,7 +596,8 @@ class PartitionLineage:
             "partition_id": partition_id,
             "doc_count": self.doc_count,
             "bytes_in": self.bytes_in,
-            "stage_secs": {"parse": parse, "total": parse},
+            "stage_secs": {"parse": parse,
+                           "total": parse if total is None else total},
             "checksum": hashlib.sha256(
                 "".join(self.keys).encode()).hexdigest(),
         }
@@ -612,23 +616,28 @@ class RowsByPartition(AccumulatorParam):
         return value1
 
 
-def lineage_tap(results: DataFrame, rows: Accumulator) -> DataFrame:
-    """Pass ``results`` through unchanged while each task folds its
-    partition's lineage row and adds it to ``rows`` (an accumulator with
-    :class:`RowsByPartition`), keyed by the task's partition id. The
-    rows are complete once the action over the returned frame returns.
+def lineage_tap(rows: Accumulator) -> BatchTap:
+    """A :func:`~ollama_ocr_spark.operators.extract.map_rows` tap that
+    passes the extract stage's result batches through unchanged while the
+    task folds its partition's lineage row and adds it to ``rows`` (an
+    accumulator with :class:`RowsByPartition`), keyed by the task's
+    partition id. ``stage_secs.total`` is the seconds from the task's
+    first input-batch read to its last result batch, so it holds every
+    ``parse_us`` interval. The rows are complete once the action over the
+    stage returns.
     """
     def lineage_tap(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         fold = PartitionLineage()
+        t0 = time.perf_counter()
         for rb in it:
             fold.add(rb)
             yield rb
         pid = TaskContext.get().partitionId()
-        row = fold.row(pid)
+        row = fold.row(pid, total=time.perf_counter() - t0)
         if row is not None:
             rows.add({pid: row})
 
-    return results.mapInArrow(lineage_tap, results.schema)
+    return lineage_tap
 
 
 def partition_lineage(results: DataFrame) -> DataFrame:

@@ -9,8 +9,13 @@ portable primitives (split/regexp/md5/round).
 
 from __future__ import annotations
 
+import unicodedata
+
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .extract import map_rows
 
 # Tiny deterministic stopword list; the synthetic corpus vocabulary contains
 # 'the' and 'a', so ratios are non-degenerate.
@@ -1052,9 +1057,10 @@ def normalize_text_stage(df: DataFrame, key: str = "doc_id",
     corpus is normalized to one form. Web text mixes forms freely
     (different CMSes, different OSes).
 
-    Runs as ONE Arrow-batched ``mapInPandas`` wave over the column-pruned
-    (key, text) projection — stdlib ``unicodedata`` per batch, never
-    per-row Python UDF rows. Output: (key, norm_text, changed,
+    Runs as ONE :func:`~ollama_ocr_spark.operators.extract.map_rows`
+    stage over the column-pruned (key, text) projection — stdlib
+    ``unicodedata`` per row inside Arrow batches; the key passes through
+    as an Arrow array. Output: (key, norm_text, changed,
     chars_in, chars_out); counts are code points (Python ``len`` ==
     DuckDB ``length`` == Spark ``length`` semantics). The DuckDB oracle
     mirrors with ``nfc_normalize()``, which agrees
@@ -1071,38 +1077,19 @@ def normalize_text_stage(df: DataFrame, key: str = "doc_id",
     is a hand-derived UAX#15 + case-folding expectation table over
     fixture suffixes (the body corpus is NFKC/casefold-invariant ASCII).
     """
-    import pandas as pd
-
     if form not in ("NFC", "NFKC", "NFD", "NFKD"):
         raise ValueError(f"unknown normalization form: {form!r}")
 
-    def kernel(batches):
-        import unicodedata
+    def _normalize_row(t: str) -> tuple[tuple, ...]:
+        n = unicodedata.normalize(form, t)
+        if casefold:
+            n = unicodedata.normalize(form, n.casefold())
+        return ((n, n != t, len(t), len(n)),)
 
-        def one(t: str) -> str:
-            n = unicodedata.normalize(form, t)
-            if casefold:
-                n = unicodedata.normalize(form, n.casefold())
-            return n
-
-        for pdf in batches:
-            texts = list(pdf[col])
-            norm = [one(t) for t in texts]
-            yield pd.DataFrame(
-                {
-                    key: pdf[key],
-                    "norm_text": norm,
-                    "changed": [n != t for n, t in zip(norm, texts)],
-                    "chars_in": [len(t) for t in texts],
-                    "chars_out": [len(n) for n in norm],
-                }
-            )
-
-    return df.select(key, col).mapInPandas(
-        kernel,
-        f"{key} bigint, norm_text string, changed boolean, "
-        "chars_in int, chars_out int",
-    )
+    schema = pa.schema([(key, pa.int64()), ("norm_text", pa.string()),
+                        ("changed", pa.bool_()), ("chars_in", pa.int32()),
+                        ("chars_out", pa.int32())])
+    return map_rows(df, _normalize_row, (col,), schema, keep=(key,))
 
 
 def pii_stats(df: DataFrame, group_col: str = "source",

@@ -7,14 +7,17 @@
     snapshot id (resume correctness, SURVEY §7.3.4).
 
 ``run_extract`` reads the corpus once: the results append is its only
-pass over the data. Its statistics ride along on that write instead of
-re-reading the data. ``docs_in`` is an ``Observation`` count on the
-dedup output (one row per url). Each extract task folds its partition's
-lineage row as its batches stream through ``maintenance.lineage_tap``
-and reports it through a partition-keyed accumulator, so ``docs_extracted``
-is the sum of the rows' ``doc_count``. The metrics rows are then one
-small driver-built frame. Into empty tables the run is three Spark jobs:
-scan → exchange, kernel + tap + results write, metrics write.
+pass over the data, and the kernel's ``mapInArrow`` is its only Python
+stage. Its statistics ride along on that write instead of re-reading the
+data. ``docs_in`` is an ``Observation`` count on the dedup output (one
+row per url). Each extract task folds its partition's lineage row in the
+kernel's own Python worker, as the result batches stream out
+(``maintenance.lineage_tap``, a ``map_rows`` tap), and reports it through
+a partition-keyed accumulator, so ``docs_extracted`` is the sum of the
+rows' ``doc_count``. The driver then writes those few rows to the
+metrics table as one parquet file, with no Spark job. Into empty tables
+the run is two Spark jobs: scan → exchange, then kernel + lineage fold +
+results write.
 
 Designed for a 1000-executor cluster; in-sandbox it runs on local[N].
 """
@@ -25,6 +28,7 @@ import time
 from dataclasses import dataclass
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -58,7 +62,11 @@ def repair_metrics(spark: SparkSession, results_tbl: IceTable,
     results commit FIRST, metrics reference the results snapshot id, and any
     run starts by backfilling metrics for orphaned results snapshots. The
     backfilled partition_id reflects the repair read, but doc_count /
-    bytes_in / checksum are content-derived and therefore identical.
+    bytes_in / checksum are content-derived and therefore identical
+    (``stage_secs.total`` copies ``parse``: no kernel ran). A snapshot
+    whose new files hold no rows (an idle re-run) has no lineage and
+    counts as covered; the parquet footers give its row count on the
+    driver.
     """
     last_results = results_tbl.current_snapshot_id()
     if last_results is None:
@@ -78,15 +86,17 @@ def repair_metrics(spark: SparkSession, results_tbl: IceTable,
         parent = results_tbl.snapshot(snap.parent) if snap.parent else None
         old_files = set(parent.files) if parent else set()
         new_files = [f for f in snap.files if f not in old_files]
-        if not new_files:
+        if sum(pq.read_metadata(f).num_rows for f in new_files) == 0:
             continue
-        delta = spark.read.parquet(*new_files)
-        lineage = partition_lineage(delta).withColumn(
-            "snapshot_id", F.lit(sid)
-        )
-        metrics_tbl.append(lineage)
+        lineage = partition_lineage(spark.read.parquet(*new_files)).toArrow()
+        metrics_tbl.append(_with_snapshot_id(lineage, sid))
         repaired.append(sid)
     return repaired
+
+
+def _with_snapshot_id(lineage: pa.Table, sid: int) -> pa.Table:
+    return lineage.append_column(
+        "snapshot_id", pa.array([sid] * lineage.num_rows, pa.int32()))
 
 
 def run_extract(
@@ -119,12 +129,12 @@ def run_extract(
     todo = resume_anti_join(deduped, done) if done is not None else deduped
 
     lineage = spark.sparkContext.accumulator({}, RowsByPartition())
-    snapshot_id = results_tbl.append(lineage_tap(extract_stage(todo), lineage))
+    snapshot_id = results_tbl.append(extract_stage(todo, lineage_tap(lineage)))
 
     rows = sorted(lineage.value.values(), key=lambda r: r["partition_id"])
-    metrics = pa.Table.from_pylist(rows, schema=LINEAGE_SCHEMA).append_column(
-        "snapshot_id", pa.array([snapshot_id] * len(rows), pa.int32()))
-    metrics_tbl.append(spark.createDataFrame(metrics).coalesce(1))
+    if rows:
+        metrics_tbl.append(_with_snapshot_id(
+            pa.Table.from_pylist(rows, schema=LINEAGE_SCHEMA), snapshot_id))
 
     return RunStats(
         docs_in=docs_in.get["docs"],

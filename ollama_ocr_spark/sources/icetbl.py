@@ -32,6 +32,8 @@ import os
 import uuid
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.errors.exceptions.captured import AnalysisException
@@ -83,26 +85,37 @@ class IceTable:
                         payload["files"])
 
     # -- write path ----------------------------------------------------------
-    def append(self, df: DataFrame) -> int:
-        """Append df as a new snapshot; returns the new snapshot id."""
+    def append(self, df: DataFrame | pa.Table) -> int:
+        """Append df as a new snapshot; returns the new snapshot id.
+
+        A ``pyarrow.Table`` (a few driver-side rows) is written as one file
+        by ``pyarrow.parquet`` on the driver, with no Spark job."""
         parent = self.snapshot()
         new_sid = (parent.snapshot_id + 1) if parent else 1
         files = (parent.files if parent else []) + self._write_files(df, new_sid)
         self._publish(new_sid, parent.snapshot_id if parent else None, files)
         return new_sid
 
-    def _write_files(self, df: DataFrame, new_sid: int) -> list[str]:
-        """Write df to a staging dir, then move its parquet files into
-        ``data/`` as ``part-<new_sid>-<uuid>.parquet``; returns their paths."""
+    def _data_file(self, new_sid: int) -> str:
+        return os.path.join(self.data_dir,
+                            f"part-{new_sid}-{uuid.uuid4().hex}.parquet")
+
+    def _write_files(self, df: DataFrame | pa.Table, new_sid: int
+                     ) -> list[str]:
+        """Write df into ``data/`` as ``part-<new_sid>-<uuid>.parquet``
+        files (a Spark write goes through a staging dir); returns their
+        paths. No snapshot lists them until :meth:`_publish`."""
+        if isinstance(df, pa.Table):
+            final = self._data_file(new_sid)
+            pq.write_table(df, final)
+            return [final]
         staging = os.path.join(self.data_dir, f"_stage-{uuid.uuid4().hex}")
         df.write.mode("overwrite").parquet(staging)
         new_files = []
         for name in sorted(os.listdir(staging)):
             if not name.endswith(".parquet"):
                 continue
-            final = os.path.join(
-                self.data_dir, f"part-{new_sid}-{uuid.uuid4().hex}.parquet"
-            )
+            final = self._data_file(new_sid)
             os.rename(os.path.join(staging, name), final)
             new_files.append(final)
         # best-effort cleanup of the staging dir's marker files

@@ -315,10 +315,30 @@ def test_lineage_accumulator_keeps_one_row_per_partition(spark):
     assert acc.value == {7: "row"}
 
 
+def _arrow_nodes(spark, jobs):
+    """Per SQL execution that ran any of ``jobs``: the descriptions of the
+    ``MapInArrow`` nodes of its executed (final, post-AQE) plan, read from
+    the SQL status store."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    found = []
+    for i in range(execs.size()):
+        e = execs.apply(i)
+        ran = {int(j) for j in str(e.jobs().keys().mkString(",")).split(",")
+               if j}
+        if not ran & set(jobs):
+            continue
+        nodes = store.planGraph(e.executionId()).allNodes()
+        found.append([nodes.apply(k).desc() for k in range(nodes.size())
+                      if nodes.apply(k).name() == "MapInArrow"])
+    return found
+
+
 def test_run_extract_makes_one_pass(spark, documents_smoke, tmp_path,
                                     monkeypatch):
-    """Into empty tables: scan→exchange, kernel + lineage + results write,
-    metrics write. No cache, no recount."""
+    """Into empty tables: scan→exchange, then kernel + lineage fold +
+    results write. No cache, no recount, no metrics job, and the kernel's
+    ``mapInArrow`` is the only Python stage of the write."""
     from pyspark.sql import DataFrame
 
     persisted = []
@@ -326,7 +346,9 @@ def test_run_extract_makes_one_pass(spark, documents_smoke, tmp_path,
                         lambda self, *a, **k: persisted.append(self))
     sc = spark.sparkContext
     rdds_before = sc._jsc.getPersistentRDDs().size()
-    pages = synthesize_stage(documents_smoke.filter("doc_id < 100"))
+    synthesize_stage(documents_smoke.filter("doc_id < 100")).write.parquet(
+        str(tmp_path / "pages"))
+    pages = spark.read.parquet(str(tmp_path / "pages"))
     sc.setJobGroup("run_extract_one_pass", "run_extract into empty tables")
     try:
         stats = run_extract(spark, pages, IceTable(str(tmp_path / "r")),
@@ -335,9 +357,67 @@ def test_run_extract_makes_one_pass(spark, documents_smoke, tmp_path,
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = sc.statusTracker().getJobIdsForGroup("run_extract_one_pass")
     assert (stats.docs_in, stats.docs_extracted) == (100, 100)
-    assert len(jobs) <= 3, sorted(jobs)
+    assert len(jobs) <= 2, sorted(jobs)
     assert persisted == []
     assert sc._jsc.getPersistentRDDs().size() == rdds_before
+    arrow = [descs for descs in _arrow_nodes(spark, jobs) if descs]
+    assert len(arrow) == 1 and len(arrow[0]) == 1, arrow
+    assert arrow[0][0].startswith("MapInArrow _extract_row("), arrow
+
+
+def test_idle_reruns_leave_the_metrics_table_alone(spark, documents_smoke,
+                                                   tmp_path):
+    """A run with nothing left to extract commits an empty results
+    snapshot; neither it nor a later run's repair adds a metrics snapshot
+    for it."""
+    results_tbl = IceTable(str(tmp_path / "results"))
+    metrics_tbl = IceTable(str(tmp_path / "metrics"))
+    pages = synthesize_stage(documents_smoke.filter("doc_id < 50"))
+    assert run_extract(spark, pages, results_tbl,
+                       metrics_tbl).docs_extracted == 50
+    for _ in range(4):
+        assert run_extract(spark, pages, results_tbl,
+                           metrics_tbl).docs_extracted == 0
+    assert results_tbl.current_snapshot_id() == 5
+    assert metrics_tbl.current_snapshot_id() == 1
+    assert len(metrics_tbl.snapshot().files) == 1
+    assert metrics_tbl.read(spark).agg(F.sum("doc_count")).first()[0] == 50
+
+
+def test_metrics_rows_keep_one_schema_and_measure_total(
+        spark, documents_smoke, tmp_path):
+    """A repaired row and a ``run_extract`` row read back with the
+    FIXTURES.md §4 schema. ``run_extract`` measures ``stage_secs.total``
+    around its kernel, so it holds ``parse`` and the batch building
+    around it; a repaired row, for which no kernel ran, copies ``parse``."""
+    from pyspark.sql.types import StructType
+
+    from ollama_ocr_spark.operators.extract import extract_stage
+    from ollama_ocr_spark.operators.maintenance import latest_pages
+
+    results_tbl = IceTable(str(tmp_path / "results"))
+    metrics_tbl = IceTable(str(tmp_path / "metrics"))
+    crashed = extract_stage(latest_pages(synthesize_stage(
+        documents_smoke.filter("doc_id < 40"))))
+    repaired_sid = results_tbl.append(crashed)  # metrics append lost
+    s = run_extract(spark, synthesize_stage(documents_smoke.filter(
+        "doc_id < 100")), results_tbl, metrics_tbl)
+    assert s.docs_extracted == 60
+
+    metrics = metrics_tbl.read(spark)
+    assert metrics.schema == StructType.fromDDL(
+        "partition_id INT, doc_count BIGINT, bytes_in BIGINT, "
+        "stage_secs STRUCT<parse: DOUBLE, total: DOUBLE>, checksum STRING, "
+        "snapshot_id INT")
+    rows = metrics.collect()
+    assert {r.snapshot_id for r in rows} == {repaired_sid, s.snapshot_id}
+    assert sum(r.doc_count for r in rows) == 100
+    for r in rows:
+        parse, total = r.stage_secs.parse, r.stage_secs.total
+        if r.snapshot_id == repaired_sid:
+            assert total == parse, r
+        else:
+            assert total > parse > 0, r
 
 
 def test_run_extract_on_empty_input_returns_zero(documents_smoke, tmp_path):
