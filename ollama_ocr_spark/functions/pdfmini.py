@@ -104,28 +104,29 @@ _KIDS_RE = re.compile(rb"/Kids\s*\[(.*?)\]", re.DOTALL)
 _REF_RE = re.compile(rb"(\d+)\s+0\s+R")
 _CONTENTS_RE = re.compile(rb"/Contents\s+(\d+)\s+0\s+R")
 _STREAM_RE = re.compile(rb"stream\r?\n(.*?)\r?\nendstream", re.DOTALL)
-# Literal PDF string followed by Tj; handles escaped chars inside.
-_TJ_RE = re.compile(rb"\(((?:\\.|[^\\()])*)\)\s*Tj")
+# Literal PDF string followed by Tj; handles escaped chars inside. Runs of
+# plain bytes are read possessively: a string has one way to match, so no
+# backtracking is lost, and the match no longer steps byte by byte.
+_TJ_RE = re.compile(rb"\(((?:[^\\()]++|\\.)*+)\)\s*Tj")
 
 _UNESCAPE = {
     b"n": b"\n", b"r": b"\r", b"t": b"\t", b"b": b"\b", b"f": b"\f",
     b"(": b"(", b")": b")", b"\\": b"\\",
 }
+# A backslash and the byte after it, read left to right: an escape pair
+# never overlaps the next one, and a trailing lone backslash stays.
+_ESCAPE_RE = re.compile(rb"\\(.)", re.DOTALL)
+
+
+def _unescape_byte(m: re.Match) -> bytes:
+    # an unknown escape drops its backslash
+    return _UNESCAPE.get(m.group(1), m.group(1))
 
 
 def _unescape_pdf_string(raw: bytes) -> str:
-    out = bytearray()
-    i = 0
-    while i < len(raw):
-        c = raw[i : i + 1]
-        if c == b"\\" and i + 1 < len(raw):
-            nxt = raw[i + 1 : i + 2]
-            out += _UNESCAPE.get(nxt, nxt)
-            i += 2
-        else:
-            out += c
-            i += 1
-    return out.decode("utf-8", errors="replace")
+    if b"\\" in raw:
+        raw = _ESCAPE_RE.sub(_unescape_byte, raw)
+    return raw.decode("utf-8", errors="replace")
 
 
 def extract_pdf_pages(data: bytes) -> list[str]:

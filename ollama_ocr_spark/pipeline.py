@@ -63,29 +63,31 @@ def repair_metrics(spark: SparkSession, results_tbl: IceTable,
     run starts by backfilling metrics for orphaned results snapshots. The
     backfilled partition_id reflects the repair read, but doc_count /
     bytes_in / checksum are content-derived and therefore identical
-    (``stage_secs.total`` copies ``parse``: no kernel ran). A snapshot
-    whose new files hold no rows (an idle re-run) has no lineage and
-    counts as covered; the parquet footers give its row count on the
-    driver.
+    (``stage_secs.total`` copies ``parse``: no kernel ran).
+
+    Covered, so never backfilled: a snapshot that has metrics rows, one
+    whose log is gone (expired), a compaction (``replace``: its rows were
+    already counted when appended) and one whose new files hold no rows
+    (an idle re-run). The covered ids and the row counts are read from
+    parquet on the driver, with no Spark job.
     """
     last_results = results_tbl.current_snapshot_id()
     if last_results is None:
         return []
-    metrics = metrics_tbl.read(spark)
     covered: set[int] = set()
-    if metrics is not None:
-        covered = {
-            r["snapshot_id"]
-            for r in metrics.select("snapshot_id").distinct().collect()
-        }
+    metrics_snap = metrics_tbl.snapshot()
+    if metrics_snap is not None:
+        for f in metrics_snap.files:
+            covered.update(pq.read_table(
+                f, columns=["snapshot_id"]).column(0).to_pylist())
     repaired = []
     for sid in range(1, last_results + 1):
         if sid in covered:
             continue
         snap = results_tbl.snapshot(sid)
-        parent = results_tbl.snapshot(snap.parent) if snap.parent else None
-        old_files = set(parent.files) if parent else set()
-        new_files = [f for f in snap.files if f not in old_files]
+        if snap is None or snap.operation == "replace":
+            continue
+        new_files = snap.added_files()
         if sum(pq.read_metadata(f).num_rows for f in new_files) == 0:
             continue
         lineage = partition_lineage(spark.read.parquet(*new_files)).toArrow()

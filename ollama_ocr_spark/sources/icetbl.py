@@ -18,7 +18,8 @@ Layout::
     <root>/
       data/part-<snapshot>-<uuid>.parquet ...
       _log/v1.json  v2.json ...   # {"snapshot_id": N, "parent": N-1,
-                                  #  "files": [...], "ts": iso}
+                                  #  "operation": "append"|"replace",
+                                  #  "files": [...]}
 
 This is deliberately a *table format*, not a query engine feature — all
 reads go through ``spark.read.parquet(files...)`` so Catalyst still does
@@ -49,6 +50,16 @@ class Snapshot:
     snapshot_id: int
     parent: int | None
     files: list[str]
+    # Iceberg's snapshot operation: "append" adds rows, "replace" (a
+    # compaction) rewrites existing rows into new files.
+    operation: str = "append"
+
+    def added_files(self) -> list[str]:
+        """The files this snapshot wrote (named by ``IceTable._data_file``),
+        known without its parent, which may be expired."""
+        prefix = f"part-{self.snapshot_id}-"
+        return [f for f in self.files
+                if os.path.basename(f).startswith(prefix)]
 
 
 class IceTable:
@@ -82,7 +93,7 @@ class IceTable:
         except FileNotFoundError:  # expired snapshot
             return None
         return Snapshot(payload["snapshot_id"], payload.get("parent"),
-                        payload["files"])
+                        payload["files"], payload.get("operation", "append"))
 
     # -- write path ----------------------------------------------------------
     def append(self, df: DataFrame | pa.Table) -> int:
@@ -125,7 +136,7 @@ class IceTable:
         return new_files
 
     def _publish(self, new_sid: int, parent_sid: int | None,
-                 files: list[str]) -> None:
+                 files: list[str], operation: str = "append") -> None:
         """Atomically publish snapshot ``new_sid`` listing ``files``.
 
         Atomic CREATE, not rename: os.rename silently REPLACES an existing
@@ -138,7 +149,7 @@ class IceTable:
         with open(tmp, "w") as fh:
             json.dump(
                 {"snapshot_id": new_sid, "parent": parent_sid,
-                 "files": files},
+                 "operation": operation, "files": files},
                 fh,
             )
         try:
@@ -174,7 +185,8 @@ class IceTable:
             return None
         df = spark.read.parquet(*snap.files).coalesce(target_files)
         new_sid = snap.snapshot_id + 1
-        self._publish(new_sid, snap.snapshot_id, self._write_files(df, new_sid))
+        self._publish(new_sid, snap.snapshot_id,
+                      self._write_files(df, new_sid), operation="replace")
         return new_sid
 
     def expire_snapshots(self, keep_last: int = 1) -> list[str]:

@@ -183,6 +183,10 @@ _HOSTILE_TAGS = {
     "eq_chain": "<html><body><a " + "x= y=1 " * 200,
     "eq_space": "<html><body><a " + "x=  y " * 200,
     "space_run": "<html><body><a" + " " * 20000,
+    # floods of unclosed tags: each '<' once re-read the rest of the page
+    "p_flood": "<html><body>" + "<p " * 22000,
+    "attr_flood": "<html><body>" + "<a x=1 " * 10000,
+    "charset_flood": "<html><head>" + "<meta charset=" * 5000,
 }
 _US_PER_BYTE = 20  # the corpus runs ~0.1 us/byte
 

@@ -452,3 +452,83 @@ for name, empty in (("local", spark.createDataFrame([], PAGES_SCHEMA)),
     assert proc.returncode == 0, proc.stderr[-2000:]
     assert proc.stdout.split() == ["local", "0", "0", "filtered", "0", "0",
                                    "limit0", "0", "0"]
+
+
+def _one_run_then_idle(spark, documents_smoke, tmp_path, idle_runs):
+    results_tbl = IceTable(str(tmp_path / "results"))
+    metrics_tbl = IceTable(str(tmp_path / "metrics"))
+    pages = synthesize_stage(documents_smoke.filter("doc_id < 50"))
+    assert run_extract(spark, pages, results_tbl,
+                       metrics_tbl).docs_extracted == 50
+    for _ in range(idle_runs):
+        assert run_extract(spark, pages, results_tbl,
+                           metrics_tbl).docs_extracted == 0
+    return results_tbl, metrics_tbl, pages
+
+
+def _assert_metrics_untouched(spark, metrics_tbl):
+    assert metrics_tbl.current_snapshot_id() == 1
+    assert metrics_tbl.read(spark).agg(F.sum("doc_count")).first()[0] == 50
+
+
+def test_repair_skips_a_snapshot_whose_log_expired(spark, documents_smoke,
+                                                   tmp_path):
+    """Two idle runs, then expire: the idle snapshot 2 has no log left,
+    and the next run skips it instead of failing on it."""
+    results_tbl, metrics_tbl, pages = _one_run_then_idle(
+        spark, documents_smoke, tmp_path, idle_runs=2)
+    results_tbl.expire_snapshots(keep_last=1)
+    assert results_tbl.snapshot(2) is None
+    assert run_extract(spark, pages, results_tbl,
+                       metrics_tbl).docs_extracted == 0
+    _assert_metrics_untouched(spark, metrics_tbl)
+
+
+def test_repair_finds_new_files_without_the_parent(spark, documents_smoke,
+                                                   tmp_path):
+    """One idle run, then expire: the idle snapshot's parent log is gone.
+    Its new files are the ones it named, not every live file, so nothing
+    is backfilled twice."""
+    results_tbl, metrics_tbl, pages = _one_run_then_idle(
+        spark, documents_smoke, tmp_path, idle_runs=1)
+    results_tbl.expire_snapshots(keep_last=1)
+    assert results_tbl.snapshot(1) is None
+    assert run_extract(spark, pages, results_tbl,
+                       metrics_tbl).docs_extracted == 0
+    _assert_metrics_untouched(spark, metrics_tbl)
+
+
+def test_repair_counts_a_compaction_as_covered(spark, documents_smoke,
+                                               tmp_path):
+    """A compaction rewrites counted rows into new files; its snapshot is
+    a ``replace`` and gets no lineage rows of its own."""
+    results_tbl, metrics_tbl, pages = _one_run_then_idle(
+        spark, documents_smoke, tmp_path, idle_runs=0)
+    sid = results_tbl.compact(spark)
+    assert results_tbl.snapshot(sid).operation == "replace"
+    assert results_tbl.snapshot(1).operation == "append"
+    assert run_extract(spark, pages, results_tbl,
+                       metrics_tbl).docs_extracted == 0
+    _assert_metrics_untouched(spark, metrics_tbl)
+
+
+def test_idle_rerun_job_count(spark, documents_smoke, tmp_path):
+    """A run with nothing left to extract: ``repair_metrics`` reads the
+    covered snapshot ids and the row counts from parquet on the driver,
+    so it adds no Spark job (no schema inference, no distinct)."""
+    synthesize_stage(documents_smoke.filter("doc_id < 50")).write.parquet(
+        str(tmp_path / "pages"))
+    pages = spark.read.parquet(str(tmp_path / "pages"))
+    results_tbl = IceTable(str(tmp_path / "r"))
+    metrics_tbl = IceTable(str(tmp_path / "m"))
+    assert run_extract(spark, pages, results_tbl,
+                       metrics_tbl).docs_extracted == 50
+    sc = spark.sparkContext
+    sc.setJobGroup("idle_rerun", "run_extract with nothing to extract")
+    try:
+        stats = run_extract(spark, pages, results_tbl, metrics_tbl)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert stats.docs_extracted == 0
+    jobs = sc.statusTracker().getJobIdsForGroup("idle_rerun")
+    assert len(jobs) <= 5, sorted(jobs)  # 8 when repair read the metrics
