@@ -36,14 +36,107 @@ def test_incremental_extract_drains_and_resumes(spark, documents_smoke, tmp_path
     incremental_extract(spark, pages_dir, results, ckpt)
     assert results.read(spark).count() == n2
 
-    # Replay: a crash after the append but before the checkpoint commit
-    # re-runs the last batch, which must not duplicate its rows.
+
+@pytest.mark.parametrize("op", [
+    "extract", "minhash", "simhash", "frontier", "pii", "chunk_dedup",
+    "transitions", "interevent",
+])
+def test_incremental_replay_of_last_batch_changes_nothing(
+        spark, documents_smoke, tmp_path, op):
+    """foreachBatch is at-least-once: a crash after a batch's appends but
+    before its checkpoint commit re-runs that batch with the same
+    batch_id. Simulated by deleting the last ``commits/<n>`` entry and
+    draining again. Write-guarded ops must leave every table's row
+    multiset unchanged. For transitions and interevent the merge-on-read
+    views must stay unchanged; their raw logs grow by design, because
+    the dedup happens when the log is read."""
+    from ollama_ocr_spark.operators.maintenance import latest_capture
+    from ollama_ocr_spark.streaming import incremental as inc
+
+    src = str(tmp_path / "src")
+    ckpt = str(tmp_path / "ckpt")
+    a = IceTable(str(tmp_path / "a"))
+    b = IceTable(str(tmp_path / "b"))
+
+    def pages(latest):
+        docs = documents_smoke.filter("doc_id < 200")
+        split = [synthesize_stage(docs.filter(cond))
+                 for cond in ("doc_id < 120", "doc_id >= 120")]
+        return [latest_capture(p) for p in split] if latest else split
+
+    def rows(data, schema):
+        return [spark.createDataFrame(part, schema) for part in data]
+
+    words = " ".join(f"w{i}" for i in range(40))
+    other = " ".join(f"x{i}" for i in range(32))
+    docs = rows([[(1, "mail me at bob@example.com " + words), (2, words)],
+                 [(1, "mail me at bob@example.com " + words),
+                  (3, "ip 10.0.0.1 " + other)]], "doc_id bigint, text string")
+    us = 1_000_000
+    events = rows([
+        [(1, 1, "a", 100 * us), (1, 2, "b", 200 * us),
+         (2, 1, "a", 150 * us), (4, 1, "c", 110 * us)],
+        [(1, 3, "c", 300 * us), (1, 4, "a", 400 * us),
+         (2, 2, "a", 250 * us), (3, 1, "b", 310 * us),
+         (3, 2, "c", 320 * us)],
+    ], "user_id bigint, event_id bigint, event_type string, ts_us bigint")
+    urls = rows([
+        [("https://a.com/x/p1.html",), ("https://a.com/priv/p.html",),
+         ("https://b.com/x/p.html",)],
+        [("https://a.com/x/p1.html",), ("https://a.com/x/p2.jpg",),
+         ("https://c.com/ok.html",)],
+    ], "url string")
+
+    batches, drain, views = {
+        "extract": (pages(False),
+                    lambda: inc.incremental_extract(spark, src, a, ckpt),
+                    lambda: [a.read(spark)]),
+        "minhash": (pages(True),
+                    lambda: inc.incremental_minhash(spark, src, a, b, ckpt),
+                    lambda: [a.read(spark), b.read(spark)]),
+        "simhash": (pages(True),
+                    lambda: inc.incremental_simhash(spark, src, a, b, ckpt),
+                    lambda: [a.read(spark), b.read(spark)]),
+        "frontier": (urls,
+                     lambda: inc.incremental_frontier(
+                         spark, src, a, ckpt, [("a.com", "/priv/")],
+                         ["b.com"]),
+                     lambda: [a.read(spark)]),
+        "pii": (docs,
+                lambda: inc.incremental_pii_gate(spark, src, a, ckpt),
+                lambda: [a.read(spark)]),
+        "chunk_dedup": (docs,
+                        lambda: inc.incremental_chunk_dedup(
+                            spark, src, a, ckpt),
+                        lambda: [a.read(spark)]),
+        "transitions": (events,
+                        lambda: inc.incremental_transitions(
+                            spark, src, a, b, ckpt),
+                        lambda: [inc.read_transition_matrix(spark, a)]),
+        "interevent": (events,
+                       lambda: inc.incremental_interevent(
+                           spark, src, a, b, ckpt),
+                       lambda: [inc.read_interevent_histogram(spark, a)]),
+    }[op]
+
+    def snapshot():
+        return [sorted(repr(tuple(r)) for r in df.collect())
+                for df in views()]
+
+    for batch in batches:
+        batch.write.mode("append").parquet(src)
+        drain()
+    before = snapshot()
+    assert all(before), "every view holds rows before the replay"
+
     commits = tmp_path / "ckpt" / "commits"
     last = max(int(p.name) for p in commits.iterdir() if p.name.isdigit())
+    assert last == len(batches) - 1
     (commits / str(last)).unlink()
     (commits / f".{last}.crc").unlink(missing_ok=True)
-    incremental_extract(spark, pages_dir, results, ckpt)
-    assert results.read(spark).count() == n2
+    drain()
+    assert (commits / str(last)).exists(), "the last batch was re-run"
+    assert snapshot() == before
 
 
 def test_incremental_minhash_matches_batch(spark, documents_smoke, tmp_path):
