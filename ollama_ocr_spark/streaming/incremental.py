@@ -2,7 +2,7 @@
 
 The reference "streams" only API responses (`ollama_cloud_ocr.py:206-215`);
 its batch loop re-scans a directory and overwrites outputs. The Spark-native
-incremental mode processes *what's new* exactly once instead:
+incremental mode processes *what's new* instead:
 
 - ``readStream`` over the pages directory (file source tracks processed
   files in the checkpoint — the open-source analog of reading new Iceberg
@@ -13,7 +13,16 @@ incremental mode processes *what's new* exactly once instead:
   micro-batch commits atomically and a crashed run resumes from the
   checkpoint + last snapshot,
 - ``trigger(availableNow=True)`` gives "drain the backlog then stop" batch
-  semantics — run it from cron and it picks up exactly the new captures.
+  semantics — run it from cron and it picks up the new captures
+  (:func:`_drain`, the one drain every op runs through).
+
+``foreachBatch`` is at-least-once: a crash after a batch's append but
+before its checkpoint commit re-runs the batch with the same batch_id.
+Every op is idempotent under that replay in one of two ways. A
+write-guarded op appends only through :func:`_append_new`, which drops
+the rows whose key the table already holds. A carried-state op
+(:func:`_carried_commit`) appends batch_id-stamped deltas that its
+merge-on-read reader deduplicates (:func:`_sum_deltas`).
 
 Event-time windowed aggregation over the events stream is in
 :func:`windowed_event_counts` (tumbling window + watermark for late data).
@@ -25,7 +34,37 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.extract import PAGES_SCHEMA, extract_stage
+from ..operators.reports import (_gap_buckets, _transition_pairs,
+                                 _with_bucket_bounds)
 from ..sources.icetbl import IceTable
+
+_DOCS_SCHEMA = "doc_id bigint, text string"
+_EVENTS_SCHEMA = ("user_id bigint, event_id bigint, event_type string, "
+                  "ts_us bigint")
+
+
+def _drain(df: DataFrame, commit, checkpoint_dir: str,
+           output_mode: str = "append") -> None:
+    """Run ``commit(batch_df, batch_id)`` over every micro-batch of the
+    stream ``df`` until its backlog is drained, then stop."""
+    (
+        df.writeStream.foreachBatch(commit)
+        .outputMode(output_mode)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+def _append_new(tbl: IceTable, df: DataFrame, keys: list[str]) -> None:
+    """Append the rows of ``df`` whose ``keys`` are not in ``tbl`` yet —
+    the replay guard of every write-guarded commit: a batch re-run after
+    its append (but before the checkpoint commit) appends nothing."""
+    existing = tbl.read(df.sparkSession)
+    if existing is not None:
+        df = df.join(existing.select(*keys), keys, "left_anti")
+    tbl.append(df)
 
 
 def incremental_extract(
@@ -41,24 +80,11 @@ def incremental_extract(
     extracted = extract_stage(pages)
 
     def _commit(batch_df: DataFrame, batch_id: int) -> None:
-        # Idempotent on replay (a batch retried after its append but before
-        # the checkpoint commit): a capture is (url, warc_ts), since one
-        # batch holds several captures of the same url.
-        existing = results_tbl.read(spark)
-        if existing is not None:
-            batch_df = batch_df.join(
-                existing.select("url", "warc_ts"), ["url", "warc_ts"],
-                "left_anti"
-            )
-        results_tbl.append(batch_df)
+        # A capture is (url, warc_ts), since one batch holds several
+        # captures of the same url.
+        _append_new(results_tbl, batch_df, ["url", "warc_ts"])
 
-    (
-        extracted.writeStream.foreachBatch(_commit)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain(extracted, _commit, checkpoint_dir)
 
 
 def incremental_minhash(
@@ -113,28 +139,10 @@ def incremental_minhash(
             .select(F.least(nk, ak).alias("a"), F.greatest(nk, ak).alias("b"))
             .distinct()
         )
-        existing = cand_tbl.read(spark)
-        if existing is not None:
-            cand = cand.join(
-                existing.select("a", "b"), ["a", "b"], "left_anti"
-            )
-        cand_tbl.append(cand)
-        # Same idempotency guard for the signature table: on a batch retry
-        # after a successful append but before the checkpoint commits, an
-        # unguarded append would duplicate signature rows.
-        if prior is not None:
-            new_sigs = new_sigs.join(
-                prior.select(key), [key], "left_anti"
-            )
-        sig_tbl.append(new_sigs)
+        _append_new(cand_tbl, cand, ["a", "b"])
+        _append_new(sig_tbl, new_sigs, [key])
 
-    (
-        extracted.writeStream.foreachBatch(_commit)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain(extracted, _commit, checkpoint_dir)
 
 
 def incremental_simhash(
@@ -200,27 +208,10 @@ def incremental_simhash(
             .filter(F.col("hamming") <= max_hamming)
             .distinct()
         )
-        existing = cand_tbl.read(spark)
-        if existing is not None:
-            cand = cand.join(
-                existing.select("a", "b"), ["a", "b"], "left_anti"
-            )
-        cand_tbl.append(cand)
-        # Idempotency guard (batch retry after append, before checkpoint
-        # commit): never re-append signatures already in the table.
-        if prior is not None:
-            new_sigs = new_sigs.join(
-                prior.select(key), [key], "left_anti"
-            )
-        sig_tbl.append(new_sigs)
+        _append_new(cand_tbl, cand, ["a", "b"])
+        _append_new(sig_tbl, new_sigs, [key])
 
-    (
-        extracted.writeStream.foreachBatch(_commit)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain(extracted, _commit, checkpoint_dir)
 
 
 def incremental_frontier(
@@ -247,12 +238,9 @@ def incremental_frontier(
     candidate urls, the accumulated verdict rows equal
     ``frontier_verdicts`` over the full url set.
     """
-    from pyspark.sql.types import StringType, StructField, StructType
-
     from ..operators.maintenance import frontier_verdicts
 
-    schema = StructType([StructField("url", StringType())])
-    stream = spark.readStream.schema(schema).parquet(urls_dir)
+    stream = spark.readStream.schema("url string").parquet(urls_dir)
 
     def _commit(batch_df: DataFrame, batch_id: int) -> None:
         rules = spark.createDataFrame(
@@ -264,20 +252,9 @@ def incremental_frontier(
         out = frontier_verdicts(
             batch_df, rules, blocked, blocked_pattern=blocked_pattern
         )
-        existing = verdict_tbl.read(spark)
-        if existing is not None:
-            out = out.join(
-                existing.select("url"), ["url"], "left_anti"
-            )
-        verdict_tbl.append(out)
+        _append_new(verdict_tbl, out, ["url"])
 
-    (
-        stream.writeStream.foreachBatch(_commit)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain(stream, _commit, checkpoint_dir)
 
 
 def incremental_pii_gate(
@@ -300,36 +277,18 @@ def incremental_pii_gate(
     after draining any split of the documents, the accumulated rows
     equal ``with_pii_scrub`` over the full set.
     """
-    from pyspark.sql.types import (LongType, StringType, StructField,
-                                   StructType)
-
     from ..operators.textstats import with_pii_scrub
 
-    schema = StructType([
-        StructField("doc_id", LongType()),
-        StructField("text", StringType()),
-    ])
-    stream = spark.readStream.schema(schema).parquet(docs_dir)
+    stream = spark.readStream.schema(_DOCS_SCHEMA).parquet(docs_dir)
 
     def _commit(batch_df: DataFrame, batch_id: int) -> None:
         out = with_pii_scrub(batch_df).select(
             "doc_id", "scrubbed", "n_emails", "n_ipv4", "n_phones",
             "pii_free",
         )
-        existing = scrubbed_tbl.read(spark)
-        if existing is not None:
-            out = out.join(
-                existing.select("doc_id"), ["doc_id"], "left_anti"
-            )
-        scrubbed_tbl.append(out)
+        _append_new(scrubbed_tbl, out, ["doc_id"])
 
-    (
-        stream.writeStream.foreachBatch(_commit)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain(stream, _commit, checkpoint_dir)
 
 
 def incremental_chunk_dedup(
@@ -356,16 +315,9 @@ def incremental_chunk_dedup(
     split, the stored digest SET equals the batch chunker's distinct
     digests over the full corpus, one row each.
     """
-    from pyspark.sql.types import (LongType, StringType, StructField,
-                                   StructType)
-
     from ..operators.textstats import chunk_documents
 
-    schema = StructType([
-        StructField("doc_id", LongType()),
-        StructField("text", StringType()),
-    ])
-    stream = spark.readStream.schema(schema).parquet(docs_dir)
+    stream = spark.readStream.schema(_DOCS_SCHEMA).parquet(docs_dir)
 
     def _commit(batch_df: DataFrame, batch_id: int) -> None:
         chunks = chunk_documents(batch_df, size=size, stride=stride)
@@ -384,20 +336,9 @@ def incremental_chunk_dedup(
             .filter(F.col("__p") == F.col("__keep"))
             .select("digest", "doc_id", "chunk_id", "n_words", "chunk")
         )
-        existing = chunks_tbl.read(spark)
-        if existing is not None:
-            out = out.join(
-                existing.select("digest"), ["digest"], "left_anti"
-            )
-        chunks_tbl.append(out)
+        _append_new(chunks_tbl, out, ["digest"])
 
-    (
-        stream.writeStream.foreachBatch(_commit)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain(stream, _commit, checkpoint_dir)
 
 
 def session_window_agg(events: DataFrame, gap: str = "30 minutes",
@@ -477,30 +418,37 @@ def streaming_exact_dedup(captures: DataFrame, key: str = "url",
     )
 
 
-def read_transition_matrix(spark: SparkSession,
-                           matrix_tbl: IceTable) -> DataFrame | None:
-    """Merge-on-read view of the :func:`incremental_transitions` count
-    log: pair-count DELTAS are commutative, so the current matrix is
-    one sum per (from_type, to_type) over everything appended — the
-    log-structured-counter recipe (no read-modify-write snapshot
-    races), with ``IceTable.compact`` as the file-count bound. Replay
-    safety lives HERE, not in the appender: foreachBatch is
-    at-least-once, so a driver death between a successful append and
-    the checkpoint commit re-appends the same batch — every delta row
-    is stamped with its batch_id and a replayed batch rewrites
-    byte-identical rows, so one distinct() over
-    (batch_id, from_type, to_type, n_transitions) collapses replays
-    before the sum (the anti-join guard of the other streaming twins,
-    in merge-on-read form)."""
-    log = matrix_tbl.read(spark)
+def _sum_deltas(spark: SparkSession, log_tbl: IceTable, keys: list[str],
+                value: str) -> DataFrame | None:
+    """Merge-on-read view of a carried-state op's delta log: deltas are
+    commutative, so the current value is one sum of ``value`` per
+    ``keys`` over everything appended — the log-structured-counter
+    recipe (no read-modify-write snapshot races), with
+    ``IceTable.compact`` as the file-count bound. Replay safety lives
+    HERE, not in the appender: foreachBatch is at-least-once, so a
+    driver death between a successful append and the checkpoint commit
+    re-appends the same batch — every delta row is stamped with its
+    batch_id and a replayed batch rewrites byte-identical rows, so one
+    distinct() over (batch_id, keys, value) collapses replays before the
+    sum (the :func:`_append_new` guard, in merge-on-read form)."""
+    log = log_tbl.read(spark)
     if log is None:
         return None
     return (
-        log.select("batch_id", "from_type", "to_type", "n_transitions")
+        log.select("batch_id", *keys, value)
         .distinct()
-        .groupBy("from_type", "to_type")
-        .agg(F.sum("n_transitions").alias("n_transitions"))
+        .groupBy(*keys)
+        .agg(F.sum(value).alias(value))
     )
+
+
+def read_transition_matrix(spark: SparkSession,
+                           matrix_tbl: IceTable) -> DataFrame | None:
+    """Merge-on-read view of the :func:`incremental_transitions` count
+    log: one replay-safe sum per (from_type, to_type) over the appended
+    pair-count deltas (:func:`_sum_deltas`)."""
+    return _sum_deltas(spark, matrix_tbl, ["from_type", "to_type"],
+                       "n_transitions")
 
 
 def incremental_transitions(
@@ -519,7 +467,8 @@ def incremental_transitions(
 
     The batch lag window needs each user's PREVIOUS event, which at a
     micro-batch boundary lives in an earlier batch — so the one piece
-    of state carried is each user's LAST event row. Per batch:
+    of state carried is each user's LAST event row. Per batch
+    (:func:`_carried_commit` with state key ``user_id``):
 
     - prior last-events for ONLY the users present in the batch
       (left-semi — state never fans out beyond the batch's user set)
@@ -541,7 +490,7 @@ def incremental_transitions(
     stamped deltas before summing, and the state argmax is naturally
     idempotent (a replayed last-event row ties with itself). State rows
     are ALSO batch_id-stamped and the carried read filters to
-    ``batch_id < current`` — see :func:`_transitions_commit` for why a
+    ``batch_id < current`` — see :func:`_carried_commit` for why a
     replay after the state append needs that window.
     Batch-equivalence (pytest): after draining any
     PER-USER-ORDERED split of the events (late cross-batch arrivals
@@ -549,39 +498,19 @@ def incremental_transitions(
     ``read_transition_matrix`` equals the batch operator's counts over
     the full corpus.
     """
-    from pyspark.sql.types import (LongType, StringType, StructField,
-                                   StructType)
-
-    schema = StructType([
-        StructField("user_id", LongType()),
-        StructField("event_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("ts_us", LongType()),
-    ])
-    stream = spark.readStream.schema(schema).parquet(events_dir)
-
-    def _commit(batch_df: DataFrame, batch_id: int) -> None:
-        _transitions_commit(spark, batch_df, batch_id, matrix_tbl, state_tbl)
-
-    (
-        stream.writeStream.foreachBatch(_commit)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    stream = spark.readStream.schema(_EVENTS_SCHEMA).parquet(events_dir)
+    _drain(stream, lambda batch_df, batch_id: _carried_commit(
+        spark, batch_df, batch_id, matrix_tbl, state_tbl, *_TRANSITIONS
+    ), checkpoint_dir)
 
 
-def _last_events_per_user(df: DataFrame) -> DataFrame:
+def _last_events(df: DataFrame, keys: list[str]) -> DataFrame:
+    """Each ``keys`` group's last event row by (ts_us, event_id), which
+    is unique, so the type field never decides the max."""
     return (
-        df.groupBy("user_id")
+        df.groupBy(*keys)
         .agg(F.max(F.struct("ts_us", "event_id", "event_type")).alias("s"))
-        .select(
-            "user_id",
-            F.col("s.event_id").alias("event_id"),
-            F.col("s.event_type").alias("event_type"),
-            F.col("s.ts_us").alias("ts_us"),
-        )
+        .select("user_id", "s.event_id", "s.event_type", "s.ts_us")
     )
 
 
@@ -605,67 +534,60 @@ def _prior_state(spark: SparkSession, state_tbl: IceTable,
         F.coalesce(F.col("batch_id"), F.lit(-1)) < F.lit(batch_id))
 
 
-def _transitions_commit(spark: SparkSession, batch_df: DataFrame,
-                        batch_id: int, matrix_tbl: IceTable,
-                        state_tbl: IceTable) -> None:
-    """One :func:`incremental_transitions` micro-batch, module-level so
-    the replay test can re-invoke it with the SAME batch_id. The
-    carried-state read filters to ``batch_id < current``: foreachBatch
-    replays reuse the batch id, so a death AFTER the state append (but
-    before the checkpoint commit) must not let the replay see its own
-    last-event rows as prior state — that would emit an extra
-    self-transition per carried user and DIFFERENT delta rows the
-    batch_id-distinct guard cannot collapse. With the filter, a replay
-    recomputes byte-identical rows for both logs (state re-appends tie
-    with themselves under the argmax)."""
-    from ..operators.reports import _transition_pairs
+def _gap_counts(events: DataFrame) -> DataFrame:
+    return (
+        _gap_buckets(events)
+        .groupBy("event_type", "bucket")
+        .agg(F.count("*").alias("n_gaps"))
+    )
 
+
+# (state key, delta stage) of each carried-state op.
+_TRANSITIONS = (["user_id"], lambda events: _transition_pairs(
+    events, "user_id", "ts_us", "event_type", "event_id"))
+_INTEREVENT = (["user_id", "event_type"], _gap_counts)
+
+
+def _carried_commit(spark: SparkSession, batch_df: DataFrame,
+                    batch_id: int, out_tbl: IceTable, state_tbl: IceTable,
+                    keys: list[str], delta) -> None:
+    """One micro-batch of a carried-state op (:data:`_TRANSITIONS` or
+    :data:`_INTEREVENT`), module-level so the replay test can re-invoke
+    it with the SAME batch_id: the last event per ``keys`` group of
+    earlier batches joins this batch's events, ``delta`` turns the union
+    into batch_id-stamped delta rows for ``out_tbl``, and the batch's
+    own last events append to ``state_tbl``.
+
+    The carried-state read filters to ``batch_id < current``:
+    foreachBatch replays reuse the batch id, so a death AFTER the state
+    append (but before the checkpoint commit) must not let the replay
+    see its own last-event rows as prior state — that would emit an
+    extra self-transition (or zero-second gap) per carried group and
+    DIFFERENT delta rows the batch_id-distinct guard cannot collapse.
+    With the filter, a replay recomputes byte-identical rows for both
+    logs (state re-appends tie with themselves under the argmax)."""
     base = batch_df.select("user_id", "event_id", "event_type", "ts_us")
     prior = _prior_state(spark, state_tbl, batch_id)
     if prior is not None:
-        carried = _last_events_per_user(prior).join(
-            base.select("user_id").distinct(), "user_id", "left_semi"
+        carried = _last_events(prior, keys).join(
+            base.select(*keys).distinct(), keys, "left_semi"
         )
-        unioned = base.unionByName(
-            carried.select("user_id", "event_id", "event_type", "ts_us")
-        )
+        unioned = base.unionByName(carried)
     else:
         unioned = base
-    pairs = _transition_pairs(
-        unioned, "user_id", "ts_us", "event_type", "event_id"
-    )
-    matrix_tbl.append(
-        pairs.withColumn("batch_id", F.lit(batch_id).cast("bigint"))
-    )
-    state_tbl.append(
-        _last_events_per_user(base).withColumn(
-            "batch_id", F.lit(batch_id).cast("bigint")
-        )
-    )
+    stamp = F.lit(batch_id).cast("bigint")
+    out_tbl.append(delta(unioned).withColumn("batch_id", stamp))
+    state_tbl.append(_last_events(base, keys).withColumn("batch_id", stamp))
 
 
 def read_interevent_histogram(spark: SparkSession,
                               hist_tbl: IceTable) -> DataFrame | None:
     """Merge-on-read view of the :func:`incremental_interevent` bucket
-    log: per-batch (event_type, bucket) gap-count DELTAS are
-    commutative, so the live histogram is one sum over the appended
-    log — batch_id-stamped rows distinct()-ed first, the
-    :func:`read_transition_matrix` replay guard (foreachBatch is
-    at-least-once; a replayed batch rewrites byte-identical rows). The
-    [2^(b-1), 2^b) bounds attach on read via the batch operator's own
-    projection."""
-    from ..operators.reports import _with_bucket_bounds
-
-    log = hist_tbl.read(spark)
-    if log is None:
-        return None
-    hist = (
-        log.select("batch_id", "event_type", "bucket", "n_gaps")
-        .distinct()
-        .groupBy("event_type", "bucket")
-        .agg(F.sum("n_gaps").alias("n_gaps"))
-    )
-    return _with_bucket_bounds(hist)
+    log: one replay-safe sum per (event_type, bucket) over the appended
+    gap-count deltas (:func:`_sum_deltas`). The [2^(b-1), 2^b) bounds
+    attach on read via the batch operator's own projection."""
+    hist = _sum_deltas(spark, hist_tbl, ["event_type", "bucket"], "n_gaps")
+    return None if hist is None else _with_bucket_bounds(hist)
 
 
 def incremental_interevent(
@@ -678,10 +600,10 @@ def incremental_interevent(
     """Streaming maintenance of the per-type inter-event gap histogram
     (:func:`...operators.reports.interevent_histogram`) — the live
     burstiness feed next to :func:`incremental_transitions`' Markov
-    counts, same architecture, finer state key: the lag chain
-    partitions by (user, TYPE), so the carried row is each (user,
-    type)'s last event, restored ahead of every micro-batch so the
-    boundary-crossing gap is emitted exactly once.
+    counts, same architecture (:func:`_carried_commit`), finer state
+    key: the lag chain partitions by (user, TYPE), so the carried row is
+    each (user, type)'s last event, restored ahead of every micro-batch
+    so the boundary-crossing gap is emitted exactly once.
 
     Per batch: prior last-events for ONLY the (user, type) pairs
     present in the batch (left-semi) union the batch, the shared
@@ -692,7 +614,7 @@ def incremental_interevent(
     — (ts_us, event_id) is unique, so the max never ties). Replay
     idempotence lives in the readers (see
     :func:`read_interevent_histogram`) plus the carried-state
-    ``batch_id < current`` window (see :func:`_transitions_commit` —
+    ``batch_id < current`` window (see :func:`_carried_commit` —
     a replay after the state append would otherwise count a spurious
     zero-second gap per carried (user, type)).
 
@@ -700,73 +622,7 @@ def incremental_interevent(
     ordered split, the merge-on-read histogram equals the batch
     operator over the full stream.
     """
-    from pyspark.sql.types import (LongType, StringType, StructField,
-                                   StructType)
-
-    schema = StructType([
-        StructField("user_id", LongType()),
-        StructField("event_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("ts_us", LongType()),
-    ])
-    stream = spark.readStream.schema(schema).parquet(events_dir)
-
-    def _commit(batch_df: DataFrame, batch_id: int) -> None:
-        _interevent_commit(spark, batch_df, batch_id, hist_tbl, state_tbl)
-
-    (
-        stream.writeStream.foreachBatch(_commit)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-
-def _last_events_per_user_type(df: DataFrame) -> DataFrame:
-    return (
-        df.groupBy("user_id", "event_type")
-        .agg(F.max(F.struct("ts_us", "event_id")).alias("s"))
-        .select(
-            "user_id", "event_type",
-            F.col("s.event_id").alias("event_id"),
-            F.col("s.ts_us").alias("ts_us"),
-        )
-    )
-
-
-def _interevent_commit(spark: SparkSession, batch_df: DataFrame,
-                       batch_id: int, hist_tbl: IceTable,
-                       state_tbl: IceTable) -> None:
-    """One :func:`incremental_interevent` micro-batch, module-level so
-    the replay test can re-invoke it with the SAME batch_id (the
-    :func:`_transitions_commit` contract: carried state filtered to
-    ``batch_id < current`` keeps replays byte-identical even after the
-    state append landed)."""
-    from ..operators.reports import _gap_buckets
-
-    base = batch_df.select("user_id", "event_id", "event_type", "ts_us")
-    prior = _prior_state(spark, state_tbl, batch_id)
-    if prior is not None:
-        carried = _last_events_per_user_type(prior).join(
-            base.select("user_id", "event_type").distinct(),
-            ["user_id", "event_type"], "left_semi",
-        )
-        unioned = base.unionByName(
-            carried.select("user_id", "event_id", "event_type", "ts_us")
-        )
-    else:
-        unioned = base
-    hist = (
-        _gap_buckets(unioned)
-        .groupBy("event_type", "bucket")
-        .agg(F.count("*").alias("n_gaps"))
-    )
-    hist_tbl.append(
-        hist.withColumn("batch_id", F.lit(batch_id).cast("bigint"))
-    )
-    state_tbl.append(
-        _last_events_per_user_type(base).withColumn(
-            "batch_id", F.lit(batch_id).cast("bigint")
-        )
-    )
+    stream = spark.readStream.schema(_EVENTS_SCHEMA).parquet(events_dir)
+    _drain(stream, lambda batch_df, batch_id: _carried_commit(
+        spark, batch_df, batch_id, hist_tbl, state_tbl, *_INTEREVENT
+    ), checkpoint_dir)

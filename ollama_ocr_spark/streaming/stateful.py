@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .incremental import _drain
+
 GAP_US = 1_800_000_000  # 30 min in microseconds
 
 OUTPUT_SCHEMA = "user_id bigint, n_sessions bigint, last_t bigint"
@@ -79,12 +81,5 @@ def run_sessionize_availableNow(
         for r in batch_df.collect():
             result[r["user_id"]] = r["n_sessions"]
 
-    query = (
-        out.writeStream.foreachBatch(_collect)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    _drain(out, _collect, checkpoint_dir, output_mode="update")
     return result

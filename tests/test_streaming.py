@@ -639,74 +639,60 @@ def test_incremental_interevent_matches_batch(spark, tmp_path):
     assert as_map(read_interevent_histogram(spark, hist)) == want
 
 
-def test_transitions_commit_replay_after_state_append(spark, tmp_path):
+@pytest.mark.parametrize("twin", ["transitions", "interevent"])
+def test_carried_commit_replay_after_state_append(spark, tmp_path, twin):
     """The at-least-once window the stamped-delta distinct alone cannot
     cover: the SAME batch re-committed with the SAME batch_id AFTER its
     state append landed. The batch_id < current carried-state window
     keeps the replayed rows byte-identical — without it the replay
     would see its own last-events as prior state and emit a spurious
-    self-transition per carried user."""
-    from ollama_ocr_spark.operators.reports import event_transitions
-    from ollama_ocr_spark.sources.icetbl import IceTable
-    from ollama_ocr_spark.streaming.incremental import (
-        _transitions_commit,
-        read_transition_matrix,
+    self-transition per carried user (transitions) or a spurious
+    zero-second gap per carried (user, type) (interevent); the
+    merge-on-read view must equal the batch operator."""
+    from ollama_ocr_spark.operators.reports import (
+        event_transitions,
+        interevent_histogram,
     )
-
-    cols = ["user_id", "event_id", "event_type", "ts_us"]
-    b1 = spark.createDataFrame(
-        [(1, 1, "a", 100), (1, 2, "b", 200), (2, 1, "a", 150)], cols)
-    b2 = spark.createDataFrame(
-        [(1, 3, "c", 300), (2, 2, "a", 250)], cols)
-    matrix = IceTable(str(tmp_path / "matrix"))
-    state = IceTable(str(tmp_path / "state"))
-
-    _transitions_commit(spark, b1, 0, matrix, state)
-    _transitions_commit(spark, b2, 1, matrix, state)
-    want = {(r["from_type"], r["to_type"]): r["n_transitions"]
-            for r in event_transitions(b1.unionByName(b2)).collect()}
-
-    # replay batch 1 with its own state rows already in the log
-    _transitions_commit(spark, b2, 1, matrix, state)
-    got = {(r["from_type"], r["to_type"]): r["n_transitions"]
-           for r in read_transition_matrix(spark, matrix).collect()}
-    assert got == want
-    assert ("c", "c") not in got and ("a", "a") in got  # u2 cross pair only
-
-
-def test_interevent_commit_replay_after_state_append(spark, tmp_path):
-    """Same replay window for the gap-histogram twin: a replay that saw
-    its own carried state would count a spurious zero-second gap per
-    carried (user, type); the batch_id window keeps the merge-on-read
-    histogram equal to the batch operator."""
-    from ollama_ocr_spark.operators.reports import interevent_histogram
     from ollama_ocr_spark.sources.icetbl import IceTable
-    from ollama_ocr_spark.streaming.incremental import (
-        _interevent_commit,
-        read_interevent_histogram,
-    )
+    from ollama_ocr_spark.streaming import incremental as inc
 
     us = 1_000_000
     cols = ["user_id", "event_id", "event_type", "ts_us"]
-    b1 = spark.createDataFrame(
-        [(1, 1, "click", 0), (1, 2, "click", 3 * us)], cols)
-    b2 = spark.createDataFrame(
-        [(1, 3, "click", 1027 * us), (2, 4, "view", 10 * us)], cols)
-    hist = IceTable(str(tmp_path / "hist"))
+    spec, batches, batch_op, reader, key, value = {
+        "transitions": (
+            inc._TRANSITIONS,
+            ([(1, 1, "a", 100), (1, 2, "b", 200), (2, 1, "a", 150)],
+             [(1, 3, "c", 300), (2, 2, "a", 250)]),
+            event_transitions, inc.read_transition_matrix,
+            ("from_type", "to_type"), "n_transitions"),
+        "interevent": (
+            inc._INTEREVENT,
+            ([(1, 1, "click", 0), (1, 2, "click", 3 * us)],
+             [(1, 3, "click", 1027 * us), (2, 4, "view", 10 * us)]),
+            interevent_histogram, inc.read_interevent_histogram,
+            ("event_type", "bucket"), "n_gaps"),
+    }[twin]
+    b1, b2 = (spark.createDataFrame(rows, cols) for rows in batches)
+    out = IceTable(str(tmp_path / "out"))
     state = IceTable(str(tmp_path / "state"))
 
-    _interevent_commit(spark, b1, 0, hist, state)
-    _interevent_commit(spark, b2, 1, hist, state)
-    want = {(r["event_type"], r["bucket"]): r["n_gaps"]
-            for r in interevent_histogram(b1.unionByName(b2)).collect()}
+    def as_map(df):
+        return {tuple(r[k] for k in key): r[value] for r in df.collect()}
 
-    _interevent_commit(spark, b2, 1, hist, state)
-    got = {(r["event_type"], r["bucket"]): r["n_gaps"]
-           for r in read_interevent_histogram(spark, hist).collect()}
+    inc._carried_commit(spark, b1, 0, out, state, *spec)
+    inc._carried_commit(spark, b2, 1, out, state, *spec)
+    want = as_map(batch_op(b1.unionByName(b2)))
+
+    # replay batch 1 with its own state rows already in the log
+    inc._carried_commit(spark, b2, 1, out, state, *spec)
+    got = as_map(reader(spark, out))
     assert got == want
-    assert got[("click", 11)] == 1     # the cross-batch 1024s gap, once
-    # the polluted-replay artifact would be a zero-second gap (bucket 1)
-    assert ("click", 1) not in got
+    if twin == "transitions":
+        assert ("c", "c") not in got and ("a", "a") in got  # u2 cross pair
+    else:
+        assert got[("click", 11)] == 1     # the cross-batch 1024s gap, once
+        # the polluted-replay artifact would be a zero-second gap (bucket 1)
+        assert ("click", 1) not in got
 
 
 @pytest.mark.parametrize("twin", ["transitions", "interevent"])
@@ -718,11 +704,11 @@ def test_commit_replay_over_mixed_state_log(spark, tmp_path, twin):
     the replay still cannot see its own state rows."""
     from ollama_ocr_spark.streaming import incremental as inc
 
-    commit, last_events = {
-        "transitions": (inc._transitions_commit, inc._last_events_per_user),
-        "interevent": (inc._interevent_commit,
-                       inc._last_events_per_user_type),
-    }[twin]
+    spec = {"transitions": inc._TRANSITIONS,
+            "interevent": inc._INTEREVENT}[twin]
+
+    def commit(batch_df, batch_id, out, state):
+        inc._carried_commit(spark, batch_df, batch_id, out, state, *spec)
     us = 1_000_000
     cols = ["user_id", "event_id", "event_type", "ts_us"]
     b0 = spark.createDataFrame(
@@ -739,12 +725,12 @@ def test_commit_replay_over_mixed_state_log(spark, tmp_path, twin):
         out = IceTable(str(tmp_path / root / "out"))
         state = IceTable(str(tmp_path / root / "state"))
         if legacy:  # batch 0 was committed before stamping existed
-            state.append(last_events(b0))
+            state.append(inc._last_events(b0, spec[0]))
         else:
-            commit(spark, b0, 0, out, state)
-        commit(spark, b1, 1, out, state)
-        commit(spark, b2, 2, out, state)
-        commit(spark, b2, 2, out, state)  # replay after the state append
+            commit(b0, 0, out, state)
+        commit(b1, 1, out, state)
+        commit(b2, 2, out, state)
+        commit(b2, 2, out, state)  # replay after the state append
         rows = out.read(spark).filter("batch_id >= 1")
         return sorted(tuple(r) for r in rows.select(sorted(rows.columns))
                       .collect())
