@@ -192,7 +192,11 @@ class IceTable:
     def expire_snapshots(self, keep_last: int = 1) -> list[str]:
         """Drop all but the newest ``keep_last`` snapshots and delete data
         files no live snapshot references (Iceberg ``expire_snapshots``).
-        Returns the deleted file paths."""
+        That includes orphans: ``part-<sid>-`` files a crashed writer left
+        between :meth:`_write_files` and :meth:`_publish`. Only orphans
+        with ``sid`` <= the current id go, since a higher ``sid`` may
+        belong to a writer still in flight. Returns the deleted file
+        paths."""
         current = self.current_snapshot_id()
         if current is None:
             return []
@@ -214,6 +218,17 @@ class IceTable:
                     os.remove(f)
                     deleted.append(f)
             os.remove(self._snapshot_path(sid))
+        # Compare basenames: a table opened under another spelling of its
+        # root lists the same files under other paths.
+        live_names = {os.path.basename(f) for f in live_files}
+        for name in os.listdir(self.data_dir):
+            parts = name.split("-")
+            if (name.endswith(".parquet") and parts[0] == "part"
+                    and parts[1].isdigit() and int(parts[1]) <= current
+                    and name not in live_names):
+                orphan = os.path.join(self.data_dir, name)
+                os.remove(orphan)
+                deleted.append(orphan)
         return sorted(set(deleted))
 
 

@@ -51,6 +51,32 @@ def test_icetbl_compact_and_expire(spark, tmp_path):
     assert tbl.expire_snapshots(keep_last=1) == []
 
 
+def test_icetbl_expire_deletes_orphaned_data_files(tmp_path):
+    """A writer that crashes between ``_write_files`` and ``_publish``
+    leaves ``part-<sid>-`` files no snapshot lists. expire_snapshots
+    deletes them once the table's current id has reached their sid; an
+    orphan with a higher sid may be a writer still in flight and stays."""
+    import os
+
+    import pyarrow as pa
+
+    tbl = IceTable(str(tmp_path / "t"))
+    rows = pa.table({"x": [1, 2]})
+    tbl.append(rows)
+    crashed = tbl._write_files(rows, 2)  # never published
+    tbl.append(rows)
+    tbl.append(rows)
+    in_flight = tbl._write_files(rows, 4)  # the next commit's id
+
+    deleted = tbl.expire_snapshots(keep_last=1)
+    on_disk = {os.path.join(tbl.data_dir, n) for n in os.listdir(tbl.data_dir)}
+    live = set(tbl.snapshot().files)
+    assert len(live) == 3
+    assert on_disk == live | set(in_flight)
+    assert set(crashed) <= set(deleted)
+    assert not set(deleted) & live
+
+
 def test_open_table_flag_and_catalog_writeTo(spark, tmp_path, monkeypatch):
     """Feature flag: default → icetbl; 'iceberg' → catalog writeTo path.
     The V2 write/read mechanics run here against the session catalog with
