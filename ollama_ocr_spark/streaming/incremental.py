@@ -30,6 +30,8 @@ Event-time windowed aggregation over the events stream is in
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -43,8 +45,8 @@ _EVENTS_SCHEMA = ("user_id bigint, event_id bigint, event_type string, "
                   "ts_us bigint")
 
 
-def _drain(df: DataFrame, commit, checkpoint_dir: str,
-           output_mode: str = "append") -> None:
+def _drain(df: DataFrame, commit: Callable[[DataFrame, int], None],
+           checkpoint_dir: str, output_mode: str = "append") -> None:
     """Run ``commit(batch_df, batch_id)`` over every micro-batch of the
     stream ``df`` until its backlog is drained, then stop."""
     (
@@ -550,7 +552,8 @@ _INTEREVENT = (["user_id", "event_type"], _gap_counts)
 
 def _carried_commit(spark: SparkSession, batch_df: DataFrame,
                     batch_id: int, out_tbl: IceTable, state_tbl: IceTable,
-                    keys: list[str], delta) -> None:
+                    keys: list[str],
+                    delta: Callable[[DataFrame], DataFrame]) -> None:
     """One micro-batch of a carried-state op (:data:`_TRANSITIONS` or
     :data:`_INTEREVENT`), module-level so the replay test can re-invoke
     it with the SAME batch_id: the last event per ``keys`` group of
