@@ -62,8 +62,10 @@ def map_rows(df: DataFrame, fn: Callable[..., Sequence[tuple]],
 
     ``tap``, if given, wraps the iterator of output batches in the same
     Python worker (``tap(batches)``, e.g. to fold a side statistic as they
-    stream by), so it costs no second ``mapInArrow``. It must yield the
-    batches it reads, unchanged.
+    stream by), so it costs no second ``mapInArrow``. A tap either yields
+    the batches it reads, unchanged, or consumes them and yields none
+    (a sink, such as ``maintenance.parquet_sink``, that writes them
+    itself; the action over the stage is then a ``noop`` write).
     """
     kept = frozenset(keep)
     computed = [f for f in schema if f.name not in kept]

@@ -15,11 +15,13 @@ from collections.abc import Iterator
 
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark import TaskContext
 from pyspark.accumulators import Accumulator, AccumulatorParam
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.icetbl import data_file
 from .extract import BatchTap, ddl
 
 
@@ -604,9 +606,9 @@ class PartitionLineage:
 
 
 class RowsByPartition(AccumulatorParam):
-    """Accumulator of ``{partition_id: row}``. A retried, speculative or
-    recomputed task overwrites its own partition's row instead of adding a
-    second one."""
+    """Accumulator of ``{partition_id: value}``. A retried, speculative or
+    recomputed task overwrites its own partition's value instead of adding
+    a second one."""
 
     def zero(self, value: dict) -> dict:
         return {}
@@ -616,28 +618,46 @@ class RowsByPartition(AccumulatorParam):
         return value1
 
 
-def lineage_tap(rows: Accumulator) -> BatchTap:
+def parquet_sink(rows: Accumulator, data_dir: str, snapshot_id: int
+                 ) -> BatchTap:
     """A :func:`~ollama_ocr_spark.operators.extract.map_rows` tap that
-    passes the extract stage's result batches through unchanged while the
-    task folds its partition's lineage row and adds it to ``rows`` (an
-    accumulator with :class:`RowsByPartition`), keyed by the task's
-    partition id. ``stage_secs.total`` is the seconds from the task's
-    first input-batch read to its last result batch, so it holds every
-    ``parse_us`` interval. The rows are complete once the action over the
-    stage returns.
+    writes the extract stage's result batches to one parquet file in
+    ``data_dir`` and yields none, so the action over the stage is a
+    ``noop`` write and no row goes back to the JVM. The file is named for
+    ``snapshot_id`` (:func:`~ollama_ocr_spark.sources.icetbl.data_file`);
+    ``data_dir`` must be absolute, since the task does not run in the
+    driver's working directory.
+
+    As the batches stream by, the task folds its partition's lineage row.
+    Once the file is closed it adds ``{partition_id: (path, row)}`` to
+    ``rows`` (an accumulator with :class:`RowsByPartition`); the driver
+    commits exactly the reported paths. An empty partition writes no file
+    and reports nothing. ``stage_secs.total`` is the seconds from the
+    task's first input-batch read to the file's close, so it holds every
+    ``parse_us`` interval. A failed or speculative attempt's report never
+    reaches the driver, so its file is an orphan that no snapshot lists
+    (``IceTable.expire_snapshots`` deletes it).
     """
-    def lineage_tap(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def parquet_sink(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         fold = PartitionLineage()
         t0 = time.perf_counter()
+        path = writer = None
         for rb in it:
+            if not rb.num_rows:
+                continue
+            if writer is None:
+                path = data_file(data_dir, snapshot_id)
+                writer = pq.ParquetWriter(path, rb.schema)
+            writer.write_batch(rb)
             fold.add(rb)
-            yield rb
+        if writer is None:
+            return
+        writer.close()
         pid = TaskContext.get().partitionId()
-        row = fold.row(pid, total=time.perf_counter() - t0)
-        if row is not None:
-            rows.add({pid: row})
+        rows.add({pid: (path, fold.row(pid, total=time.perf_counter() - t0))})
+        yield from ()
 
-    return lineage_tap
+    return parquet_sink
 
 
 def partition_lineage(results: DataFrame) -> DataFrame:

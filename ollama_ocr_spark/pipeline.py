@@ -6,24 +6,29 @@
     append + lineage/metrics append (S9/S10), both anchored to one
     snapshot id (resume correctness, SURVEY §7.3.4).
 
-``run_extract`` reads the corpus once: the results append is its only
-pass over the data, and the kernel's ``mapInArrow`` is its only Python
-stage. Its statistics ride along on that write instead of re-reading the
-data. ``docs_in`` is an ``Observation`` count on the dedup output (one
-row per url). Each extract task folds its partition's lineage row in the
-kernel's own Python worker, as the result batches stream out
-(``maintenance.lineage_tap``, a ``map_rows`` tap), and reports it through
-a partition-keyed accumulator, so ``docs_extracted`` is the sum of the
-rows' ``doc_count``. The driver then writes those few rows to the
-metrics table as one parquet file, with no Spark job. Into empty tables
-the run is two Spark jobs: scan → exchange, then kernel + lineage fold +
-results write.
+``run_extract`` reads the corpus once, and the kernel's ``mapInArrow``
+is its only Python stage. The results never go back through the JVM:
+each extract task writes its own result batches with ``pyarrow.parquet``
+into the results table's ``data/`` directory, in the kernel's own Python
+worker (``maintenance.parquet_sink``, a ``map_rows`` tap that yields no
+batches, so the action is a ``noop`` write). As the batches stream out
+the task folds its partition's lineage row, and it reports the row with
+its file's path through a partition-keyed accumulator. The driver then
+publishes exactly the reported files as the new results snapshot
+(``IceTable.commit``) and writes the lineage rows to the metrics table
+as one parquet file, with no Spark job; ``docs_extracted`` is the sum of
+the rows' ``doc_count``. A failed or speculative task attempt's file is
+never reported, so no snapshot lists it; ``IceTable.expire_snapshots``
+deletes such orphans. ``docs_in`` is an ``Observation`` count on the
+dedup output (one row per url). Into empty tables the run is two Spark
+jobs: scan → exchange, then kernel + lineage fold + file write.
 
 Designed for a 1000-executor cluster; in-sandbox it runs on local[N].
 """
 
 from __future__ import annotations
 
+import os
 import time
 from dataclasses import dataclass
 
@@ -37,11 +42,11 @@ from .operators.maintenance import (
     LINEAGE_SCHEMA,
     RowsByPartition,
     latest_pages,
-    lineage_tap,
+    parquet_sink,
     partition_lineage,
     resume_anti_join,
 )
-from .sources.icetbl import IceTable
+from .sources.icetbl import IceTable, files_of
 
 
 @dataclass
@@ -65,14 +70,16 @@ def repair_metrics(spark: SparkSession, results_tbl: IceTable,
     bytes_in / checksum are content-derived and therefore identical
     (``stage_secs.total`` copies ``parse``: no kernel ran).
 
-    Covered, so never backfilled: a snapshot that has metrics rows, one
-    whose log is gone (expired), a compaction (``replace``: its rows were
-    already counted when appended) and one whose new files hold no rows
-    (an idle re-run). The covered ids and the row counts are read from
-    parquet on the driver, with no Spark job.
+    Covered, so never backfilled: a snapshot that has metrics rows, a
+    compaction (``replace``: its rows were already counted when appended)
+    and one whose new files hold no rows (an idle re-run). A snapshot
+    whose log is gone (expired) is known by the current snapshot's
+    ``part-<sid>-`` files, and by its ``compaction`` id if it was one. The
+    covered ids and the row counts are read from parquet on the driver,
+    with no Spark job.
     """
-    last_results = results_tbl.current_snapshot_id()
-    if last_results is None:
+    current = results_tbl.snapshot()
+    if current is None:
         return []
     covered: set[int] = set()
     metrics_snap = metrics_tbl.snapshot()
@@ -81,13 +88,14 @@ def repair_metrics(spark: SparkSession, results_tbl: IceTable,
             covered.update(pq.read_table(
                 f, columns=["snapshot_id"]).column(0).to_pylist())
     repaired = []
-    for sid in range(1, last_results + 1):
-        if sid in covered:
+    for sid in range(1, current.snapshot_id + 1):
+        if sid in covered or sid == current.compaction:
             continue
         snap = results_tbl.snapshot(sid)
-        if snap is None or snap.operation == "replace":
+        if snap is not None and snap.operation == "replace":
             continue
-        new_files = snap.added_files()
+        new_files = (files_of(current.files, sid) if snap is None
+                     else snap.added_files())
         if sum(pq.read_metadata(f).num_rows for f in new_files) == 0:
             continue
         lineage = partition_lineage(spark.read.parquet(*new_files)).toArrow()
@@ -113,7 +121,9 @@ def run_extract(
     Re-running after a crash is safe: documents whose urls are already in
     the committed results snapshot are anti-joined away, and the
     results/metrics appends are published atomically (icetbl snapshot),
-    so a half-written run is invisible to the next attempt.
+    so a half-written run is invisible to the next attempt. A run that
+    extracts nothing publishes a results snapshot with no new file and no
+    metrics snapshot.
     """
     t0 = time.monotonic()
 
@@ -127,13 +137,22 @@ def run_extract(
     deduped = latest_pages(pages, num_partitions).observe(
         docs_in, F.count(F.lit(1)).alias("docs"))
 
-    done = results_tbl.read(spark)
+    # The resume reads the new snapshot's parent, so a writer that commits
+    # in between makes ours fail (ConcurrentCommitError) instead of
+    # slipping past the anti-join.
+    parent = results_tbl.current_snapshot_id()
+    done = results_tbl.read(spark, parent) if parent else None
     todo = resume_anti_join(deduped, done) if done is not None else deduped
 
-    lineage = spark.sparkContext.accumulator({}, RowsByPartition())
-    snapshot_id = results_tbl.append(extract_stage(todo, lineage_tap(lineage)))
+    snapshot_id = (parent or 0) + 1
+    reported = spark.sparkContext.accumulator({}, RowsByPartition())
+    sink = parquet_sink(reported, os.path.abspath(results_tbl.data_dir),
+                        snapshot_id)
+    extract_stage(todo, sink).write.format("noop").mode("overwrite").save()
+    parts = [reported.value[pid] for pid in sorted(reported.value)]
+    results_tbl.commit(snapshot_id, [path for path, _ in parts])
 
-    rows = sorted(lineage.value.values(), key=lambda r: r["partition_id"])
+    rows = [row for _, row in parts]
     if rows:
         metrics_tbl.append(_with_snapshot_id(
             pa.Table.from_pylist(rows, schema=LINEAGE_SCHEMA), snapshot_id))

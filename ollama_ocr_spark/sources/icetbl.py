@@ -5,7 +5,7 @@ provides the three semantics the pipeline relies on, with the same shape as
 Iceberg's so a production deployment swaps in ``df.writeTo(tbl).append()``:
 
 - **atomic append commits**: data files land under ``data/``, then a new
-  snapshot JSON is published with ``os.rename`` (atomic on POSIX) into
+  snapshot JSON is published with ``os.link`` (atomic on POSIX) into
   ``_log/v{N}.json`` listing *all* live files. Readers never see a
   half-commit.
 - **snapshot reads**: ``read(spark)`` reads the latest committed snapshot;
@@ -19,7 +19,18 @@ Layout::
       data/part-<snapshot>-<uuid>.parquet ...
       _log/v1.json  v2.json ...   # {"snapshot_id": N, "parent": N-1,
                                   #  "operation": "append"|"replace",
-                                  #  "files": [...]}
+                                  #  "compaction": K|null, "files": [...]}
+
+Who writes the data files: :meth:`IceTable.append` writes a
+``pyarrow.Table`` on the driver and a DataFrame with a Spark parquet
+write (through a staging dir), then commits them. ``run_extract``'s
+extract tasks write their own files from the kernel's Python worker
+(``maintenance.parquet_sink``), and the driver commits exactly the paths
+the tasks reported with :meth:`IceTable.commit`; nothing lists ``data/``
+to find a commit's files. Either way a file is named for the snapshot it
+is written for (:func:`data_file`), and a writer that crashes, or a
+failed or speculative task attempt, leaves ``part-<sid>-`` files that no
+snapshot lists: orphans, which :meth:`IceTable.expire_snapshots` deletes.
 
 This is deliberately a *table format*, not a query engine feature — all
 reads go through ``spark.read.parquet(files...)`` so Catalyst still does
@@ -53,13 +64,26 @@ class Snapshot:
     # Iceberg's snapshot operation: "append" adds rows, "replace" (a
     # compaction) rewrites existing rows into new files.
     operation: str = "append"
+    # The compaction snapshot whose rewritten files this one still lists,
+    # so they are known as rewrites after that snapshot's log expired.
+    compaction: int | None = None
 
     def added_files(self) -> list[str]:
-        """The files this snapshot wrote (named by ``IceTable._data_file``),
+        """The files this snapshot wrote (named by :func:`data_file`),
         known without its parent, which may be expired."""
-        prefix = f"part-{self.snapshot_id}-"
-        return [f for f in self.files
-                if os.path.basename(f).startswith(prefix)]
+        return files_of(self.files, self.snapshot_id)
+
+
+def data_file(data_dir: str, sid: int) -> str:
+    """A new data file path for snapshot ``sid``:
+    ``<data_dir>/part-<sid>-<uuid>.parquet``."""
+    return os.path.join(data_dir, f"part-{sid}-{uuid.uuid4().hex}.parquet")
+
+
+def files_of(files: list[str], sid: int) -> list[str]:
+    """The paths in ``files`` that were written for snapshot ``sid``."""
+    prefix = f"part-{sid}-"
+    return [f for f in files if os.path.basename(f).startswith(prefix)]
 
 
 class IceTable:
@@ -93,7 +117,8 @@ class IceTable:
         except FileNotFoundError:  # expired snapshot
             return None
         return Snapshot(payload["snapshot_id"], payload.get("parent"),
-                        payload["files"], payload.get("operation", "append"))
+                        payload["files"], payload.get("operation", "append"),
+                        payload.get("compaction"))
 
     # -- write path ----------------------------------------------------------
     def append(self, df: DataFrame | pa.Table) -> int:
@@ -103,21 +128,32 @@ class IceTable:
         by ``pyarrow.parquet`` on the driver, with no Spark job."""
         parent = self.snapshot()
         new_sid = (parent.snapshot_id + 1) if parent else 1
-        files = (parent.files if parent else []) + self._write_files(df, new_sid)
-        self._publish(new_sid, parent.snapshot_id if parent else None, files)
-        return new_sid
+        return self.commit(new_sid, self._write_files(df, new_sid))
 
-    def _data_file(self, new_sid: int) -> str:
-        return os.path.join(self.data_dir,
-                            f"part-{new_sid}-{uuid.uuid4().hex}.parquet")
+    def commit(self, new_sid: int, files: list[str]) -> int:
+        """Publish snapshot ``new_sid``: its parent ``new_sid - 1``'s files
+        plus ``files``, already written for ``new_sid`` (named by
+        :func:`data_file`). ``files`` may be empty: the snapshot then adds
+        no rows. Raises :class:`ConcurrentCommitError` when another writer
+        published ``new_sid`` first, or the parent's log is gone (another
+        writer moved on and expired it). Returns ``new_sid``."""
+        parent = self.snapshot(new_sid - 1) if new_sid > 1 else None
+        if new_sid > 1 and parent is None:
+            raise ConcurrentCommitError(
+                f"parent snapshot v{new_sid - 1} is gone; re-read the table "
+                "and retry the append")
+        self._publish(new_sid, parent.snapshot_id if parent else None,
+                      (parent.files if parent else []) + files,
+                      compaction=parent.compaction if parent else None)
+        return new_sid
 
     def _write_files(self, df: DataFrame | pa.Table, new_sid: int
                      ) -> list[str]:
         """Write df into ``data/`` as ``part-<new_sid>-<uuid>.parquet``
         files (a Spark write goes through a staging dir); returns their
-        paths. No snapshot lists them until :meth:`_publish`."""
+        paths. No snapshot lists them until :meth:`commit`."""
         if isinstance(df, pa.Table):
-            final = self._data_file(new_sid)
+            final = data_file(self.data_dir, new_sid)
             pq.write_table(df, final)
             return [final]
         staging = os.path.join(self.data_dir, f"_stage-{uuid.uuid4().hex}")
@@ -126,7 +162,7 @@ class IceTable:
         for name in sorted(os.listdir(staging)):
             if not name.endswith(".parquet"):
                 continue
-            final = self._data_file(new_sid)
+            final = data_file(self.data_dir, new_sid)
             os.rename(os.path.join(staging, name), final)
             new_files.append(final)
         # best-effort cleanup of the staging dir's marker files
@@ -136,7 +172,8 @@ class IceTable:
         return new_files
 
     def _publish(self, new_sid: int, parent_sid: int | None,
-                 files: list[str], operation: str = "append") -> None:
+                 files: list[str], operation: str = "append",
+                 compaction: int | None = None) -> None:
         """Atomically publish snapshot ``new_sid`` listing ``files``.
 
         Atomic CREATE, not rename: os.rename silently REPLACES an existing
@@ -149,7 +186,8 @@ class IceTable:
         with open(tmp, "w") as fh:
             json.dump(
                 {"snapshot_id": new_sid, "parent": parent_sid,
-                 "operation": operation, "files": files},
+                 "operation": operation, "compaction": compaction,
+                 "files": files},
                 fh,
             )
         try:
@@ -186,14 +224,15 @@ class IceTable:
         df = spark.read.parquet(*snap.files).coalesce(target_files)
         new_sid = snap.snapshot_id + 1
         self._publish(new_sid, snap.snapshot_id,
-                      self._write_files(df, new_sid), operation="replace")
+                      self._write_files(df, new_sid), operation="replace",
+                      compaction=new_sid)
         return new_sid
 
     def expire_snapshots(self, keep_last: int = 1) -> list[str]:
         """Drop all but the newest ``keep_last`` snapshots and delete data
         files no live snapshot references (Iceberg ``expire_snapshots``).
         That includes orphans: ``part-<sid>-`` files a crashed writer left
-        between :meth:`_write_files` and :meth:`_publish`. Only orphans
+        before its commit, or a failed or speculative task attempt wrote. Only orphans
         with ``sid`` <= the current id go, since a higher ``sid`` may
         belong to a writer still in flight. Returns the deleted file
         paths."""

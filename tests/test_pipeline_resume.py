@@ -360,12 +360,30 @@ def _arrow_nodes(spark, jobs):
     return found
 
 
+def _plan_node_names(spark, first_execution):
+    """The node names of the executed plan of every SQL execution with an
+    id from ``first_execution`` on."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    found = []
+    for i in range(execs.size()):
+        e = execs.apply(i)
+        if e.executionId() < first_execution:
+            continue
+        nodes = store.planGraph(e.executionId()).allNodes()
+        found += [nodes.apply(k).name() for k in range(nodes.size())]
+    return found
+
+
 def test_run_extract_makes_one_pass(spark, documents_smoke, tmp_path,
                                     monkeypatch):
     """Into empty tables: scan→exchange, then kernel + lineage fold +
-    results write. No cache, no recount, no metrics job, and the kernel's
-    ``mapInArrow`` is the only Python stage of the write."""
-    from pyspark.sql import DataFrame
+    file write in the kernel's worker. No cache, no recount, no metrics
+    job, the kernel's ``mapInArrow`` is the only Python stage, and no
+    Spark file write runs: the results never go back through the JVM."""
+    import os
+
+    from pyspark.sql import DataFrame, DataFrameWriter
 
     persisted = []
     monkeypatch.setattr(DataFrame, "persist",
@@ -375,9 +393,16 @@ def test_run_extract_makes_one_pass(spark, documents_smoke, tmp_path,
     synthesize_stage(documents_smoke.filter("doc_id < 100")).write.parquet(
         str(tmp_path / "pages"))
     pages = spark.read.parquet(str(tmp_path / "pages"))
+    spark_writes = []
+    monkeypatch.setattr(DataFrameWriter, "parquet",
+                        lambda self, path, *a, **k: spark_writes.append(path))
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    first_execution = 1 + max((execs.apply(i).executionId()
+                               for i in range(execs.size())), default=-1)
+    results_tbl = IceTable(str(tmp_path / "r"))
     sc.setJobGroup("run_extract_one_pass", "run_extract into empty tables")
     try:
-        stats = run_extract(spark, pages, IceTable(str(tmp_path / "r")),
+        stats = run_extract(spark, pages, results_tbl,
                             IceTable(str(tmp_path / "m")))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
@@ -389,13 +414,23 @@ def test_run_extract_makes_one_pass(spark, documents_smoke, tmp_path,
     arrow = [descs for descs in _arrow_nodes(spark, jobs) if descs]
     assert len(arrow) == 1 and len(arrow[0]) == 1, arrow
     assert arrow[0][0].startswith("MapInArrow _extract_row("), arrow
+    # no Spark file write: no staging dir, no Hadoop write command
+    assert spark_writes == []
+    names = _plan_node_names(spark, first_execution)
+    assert any("MapInArrow" in n for n in names), names
+    assert not any("InsertIntoHadoopFsRelationCommand" in n
+                   for n in names), names
+    on_disk = os.listdir(results_tbl.data_dir)
+    assert not [n for n in on_disk if n.startswith("_stage-")], on_disk
+    assert sorted(on_disk) == sorted(
+        os.path.basename(f) for f in results_tbl.snapshot(1).added_files())
 
 
 def test_idle_reruns_leave_the_metrics_table_alone(spark, documents_smoke,
                                                    tmp_path):
-    """A run with nothing left to extract commits an empty results
-    snapshot; neither it nor a later run's repair adds a metrics snapshot
-    for it."""
+    """A run with nothing left to extract commits a results snapshot that
+    adds no data file; neither it nor a later run's repair adds a metrics
+    snapshot for it."""
     results_tbl = IceTable(str(tmp_path / "results"))
     metrics_tbl = IceTable(str(tmp_path / "metrics"))
     pages = synthesize_stage(documents_smoke.filter("doc_id < 50"))
@@ -405,6 +440,8 @@ def test_idle_reruns_leave_the_metrics_table_alone(spark, documents_smoke,
         assert run_extract(spark, pages, results_tbl,
                            metrics_tbl).docs_extracted == 0
     assert results_tbl.current_snapshot_id() == 5
+    for sid in range(2, 6):
+        assert results_tbl.snapshot(sid).added_files() == []
     assert metrics_tbl.current_snapshot_id() == 1
     assert len(metrics_tbl.snapshot().files) == 1
     assert metrics_tbl.read(spark).agg(F.sum("doc_count")).first()[0] == 50
@@ -466,9 +503,10 @@ pages = spark.read.parquet({str(tmp_path / "pages")!r})
 for name, empty in (("local", spark.createDataFrame([], PAGES_SCHEMA)),
                     ("filtered", pages.filter("url = ''")),
                     ("limit0", pages.limit(0))):
-    s = run_extract(spark, empty, IceTable({str(tmp_path)!r} + "/r-" + name),
+    results = IceTable({str(tmp_path)!r} + "/r-" + name)
+    s = run_extract(spark, empty, results,
                     IceTable({str(tmp_path)!r} + "/m-" + name))
-    print(name, s.docs_in, s.docs_extracted)
+    print(name, s.docs_in, s.docs_extracted, results.read(spark) is None)
 """
     synthesize_stage(documents_smoke.limit(20)).write.parquet(
         str(tmp_path / "pages"))
@@ -476,8 +514,10 @@ for name, empty in (("local", spark.createDataFrame([], PAGES_SCHEMA)),
     proc = subprocess.run([sys.executable, "-c", code], capture_output=True,
                           text=True, timeout=240, env=env)
     assert proc.returncode == 0, proc.stderr[-2000:]
-    assert proc.stdout.split() == ["local", "0", "0", "filtered", "0", "0",
-                                   "limit0", "0", "0"]
+    # an empty table that gained no rows still reads as None
+    assert proc.stdout.split() == ["local", "0", "0", "True",
+                                   "filtered", "0", "0", "True",
+                                   "limit0", "0", "0", "True"]
 
 
 def _one_run_then_idle(spark, documents_smoke, tmp_path, idle_runs):
@@ -558,3 +598,178 @@ def test_idle_rerun_job_count(spark, documents_smoke, tmp_path):
     assert stats.docs_extracted == 0
     jobs = sc.statusTracker().getJobIdsForGroup("idle_rerun")
     assert len(jobs) <= 5, sorted(jobs)  # 8 when repair read the metrics
+
+
+def test_repair_backfills_a_snapshot_whose_log_expired(
+        spark, documents_smoke, tmp_path):
+    """Two results appends lose their metrics rows, then the first one's
+    log expires. Its ``part-<sid>-`` files are still live in the current
+    snapshot, so the next run backfills them too."""
+    from ollama_ocr_spark.operators.extract import extract_stage
+    from ollama_ocr_spark.operators.maintenance import latest_pages
+    from ollama_ocr_spark.pipeline import repair_metrics
+
+    results_tbl = IceTable(str(tmp_path / "results"))
+    metrics_tbl = IceTable(str(tmp_path / "metrics"))
+    for cond in ("doc_id < 40", "doc_id >= 40 AND doc_id < 60"):
+        results_tbl.append(extract_stage(latest_pages(synthesize_stage(
+            documents_smoke.filter(cond)))))
+    results_tbl.expire_snapshots(keep_last=1)
+    assert results_tbl.snapshot(1) is None
+    assert repair_metrics(spark, results_tbl, metrics_tbl) == [1, 2]
+
+    s = run_extract(spark, synthesize_stage(documents_smoke.filter(
+        "doc_id < 100")), results_tbl, metrics_tbl)
+    assert s.docs_extracted == 40
+    assert results_tbl.read(spark).count() == 100
+    metrics = metrics_tbl.read(spark)
+    assert metrics.agg(F.sum("doc_count")).first()[0] == 100
+    by_sid = {r.snapshot_id: r.n for r in metrics.groupBy("snapshot_id").agg(
+        F.sum("doc_count").alias("n")).collect()}
+    assert by_sid == {1: 40, 2: 20, s.snapshot_id: 40}
+
+
+def test_repair_counts_an_expired_compaction_as_covered(
+        spark, documents_smoke, tmp_path):
+    """A compaction's log expires while its rewritten files stay live;
+    the snapshots after it carry its id, so repair still knows those
+    files hold rows that were counted when appended."""
+    results_tbl, metrics_tbl, pages = _one_run_then_idle(
+        spark, documents_smoke, tmp_path, idle_runs=0)
+    sid = results_tbl.compact(spark)
+    assert run_extract(spark, pages, results_tbl,
+                       metrics_tbl).docs_extracted == 0
+    results_tbl.expire_snapshots(keep_last=1)
+    assert results_tbl.snapshot(sid) is None
+    assert results_tbl.snapshot().compaction == sid
+    assert run_extract(spark, pages, results_tbl,
+                       metrics_tbl).docs_extracted == 0
+    _assert_metrics_untouched(spark, metrics_tbl)
+
+
+def test_results_table_mixes_spark_and_sink_files(spark, documents_smoke,
+                                                  tmp_path):
+    """A results table holding Spark-written files (a crashed
+    ``append(df)``) and files the extract tasks wrote with pyarrow reads
+    back with the ``EXTRACT_SCHEMA`` types and the same rows as a table
+    written by the sink alone, resumes against both, and compacts to the
+    same rows."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    from ollama_ocr_spark.operators.extract import EXTRACT_SCHEMA, extract_stage
+    from ollama_ocr_spark.operators.maintenance import latest_pages
+
+    def by_url(df):
+        return {r.url: r.asDict() for r in df.drop("parse_us").collect()}
+
+    results_tbl = IceTable(str(tmp_path / "results"))
+    metrics_tbl = IceTable(str(tmp_path / "metrics"))
+    results_tbl.append(extract_stage(latest_pages(synthesize_stage(
+        documents_smoke.filter("doc_id < 40")))))  # metrics append lost
+    pages = synthesize_stage(documents_smoke.filter("doc_id < 100"))
+    assert run_extract(spark, pages, results_tbl,
+                       metrics_tbl).docs_extracted == 60
+    spark_file, sink_file = (results_tbl.snapshot(sid).added_files()[0]
+                             for sid in (1, 2))
+    spark_meta = b"org.apache.spark.sql.parquet.row.metadata"
+    assert spark_meta in pq.read_metadata(spark_file).metadata
+    assert spark_meta not in (pq.read_metadata(sink_file).metadata or {})
+
+    mixed = results_tbl.read(spark)
+    assert [(f.name, f.dataType) for f in mixed.schema] == [
+        (f.name, f.dataType) for f in StructType.fromDDL(EXTRACT_SCHEMA)]
+    clean_tbl = IceTable(str(tmp_path / "clean"))
+    run_extract(spark, pages, clean_tbl, IceTable(str(tmp_path / "cm")))
+    want = by_url(clean_tbl.read(spark))
+    assert len(want) == 100 and by_url(mixed) == want
+
+    more = synthesize_stage(documents_smoke.filter("doc_id < 120"))
+    assert run_extract(spark, more, results_tbl,
+                       metrics_tbl).docs_extracted == 20
+    resumed = results_tbl.read(spark)
+    assert resumed.count() == resumed.select("url").distinct().count() == 120
+    assert metrics_tbl.read(spark).agg(F.sum("doc_count")).first()[0] == 120
+
+    before = {r.url: r.asDict() for r in resumed.collect()}
+    results_tbl.compact(spark)
+    compacted = results_tbl.read(spark)
+    assert [(f.name, f.dataType) for f in compacted.schema] == [
+        (f.name, f.dataType) for f in resumed.schema]
+    assert {r.url: r.asDict() for r in compacted.collect()} == before
+
+
+def test_failed_task_attempt_leaves_an_unlisted_orphan(documents_smoke,
+                                                       tmp_path):
+    """At local[2,2] one extract task attempt fails after closing its
+    file and the retry succeeds. The failed attempt's file is in no
+    snapshot, results and metrics equal a clean run's, and
+    ``expire_snapshots`` deletes the orphan."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = f"""
+import json, os, sys
+sys.path.insert(0, {root!r})
+from pyspark import TaskContext
+from ollama_ocr_spark import pipeline
+from ollama_ocr_spark.operators import maintenance
+from ollama_ocr_spark.session import get_spark
+from ollama_ocr_spark.sources.icetbl import IceTable
+
+spark = get_spark(master="local[2,2]", shuffle_partitions=2)
+pages = spark.read.parquet({str(tmp_path / "pages")!r})
+
+def flaky_sink(rows, data_dir, snapshot_id):
+    sink = maintenance.parquet_sink(rows, data_dir, snapshot_id)
+    def flaky(it):
+        yield from sink(it)
+        ctx = TaskContext.get()
+        if ctx.partitionId() == 0 and ctx.attemptNumber() == 0:
+            raise RuntimeError("attempt fails after closing its file")
+    return flaky
+
+def run(name):
+    results = IceTable({str(tmp_path)!r} + "/r-" + name)
+    metrics = IceTable({str(tmp_path)!r} + "/m-" + name)
+    s = pipeline.run_extract(spark, pages, results, metrics)
+    rows = sorted((r.url, r.warc_ts.isoformat(), r.lang, r.bytes_in, r.engine,
+                   r.text, r.chars, r.pages, r.doc_type, r.error)
+                  for r in results.read(spark).collect())
+    lineage = sorted((r.partition_id, r.doc_count, r.bytes_in, r.checksum,
+                      r.snapshot_id) for r in metrics.read(spark).collect())
+    return results, s, rows, lineage
+
+_, clean_stats, clean_rows, clean_lineage = run("clean")
+pipeline.parquet_sink = flaky_sink
+results, stats, rows, lineage = run("flaky")
+live = {{os.path.basename(f) for f in results.snapshot().files}}
+on_disk = set(os.listdir(results.data_dir))
+deleted = results.expire_snapshots(keep_last=1)
+print(json.dumps({{
+    "clean": [clean_stats.docs_in, clean_stats.docs_extracted],
+    "flaky": [stats.docs_in, stats.docs_extracted],
+    "same_rows": rows == clean_rows, "n_rows": len(rows),
+    "same_lineage": lineage == clean_lineage,
+    "orphans": sorted(on_disk - live),
+    "deleted": sorted(os.path.basename(f) for f in deleted),
+    "after": sorted(os.listdir(results.data_dir)) == sorted(live),
+}}))
+"""
+    synthesize_stage(documents_smoke.filter("doc_id < 60")).write.parquet(
+        str(tmp_path / "pages"))
+    env = dict(os.environ, SPARK_DRIVER_MEM="1g")
+    proc = subprocess.run([sys.executable, "-c", code], capture_output=True,
+                          text=True, timeout=300, env=env)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert out["clean"] == out["flaky"] == [60, 60], out
+    assert out["same_rows"] and out["n_rows"] == 60, out
+    assert out["same_lineage"], out
+    assert len(out["orphans"]) == 1, out
+    assert out["orphans"][0].startswith("part-1-"), out
+    assert out["deleted"] == out["orphans"], out
+    assert out["after"], out

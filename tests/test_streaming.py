@@ -701,11 +701,25 @@ def test_commit_replay_over_mixed_state_log(spark, tmp_path, twin):
     to after it mixes files with and without the column. Replaying a
     batch over such a log must write exactly the delta rows of a run
     that was stamped from the start: legacy rows stay prior state, and
-    the replay still cannot see its own state rows."""
+    the replay still cannot see its own state rows. Both runs must also
+    agree with the batch operator over all three batches, so a replay
+    window that both runs get wrong in the same way still fails."""
+    from collections import Counter
+
+    from ollama_ocr_spark.operators.reports import (
+        event_transitions,
+        interevent_histogram,
+    )
     from ollama_ocr_spark.streaming import incremental as inc
 
-    spec = {"transitions": inc._TRANSITIONS,
-            "interevent": inc._INTEREVENT}[twin]
+    spec, batch_op, reader, key, value = {
+        "transitions": (inc._TRANSITIONS, event_transitions,
+                        inc.read_transition_matrix,
+                        ("from_type", "to_type"), "n_transitions"),
+        "interevent": (inc._INTEREVENT, interevent_histogram,
+                       inc.read_interevent_histogram,
+                       ("event_type", "bucket"), "n_gaps"),
+    }[twin]
 
     def commit(batch_df, batch_id, out, state):
         inc._carried_commit(spark, batch_df, batch_id, out, state, *spec)
@@ -721,7 +735,11 @@ def test_commit_replay_over_mixed_state_log(spark, tmp_path, twin):
         [(1, 7, "a", 2000 * us), (3, 8, "c", 9 * us), (4, 10, "a", 60 * us)],
         cols)
 
-    def run(root: str, legacy: bool) -> list[tuple]:
+    def counts(df) -> Counter:
+        return Counter({tuple(r[k] for k in key): r[value]
+                        for r in df.collect()})
+
+    def run(root: str, legacy: bool) -> tuple[list[tuple], Counter]:
         out = IceTable(str(tmp_path / root / "out"))
         state = IceTable(str(tmp_path / root / "state"))
         if legacy:  # batch 0 was committed before stamping existed
@@ -732,9 +750,15 @@ def test_commit_replay_over_mixed_state_log(spark, tmp_path, twin):
         commit(b2, 2, out, state)
         commit(b2, 2, out, state)  # replay after the state append
         rows = out.read(spark).filter("batch_id >= 1")
-        return sorted(tuple(r) for r in rows.select(sorted(rows.columns))
-                      .collect())
+        return (sorted(tuple(r) for r in rows.select(sorted(rows.columns))
+                       .collect()),
+                counts(reader(spark, out)))
 
-    clean = run("clean", legacy=False)
-    assert run("mixed", legacy=True) == clean
+    clean, clean_view = run("clean", legacy=False)
+    mixed, mixed_view = run("mixed", legacy=True)
+    assert mixed == clean
     assert {r[0] for r in clean} == {1, 2}  # both batches wrote deltas
+    want = counts(batch_op(b0.unionByName(b1).unionByName(b2)))
+    assert clean_view == want
+    # the legacy run never wrote batch 0's deltas
+    assert mixed_view + counts(batch_op(b0)) == want
