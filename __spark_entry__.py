@@ -3419,12 +3419,7 @@ mr{b} AS (
         rows.append(f"SELECT * FROM mr{b}")
     return f"""
             WITH {_SHINGLES_CTE}, {_JPAIRS_CTES},
-            sig AS (
-              SELECT doc_id, g.j AS j,
-                     min(md5(g.j || '|' || shingle)) AS m
-              FROM sh, generate_series(0, 7) AS g(j)
-              GROUP BY doc_id, g.j
-            ),
+            {_MINHASH_SIG_CTE},
             jtr AS (
               SELECT a, b FROM inter
               JOIN sizes sa ON sa.doc_id = a
@@ -3678,22 +3673,14 @@ tpairs AS (
 
 def _stationary_oracle(iterations: int = 3) -> str:
     """DuckDB twin of reports.event_stationary: the host_pagerank oracle
-    recipe ((1.0-0.85)/n per-term doubles, iterations unrolled as
-    chained CTEs) over the event-TYPE graph with self-transitions kept;
-    empirical share divides by the window total cast back to BIGINT
-    (DuckDB window sums widen to HUGEINT)."""
-    steps = []
-    for i in range(1, iterations + 1):
-        steps.append(f"""
-r{i} AS (
-  SELECT t.event_type,
-         (SELECT (1.0::DOUBLE - 0.85::DOUBLE) / n FROM nn) +
-         coalesce(sum(r.rank * w.wfrac * 0.85::DOUBLE), 0.0::DOUBLE) AS rank
-  FROM types t
-  LEFT JOIN wf w ON w.to_type = t.event_type
-  LEFT JOIN r{i - 1} r ON r.event_type = w.from_type
-  GROUP BY t.event_type
-)""")
+    recipe (_damped_rank_steps with the (1.0-0.85)/n teleport) over the
+    event-TYPE graph with self-transitions kept; empirical share divides
+    by the window total cast back to BIGINT (DuckDB window sums widen to
+    HUGEINT)."""
+    steps = _damped_rank_steps(
+        "r", "types", "event_type", "from_type", "to_type",
+        "(SELECT (1.0::DOUBLE - 0.85::DOUBLE) / n FROM nn)", iterations,
+    )
     return f"""
 WITH {_TPAIRS_CTES},
 types AS (SELECT DISTINCT event_type FROM events),
@@ -3710,7 +3697,7 @@ wf AS (SELECT p.from_type, p.to_type,
        FROM tpairs p JOIN ofrom o USING (from_type)),
 r0 AS (SELECT event_type, (SELECT 1.0::DOUBLE / n FROM nn) AS rank
        FROM types),
-{", ".join(steps)}
+{steps}
 SELECT r.event_type, round(r.rank, 6) AS stationary_p,
        round(s.sh, 6) AS empirical_share
 FROM r{iterations} r JOIN share s USING (event_type)
@@ -3842,42 +3829,70 @@ SELECT host, hops FROM d{max_hops}
 """
 
 
-def _pagerank_ctes(iterations: int = 3) -> str:
-    """The host_pagerank CTE chain (everything up to r{iterations}),
-    shared by the host_pagerank oracle and the convergence-delta
-    composite. Identical per-term double arithmetic ((1.0 - 0.85)/n
-    teleport — NOT the literal 0.15, which is a different double),
-    iterations unrolled as chained CTEs (recursive CTE terms cannot
-    aggregate). Each r{i} references r{i-1} exactly ONCE — linear, so
-    no MATERIALIZED needed (the _kcore_oracle fan-out rule)."""
-    steps = []
-    for i in range(1, iterations + 1):
-        steps.append(f"""
-r{i} AS (
-  SELECT h.host,
-         (SELECT (1.0::DOUBLE - 0.85::DOUBLE) / n FROM nn) +
+def _damped_rank_steps(prefix: str, nodes: str, key: str, src: str,
+                       dst: str, tele: str, iterations: int,
+                       by: tuple[str, ...] = ()) -> str:
+    """The unrolled rounds of the damped power method shared by the
+    pagerank, trustrank and event_stationary oracles:
+    ``{prefix}{i}(key, rank)`` for i = 1..iterations, each
+
+        tele + coalesce(sum(rank_{i-1} * wfrac * 0.85), 0.0)
+
+    over every row of ``nodes`` (a node with no in-edge keeps only
+    ``tele``). Reads ``wf(src, dst, wfrac)`` and ``{prefix}0``; ``tele``
+    is the caller's SQL (node columns it reads are named ``v.<col>`` and
+    listed in ``by``), so each oracle keeps its own double expression
+    tree. Iterations are chained CTEs (recursive CTE terms cannot
+    aggregate); each round references the previous one exactly ONCE —
+    linear, so no MATERIALIZED needed (the _kcore_oracle fan-out
+    rule)."""
+    group = ", ".join(f"v.{c}" for c in (key, *by))
+    return ",".join(f"""
+{prefix}{i} AS (
+  SELECT v.{key},
+         {tele} +
          coalesce(sum(r.rank * w.wfrac * 0.85::DOUBLE), 0.0::DOUBLE) AS rank
-  FROM hosts h
-  LEFT JOIN wf w ON w.dst_host = h.host
-  LEFT JOIN r{i - 1} r ON r.host = w.src_host
-  GROUP BY h.host
-)""")
-    return f"""
-WITH {_EDGES_CTES},
+  FROM {nodes} v
+  LEFT JOIN wf w ON w.{dst} = v.{key}
+  LEFT JOIN {prefix}{i - 1} r ON r.{key} = w.{src}
+  GROUP BY {group}
+)""" for i in range(1, iterations + 1))
+
+
+# Host graph of the pagerank/trustrank oracles (mirrors
+# linkgraph._host_fractions): self-edges dropped, every host that keeps
+# an edge, each edge's share of its source's out-weight. Requires
+# _EDGES_CTES before it.
+_HOST_WF_CTES = """
 ce AS (SELECT * FROM edges WHERE src_host <> dst_host),
 hosts AS (
   SELECT DISTINCT host FROM (
     SELECT src_host AS host FROM ce
     UNION ALL SELECT dst_host FROM ce)
 ),
-nn AS (SELECT count(*) AS n FROM hosts),
 deg AS (SELECT src_host, sum(n_links) AS out_w FROM ce GROUP BY 1),
 wf AS (
   SELECT e.src_host, e.dst_host, e.n_links / d.out_w AS wfrac
   FROM ce e JOIN deg d USING (src_host)
-),
+)
+"""
+
+
+def _pagerank_ctes(iterations: int = 3) -> str:
+    """The host_pagerank CTE chain (everything up to r{iterations}),
+    shared by the host_pagerank oracle and the convergence-delta
+    composite. Identical per-term double arithmetic ((1.0 - 0.85)/n
+    teleport — NOT the literal 0.15, which is a different double)."""
+    steps = _damped_rank_steps(
+        "r", "hosts", "host", "src_host", "dst_host",
+        "(SELECT (1.0::DOUBLE - 0.85::DOUBLE) / n FROM nn)", iterations,
+    )
+    return f"""
+WITH {_EDGES_CTES},
+{_HOST_WF_CTES},
+nn AS (SELECT count(*) AS n FROM hosts),
 r0 AS (SELECT host, (SELECT 1.0::DOUBLE / n FROM nn) AS rank FROM hosts),
-{",".join(steps)}
+{steps}
 """
 
 
@@ -3947,31 +3962,29 @@ def _hits_oracle(iterations: int = 2) -> str:
     scalar-max subqueries reference each one three times, and DuckDB's
     CTE inlining would otherwise copy the chain ~3^(2·iterations) times
     (the _kcore_oracle optimizer-hang lesson)."""
+
+    def half_step(out: str, prev: str, val: str, at: str, to: str) -> str:
+        # Σ of ``prev``'s ``val`` at the ``at`` end per ``to`` end,
+        # rescaled by its max; ends at {out}(host, {out[0]})
+        v = out[0]
+        return f"""
+{out}s AS (SELECT e.{to} AS host, sum(x.{val}) AS s
+          FROM ce e JOIN {prev} x ON x.host = e.{at} GROUP BY 1),
+{out}r AS MATERIALIZED (SELECT h.host, coalesce(x.s, 0.0::DOUBLE) AS {v}
+          FROM hosts h LEFT JOIN {out}s x USING (host)),
+{out}m AS (SELECT max({v}) AS m FROM {out}r),
+{out} AS MATERIALIZED (SELECT host,
+                CASE WHEN (SELECT m FROM {out}m) > 0
+                     THEN {v} / (SELECT m FROM {out}m)
+                     ELSE 0.0::DOUBLE END AS {v}
+         FROM {out}r)"""
+
     steps = []
-    prev_a = "a0"
     for i in range(1, iterations + 1):
-        steps.append(f"""
-h{i}s AS (SELECT e.src_host AS host, sum(a.a) AS s
-          FROM ce e JOIN {prev_a} a ON a.host = e.dst_host GROUP BY 1),
-h{i}r AS MATERIALIZED (SELECT h.host, coalesce(x.s, 0.0::DOUBLE) AS h
-          FROM hosts h LEFT JOIN h{i}s x USING (host)),
-h{i}m AS (SELECT max(h) AS m FROM h{i}r),
-h{i} AS MATERIALIZED (SELECT host,
-                CASE WHEN (SELECT m FROM h{i}m) > 0
-                     THEN h / (SELECT m FROM h{i}m)
-                     ELSE 0.0::DOUBLE END AS h
-         FROM h{i}r),
-a{i}s AS (SELECT e.dst_host AS host, sum(x.h) AS s
-          FROM ce e JOIN h{i} x ON x.host = e.src_host GROUP BY 1),
-a{i}r AS MATERIALIZED (SELECT h.host, coalesce(x.s, 0.0::DOUBLE) AS a
-          FROM hosts h LEFT JOIN a{i}s x USING (host)),
-a{i}m AS (SELECT max(a) AS m FROM a{i}r),
-a{i} AS MATERIALIZED (SELECT host,
-                CASE WHEN (SELECT m FROM a{i}m) > 0
-                     THEN a / (SELECT m FROM a{i}m)
-                     ELSE 0.0::DOUBLE END AS a
-         FROM a{i}r)""")
-        prev_a = f"a{i}"
+        steps.append(half_step(f"h{i}", f"a{i - 1}", "a", "dst_host",
+                               "src_host"))
+        steps.append(half_step(f"a{i}", f"h{i}", "h", "src_host",
+                               "dst_host"))
     return f"""
 WITH {_EDGES_CTES},
 ce AS MATERIALIZED (SELECT DISTINCT src_host, dst_host FROM edges
@@ -4096,30 +4109,17 @@ _QUAR_CTES = _build_quar_ctes()
 def _trustrank_ctes(iterations: int = 3) -> str:
     """TrustRank CTE chain (mirrors linkgraph.host_trustrank:
     seed-restricted teleport (1.0 - 0.85) * seed, seed = 1/|S∩hosts|,
-    iterations unrolled — identical per-term double arithmetic).
-    Requires _EDGES_CTES before it; ends at
+    iterations unrolled by _damped_rank_steps — identical per-term
+    double arithmetic). Requires _EDGES_CTES before it; ends at
     ``ttr(host, trust)`` with trust 6dp-rounded. Shared by
     host_trustrank and the crawl_priority composite."""
     seeds_sql = "('h0.example.com', 'h1.example.com')"
-    steps = []
-    for i in range(1, iterations + 1):
-        steps.append(f"""
-t{i} AS (
-  SELECT s.host,
-         (1.0::DOUBLE - 0.85::DOUBLE) * s.seed +
-         coalesce(sum(r.rank * w.wfrac * 0.85::DOUBLE), 0.0::DOUBLE) AS rank
-  FROM s0 s
-  LEFT JOIN wf w ON w.dst_host = s.host
-  LEFT JOIN t{i - 1} r ON r.host = w.src_host
-  GROUP BY s.host, s.seed
-)""")
+    steps = _damped_rank_steps(
+        "t", "s0", "host", "src_host", "dst_host",
+        "(1.0::DOUBLE - 0.85::DOUBLE) * v.seed", iterations, by=("seed",),
+    )
     return f"""
-ce AS (SELECT * FROM edges WHERE src_host <> dst_host),
-hosts AS (
-  SELECT DISTINCT host FROM (
-    SELECT src_host AS host FROM ce
-    UNION ALL SELECT dst_host FROM ce)
-),
+{_HOST_WF_CTES},
 sn AS (SELECT count(*) AS ns FROM hosts WHERE host IN {seeds_sql}),
 s0 AS (
   SELECT host,
@@ -4127,13 +4127,8 @@ s0 AS (
               THEN 1.0::DOUBLE / (SELECT ns FROM sn)
               ELSE 0.0::DOUBLE END AS seed
   FROM hosts),
-deg AS (SELECT src_host, sum(n_links) AS out_w FROM ce GROUP BY 1),
-wf AS (
-  SELECT e.src_host, e.dst_host, e.n_links / d.out_w AS wfrac
-  FROM ce e JOIN deg d USING (src_host)
-),
 t0 AS (SELECT host, seed AS rank FROM s0),
-{",".join(steps)},
+{steps},
 ttr AS (SELECT host, round(rank, 6) AS trust FROM t{iterations})
 """
 
@@ -4280,25 +4275,31 @@ sh AS (
 )
 """
 
-# MinHash-LSH candidate pairs -> recursive transitive closure -> component
-# labels (mirrors dedup.minhash_lsh_candidates + dedup_components); requires
-# _SHINGLES_CTE before it and WITH RECURSIVE on the statement.
-# Signatures -> band buckets -> candidate pairs (mirrors
-# dedup.minhash_signatures / band_buckets / minhash_lsh_candidates);
-# requires _SHINGLES_CTE before it. The transitive-closure suffix below
-# extends it to component labels.
-_LSH_PAIRS_CTES = """
+# MinHash signatures: 8 md5-min rows per doc (mirrors
+# dedup.minhash_signatures); requires _SHINGLES_CTE before it.
+_MINHASH_SIG_CTE = """
 sig AS (
   SELECT doc_id, g.j AS j,
          min(md5(g.j || '|' || shingle)) AS m
   FROM sh, generate_series(0, 7) AS g(j)
   GROUP BY doc_id, g.j
-),
+)
+"""
+
+# ... -> 4 band buckets of 2 rows each, band BIGINT (mirrors
+# dedup.band_buckets).
+_MINHASH_BANDS_CTES = _MINHASH_SIG_CTE + """,
 bands AS (
   SELECT doc_id, j // 2 AS band,
          md5(string_agg(m, '' ORDER BY j)) AS bucket
   FROM sig GROUP BY doc_id, j // 2
-),
+)
+"""
+
+# ... -> candidate pairs (mirrors dedup.minhash_lsh_candidates). The
+# transitive-closure suffix below extends it to component labels
+# (dedup_components); that one needs WITH RECURSIVE on the statement.
+_LSH_PAIRS_CTES = _MINHASH_BANDS_CTES + """,
 pairs AS (
   SELECT DISTINCT a.doc_id AS a, b.doc_id AS b
   FROM bands a JOIN bands b
@@ -4320,24 +4321,17 @@ reach(node, r) AS (
 comp AS (SELECT node, min(r) AS label FROM reach GROUP BY node)
 """
 
-# Exact-dup/quality/repetition gates -> per-doc verdict (mirrors
-# textstats.curation_verdict); requires _SHINGLES_CTE's `w` before it.
-_VERDICT_CTES = """
-keepfp AS (
-  SELECT md5(text) AS fp, min(doc_id) AS keeper
-  FROM documents GROUP BY 1),
-q AS (
-  SELECT w.doc_id, w.w,
-         len(w.w) AS n_words,
-         round((length(d.text) - (len(w.w) - 1)) * 1.0
-               / len(w.w), 4) AS mean_wl,
-         round(len(list_filter(w.w, x -> x IN
-               ('the','a','of','to','and','in','is')))
-               * 1.0 / len(w.w), 4) AS stop_ratio
-  FROM w JOIN documents d ON d.doc_id = w.doc_id),
+
+def _repeat_ctes(src: str) -> str:
+    """Per-doc repetition inputs over ``src(doc_id, w)`` (w = the
+    space-split words): ``top(doc_id, topc)``, the most frequent word's
+    count, and ``kg(doc_id, gs)``, the word-4-gram list (empty under 5
+    words). Shared by the repetition_stats, filter_attribution and
+    curation-gate oracles."""
+    return f"""
 counts AS (
   SELECT doc_id, count(*) AS c
-  FROM (SELECT doc_id, unnest(w) AS word FROM w)
+  FROM (SELECT doc_id, unnest(w) AS word FROM {src})
   GROUP BY doc_id, word),
 top AS (SELECT doc_id, max(c) AS topc FROM counts GROUP BY 1),
 kg AS (
@@ -4346,7 +4340,16 @@ kg AS (
               THEN list_transform(range(1, len(w) - 3),
                    i -> array_to_string(w[i : i + 4], ' '))
               ELSE [] END AS gs
-  FROM w),
+  FROM {src})
+"""
+
+
+def _gate_ctes(src: str) -> str:
+    """Quality and repetition gates (mirrors textstats.curation_verdict):
+    _repeat_ctes over ``src`` -> ``flags(doc_id, quality_ok,
+    repetition_ok)``. Requires ``q(doc_id, w, n_words, mean_wl,
+    stop_ratio)`` before it."""
+    return _repeat_ctes(src) + """,
 flags AS (
   SELECT q.doc_id,
          (q.n_words >= 10 AND q.mean_wl >= 2.0
@@ -4361,7 +4364,26 @@ flags AS (
                ELSE 0.0 END) <= 0.6) AS repetition_ok
   FROM q
   JOIN top t ON t.doc_id = q.doc_id
-  JOIN kg k ON k.doc_id = q.doc_id),
+  JOIN kg k ON k.doc_id = q.doc_id)
+"""
+
+
+# Exact-dup/quality/repetition gates -> per-doc verdict (mirrors
+# textstats.curation_verdict); requires _SHINGLES_CTE's `w` before it.
+_VERDICT_CTES = f"""
+keepfp AS (
+  SELECT md5(text) AS fp, min(doc_id) AS keeper
+  FROM documents GROUP BY 1),
+q AS (
+  SELECT w.doc_id, w.w,
+         len(w.w) AS n_words,
+         round((length(d.text) - (len(w.w) - 1)) * 1.0
+               / len(w.w), 4) AS mean_wl,
+         round(len(list_filter(w.w, x -> x IN
+               ('the','a','of','to','and','in','is')))
+               * 1.0 / len(w.w), 4) AS stop_ratio
+  FROM w JOIN documents d ON d.doc_id = w.doc_id),
+{_gate_ctes('w')},
 verdict AS (
   SELECT d.doc_id,
          CASE WHEN d.doc_id <> kk.keeper THEN 'duplicate'
@@ -4442,23 +4464,10 @@ def oracle_sql() -> dict[str, str]:
                      AS tvd
             FROM sh
         """,
-        "filter_attribution": """
+        "filter_attribution": f"""
             WITH w AS (SELECT doc_id, text, string_split(text, ' ') AS w
                        FROM documents),
-            counts AS (
-              SELECT doc_id, count(*) AS c
-              FROM (SELECT doc_id, unnest(w) AS word FROM w)
-              GROUP BY doc_id, word
-            ),
-            top AS (SELECT doc_id, max(c) AS topc FROM counts GROUP BY 1),
-            kg AS (
-              SELECT doc_id,
-                     CASE WHEN len(w) >= 5
-                          THEN list_transform(range(1, len(w) - 3),
-                               i -> array_to_string(w[i : i + 4], ' '))
-                          ELSE [] END AS gs
-              FROM w
-            ),
+            {_repeat_ctes('w')},
             keepers AS (SELECT md5(text) AS fp, min(doc_id) AS keeper
                         FROM documents GROUP BY 1),
             feat AS (
@@ -5883,23 +5892,10 @@ def oracle_sql() -> dict[str, str]:
         """,
         "minhash_lsh_candidates": f"""
             WITH {_SHINGLES_CTE},
-            sig AS (
-              SELECT doc_id, g.j AS j,
-                     min(md5(g.j || '|' || shingle)) AS m
-              FROM sh, generate_series(0, 7) AS g(j)
-              GROUP BY doc_id, g.j
-            ),
-            bands AS (
-              SELECT doc_id, j // 2 AS band,
-                     md5(string_agg(m, '' ORDER BY j)) AS bucket
-              FROM sig GROUP BY doc_id, j // 2
-            )
-            SELECT DISTINCT a.doc_id AS a, b.doc_id AS b
-            FROM bands a JOIN bands b
-              ON a.band = b.band AND a.bucket = b.bucket
-              AND a.doc_id < b.doc_id
+            {_LSH_PAIRS_CTES}
+            SELECT a, b FROM pairs
         """,
-        "training_batches": """
+        "training_batches": f"""
             WITH keep0 AS (
               SELECT md5(text) AS fp, min(doc_id) AS keeper
               FROM documents GROUP BY 1),
@@ -5914,33 +5910,7 @@ def oracle_sql() -> dict[str, str]:
                            ('the','a','of','to','and','in','is')))
                            * 1.0 / len(w), 4) AS stop_ratio
               FROM w),
-            counts AS (
-              SELECT doc_id, count(*) AS c
-              FROM (SELECT doc_id, unnest(w) AS word FROM w)
-              GROUP BY doc_id, word),
-            top AS (SELECT doc_id, max(c) AS topc FROM counts GROUP BY 1),
-            kg AS (
-              SELECT doc_id,
-                     CASE WHEN len(w) >= 5
-                          THEN list_transform(range(1, len(w) - 3),
-                               i -> array_to_string(w[i : i + 4], ' '))
-                          ELSE [] END AS gs
-              FROM w),
-            flags AS (
-              SELECT q.doc_id,
-                     (q.n_words >= 10 AND q.mean_wl >= 2.0
-                      AND q.mean_wl <= 12.0 AND q.stop_ratio >= 0.01)
-                       AS quality_ok,
-                     (round(len(list_distinct(q.w)) * 1.0 / q.n_words, 4)
-                        >= 0.2
-                      AND round(t.topc * 1.0 / q.n_words, 4) <= 0.3
-                      AND (CASE WHEN len(k.gs) > 0
-                           THEN round(1 - len(list_distinct(k.gs)) * 1.0
-                                      / len(k.gs), 4)
-                           ELSE 0.0 END) <= 0.6) AS repetition_ok
-              FROM q
-              JOIN top t ON t.doc_id = q.doc_id
-              JOIN kg k ON k.doc_id = q.doc_id),
+            {_gate_ctes('w')},
             kept AS (
               SELECT d.doc_id
               FROM documents d
@@ -5970,17 +5940,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         "cross_corpus_dedup": f"""
             WITH {_SHINGLES_CTE},
-            sig AS (
-              SELECT doc_id, g.j AS j,
-                     min(md5(g.j || '|' || shingle)) AS m
-              FROM sh, generate_series(0, 7) AS g(j)
-              GROUP BY doc_id, g.j
-            ),
-            bands AS (
-              SELECT doc_id, j // 2 AS band,
-                     md5(string_agg(m, '' ORDER BY j)) AS bucket
-              FROM sig GROUP BY doc_id, j // 2
-            ),
+            {_MINHASH_BANDS_CTES},
             pairs AS (
               SELECT DISTINCT n.doc_id AS k, r.doc_id AS ref
               FROM bands n JOIN bands r
@@ -6043,33 +6003,7 @@ def oracle_sql() -> dict[str, str]:
                            ('the','a','of','to','and','in','is')))
                            * 1.0 / len(w), 4) AS stop_ratio
               FROM w),
-            counts AS (
-              SELECT doc_id, count(*) AS c
-              FROM (SELECT doc_id, unnest(w) AS word FROM w)
-              GROUP BY doc_id, word),
-            top AS (SELECT doc_id, max(c) AS topc FROM counts GROUP BY 1),
-            kg AS (
-              SELECT doc_id,
-                     CASE WHEN len(w) >= 5
-                          THEN list_transform(range(1, len(w) - 3),
-                               i -> array_to_string(w[i : i + 4], ' '))
-                          ELSE [] END AS gs
-              FROM w),
-            flags AS (
-              SELECT q.doc_id,
-                     (q.n_words >= 10 AND q.mean_wl >= 2.0
-                      AND q.mean_wl <= 12.0 AND q.stop_ratio >= 0.01)
-                       AS quality_ok,
-                     (round(len(list_distinct(q.w)) * 1.0 / q.n_words, 4)
-                        >= 0.2
-                      AND round(t.topc * 1.0 / q.n_words, 4) <= 0.3
-                      AND (CASE WHEN len(k.gs) > 0
-                           THEN round(1 - len(list_distinct(k.gs)) * 1.0
-                                      / len(k.gs), 4)
-                           ELSE 0.0 END) <= 0.6) AS repetition_ok
-              FROM q
-              JOIN top t ON t.doc_id = q.doc_id
-              JOIN kg k ON k.doc_id = q.doc_id),
+            {_gate_ctes('w')},
             verdict AS (
               SELECT b.doc_id,
                      CASE WHEN b.doc_id <> kk.keeper THEN 'duplicate'
@@ -6083,17 +6017,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         "curate_corpus_incremental": f"""
             WITH {_SHINGLES_CTE},
-            sig AS (
-              SELECT doc_id, g.j AS j,
-                     min(md5(g.j || '|' || shingle)) AS m
-              FROM sh, generate_series(0, 7) AS g(j)
-              GROUP BY doc_id, g.j
-            ),
-            bands AS (
-              SELECT doc_id, j // 2 AS band,
-                     md5(string_agg(m, '' ORDER BY j)) AS bucket
-              FROM sig GROUP BY doc_id, j // 2
-            ),
+            {_MINHASH_BANDS_CTES},
             pairs AS (
               SELECT DISTINCT n.doc_id AS k, r.doc_id AS ref
               FROM bands n JOIN bands r
@@ -6120,33 +6044,7 @@ def oracle_sql() -> dict[str, str]:
                            ('the','a','of','to','and','in','is')))
                            * 1.0 / len(w), 4) AS stop_ratio
               FROM bw),
-            counts AS (
-              SELECT doc_id, count(*) AS c
-              FROM (SELECT doc_id, unnest(w) AS word FROM bw)
-              GROUP BY doc_id, word),
-            top AS (SELECT doc_id, max(c) AS topc FROM counts GROUP BY 1),
-            kg AS (
-              SELECT doc_id,
-                     CASE WHEN len(w) >= 5
-                          THEN list_transform(range(1, len(w) - 3),
-                               i -> array_to_string(w[i : i + 4], ' '))
-                          ELSE [] END AS gs
-              FROM bw),
-            flags AS (
-              SELECT q.doc_id,
-                     (q.n_words >= 10 AND q.mean_wl >= 2.0
-                      AND q.mean_wl <= 12.0 AND q.stop_ratio >= 0.01)
-                       AS quality_ok,
-                     (round(len(list_distinct(q.w)) * 1.0 / q.n_words, 4)
-                        >= 0.2
-                      AND round(t.topc * 1.0 / q.n_words, 4) <= 0.3
-                      AND (CASE WHEN len(k.gs) > 0
-                           THEN round(1 - len(list_distinct(k.gs)) * 1.0
-                                      / len(k.gs), 4)
-                           ELSE 0.0 END) <= 0.6) AS repetition_ok
-              FROM q
-              JOIN top t ON t.doc_id = q.doc_id
-              JOIN kg k ON k.doc_id = q.doc_id),
+            {_gate_ctes('bw')},
             verdict AS (
               SELECT b.doc_id,
                      CASE WHEN b.doc_id <> kk.keeper THEN 'duplicate'
@@ -6223,19 +6121,10 @@ def oracle_sql() -> dict[str, str]:
         """,
         "lsh_bucket_histogram": f"""
             WITH {_SHINGLES_CTE},
-            sig AS (
-              SELECT doc_id, g.j AS j,
-                     min(md5(g.j || '|' || shingle)) AS m
-              FROM sh, generate_series(0, 7) AS g(j)
-              GROUP BY doc_id, g.j
-            ),
-            bands AS (
-              SELECT doc_id, (j // 2)::INT AS band,
-                     md5(string_agg(m, '' ORDER BY j)) AS bucket
-              FROM sig GROUP BY doc_id, j // 2
-            ),
+            {_MINHASH_BANDS_CTES},
             sizes AS (
-              SELECT band, bucket, count(*) AS n FROM bands GROUP BY 1, 2
+              SELECT band::INT AS band, bucket, count(*) AS n
+              FROM bands GROUP BY 1, 2
             )
             SELECT band,
                    CASE WHEN n <= 1 THEN '1' WHEN n <= 2 THEN '2'
@@ -6249,23 +6138,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         "split_leakage": f"""
             WITH {_SHINGLES_CTE},
-            sig AS (
-              SELECT doc_id, g.j AS j,
-                     min(md5(g.j || '|' || shingle)) AS m
-              FROM sh, generate_series(0, 7) AS g(j)
-              GROUP BY doc_id, g.j
-            ),
-            bands AS (
-              SELECT doc_id, j // 2 AS band,
-                     md5(string_agg(m, '' ORDER BY j)) AS bucket
-              FROM sig GROUP BY doc_id, j // 2
-            ),
-            pairs AS (
-              SELECT DISTINCT a.doc_id AS a, b.doc_id AS b
-              FROM bands a JOIN bands b
-                ON a.band = b.band AND a.bucket = b.bucket
-                AND a.doc_id < b.doc_id
-            ),
+            {_LSH_PAIRS_CTES},
             sp AS (
               SELECT doc_id,
                      CASE WHEN substr(md5(doc_id::VARCHAR), 1, 4) < 'e666'
@@ -6586,23 +6459,10 @@ def oracle_sql() -> dict[str, str]:
                    rk IS NULL AS allowed
             FROM m
         """,
-        "repetition_stats": """
+        "repetition_stats": f"""
             WITH w AS (SELECT doc_id, string_split(text, ' ') AS w
                        FROM documents),
-            counts AS (
-              SELECT doc_id, count(*) AS c
-              FROM (SELECT doc_id, unnest(w) AS word FROM w)
-              GROUP BY doc_id, word
-            ),
-            top AS (SELECT doc_id, max(c) AS topc FROM counts GROUP BY 1),
-            kg AS (
-              SELECT doc_id,
-                     CASE WHEN len(w) >= 5
-                          THEN list_transform(range(1, len(w) - 3),
-                               i -> array_to_string(w[i : i + 4], ' '))
-                          ELSE [] END AS gs
-              FROM w
-            ),
+            {_repeat_ctes('w')},
             r AS (
               SELECT w.doc_id, len(w.w) AS n_words,
                      round(len(list_distinct(w.w)) * 1.0 / len(w.w), 4)
@@ -7544,33 +7404,7 @@ FROM n, (VALUES (1, 'append', 1, 1, 0, 0),
         # histogram; singletons from count arithmetic.
         "dedup_cluster_sizes": f"""
             WITH RECURSIVE {_SHINGLES_CTE},
-            sig AS (
-              SELECT doc_id, g.j AS j,
-                     min(md5(g.j || '|' || shingle)) AS m
-              FROM sh, generate_series(0, 7) AS g(j)
-              GROUP BY doc_id, g.j
-            ),
-            bands AS (
-              SELECT doc_id, j // 2 AS band,
-                     md5(string_agg(m, '' ORDER BY j)) AS bucket
-              FROM sig GROUP BY doc_id, j // 2
-            ),
-            pairs AS (
-              SELECT DISTINCT a.doc_id AS a, b.doc_id AS b
-              FROM bands a JOIN bands b
-                ON a.band = b.band AND a.bucket = b.bucket
-                AND a.doc_id < b.doc_id
-            ),
-            edges AS (
-              SELECT a AS src, b AS dst FROM pairs
-              UNION
-              SELECT b AS src, a AS dst FROM pairs),
-            reach(node, r) AS (
-              SELECT src AS node, src AS r FROM edges
-              UNION
-              SELECT e.dst AS node, reach.r
-              FROM reach JOIN edges e ON reach.node = e.src),
-            comp AS (SELECT node, min(r) AS label FROM reach GROUP BY node),
+            {_LSH_COMP_CTES},
             sizes AS (
               SELECT label, count(*) AS cluster_size FROM comp
               GROUP BY label),
@@ -8114,33 +7948,7 @@ FROM n, (VALUES (1, 'append', 1, 1, 0, 0),
         # curate_corpus CTE chain) -> per-cluster longest-doc keeper.
         "dedup_representatives": f"""
             WITH RECURSIVE {_SHINGLES_CTE},
-            sig AS (
-              SELECT doc_id, g.j AS j,
-                     min(md5(g.j || '|' || shingle)) AS m
-              FROM sh, generate_series(0, 7) AS g(j)
-              GROUP BY doc_id, g.j
-            ),
-            bands AS (
-              SELECT doc_id, j // 2 AS band,
-                     md5(string_agg(m, '' ORDER BY j)) AS bucket
-              FROM sig GROUP BY doc_id, j // 2
-            ),
-            pairs AS (
-              SELECT DISTINCT a.doc_id AS a, b.doc_id AS b
-              FROM bands a JOIN bands b
-                ON a.band = b.band AND a.bucket = b.bucket
-                AND a.doc_id < b.doc_id
-            ),
-            edges AS (
-              SELECT a AS src, b AS dst FROM pairs
-              UNION
-              SELECT b AS src, a AS dst FROM pairs),
-            reach(node, r) AS (
-              SELECT src AS node, src AS r FROM edges
-              UNION
-              SELECT e.dst AS node, reach.r
-              FROM reach JOIN edges e ON reach.node = e.src),
-            comp AS (SELECT node, min(r) AS label FROM reach GROUP BY node),
+            {_LSH_COMP_CTES},
             mem AS (
               SELECT c.label AS cluster, d.doc_id,
                      len(string_split(d.text, ' ')) AS n_tokens
@@ -8162,17 +7970,7 @@ FROM n, (VALUES (1, 'append', 1, 1, 0, 0),
         # cap as ngram_jaccard_pairs) scored against the banded LSH
         # candidate set.
         "lsh_precision_eval": f"""
-            WITH {_SHINGLES_CTE},
-            sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-            ok AS (SELECT shingle FROM sh GROUP BY 1
-                   HAVING count(*) BETWEEN 2 AND 1000),
-            inter AS (
-              SELECT a.doc_id AS a, b.doc_id AS b, count(*) AS inter
-              FROM sh a JOIN sh b
-                ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-              JOIN ok ON ok.shingle = a.shingle
-              GROUP BY 1, 2
-            ),
+            WITH {_SHINGLES_CTE}, {_JPAIRS_CTES}, {_LSH_PAIRS_CTES},
             jac AS (
               SELECT a, b,
                      round(inter * 1.0 / (sa.n + sb.n - inter), 4) AS jaccard
@@ -8181,27 +7979,10 @@ FROM n, (VALUES (1, 'append', 1, 1, 0, 0),
               JOIN sizes sb ON sb.doc_id = b
             ),
             truth AS (SELECT a, b FROM jac WHERE jaccard >= 0.5),
-            sig AS (
-              SELECT doc_id, g.j AS j,
-                     min(md5(g.j || '|' || shingle)) AS m
-              FROM sh, generate_series(0, 7) AS g(j)
-              GROUP BY doc_id, g.j
-            ),
-            bands AS (
-              SELECT doc_id, j // 2 AS band,
-                     md5(string_agg(m, '' ORDER BY j)) AS bucket
-              FROM sig GROUP BY doc_id, j // 2
-            ),
-            cand AS (
-              SELECT DISTINCT a.doc_id AS a, b.doc_id AS b
-              FROM bands a JOIN bands b
-                ON a.band = b.band AND a.bucket = b.bucket
-                AND a.doc_id < b.doc_id
-            ),
             m AS (
-              SELECT (SELECT count(*) FROM cand) AS n_candidates,
+              SELECT (SELECT count(*) FROM pairs) AS n_candidates,
                      (SELECT count(*) FROM truth) AS n_true_pairs,
-                     (SELECT count(*) FROM cand JOIN truth USING (a, b))
+                     (SELECT count(*) FROM pairs JOIN truth USING (a, b))
                        AS n_hits
             )
             SELECT 0.5::DOUBLE AS threshold,

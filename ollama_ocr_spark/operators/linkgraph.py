@@ -19,11 +19,19 @@ Scale shape:
   AQE broadcast threshold for all but the very largest graphs; each
   iteration is lineage-truncated with `localCheckpoint` (same pattern as
   `dedup.dedup_components`).
+
+Round loops: `damped_rank` is the one damped power method, shared by
+`host_pagerank`, `host_trustrank` (both over `_host_fractions`) and
+`reports.event_stationary`; each passes its own teleport expression.
+`host_hits` has one local half-step. `host_communities`, `host_kcore`
+and `host_seed_distance` keep their own loops: their rounds share only
+the `localCheckpoint` cut, so a generic message-passing helper would
+take the whole round body from each caller.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .maintenance import host_expr
@@ -83,22 +91,48 @@ def outlink_edges(pages: DataFrame, drop_self: bool = False) -> DataFrame:
     return edges
 
 
-def host_pagerank(edges: DataFrame, iterations: int = 3,
-                  damping: float = 0.85) -> DataFrame:
-    """Weighted host PageRank over an (src_host, dst_host, n_links) edge
-    list: fixed-iteration power method
+def damped_rank(wf: DataFrame, nodes: DataFrame, key: str, src: str,
+                dst: str, tele: Column, init: Column, iterations: int,
+                damping: float) -> DataFrame:
+    """Fixed-iteration damped power method over a weighted edge list —
+    the one round loop behind :func:`host_pagerank`,
+    :func:`host_trustrank` and ``reports.event_stationary``:
 
-        r_{i+1}(h) = (1-d)/N + d * Σ_incoming r_i(src) * w / out_w(src)
+        r_0(v) = init(v);  r_{i+1}(v) = tele(v) + Σ_{u→v} r_i(u) * wfrac * d
 
-    Self-edges are dropped; dangling hosts keep only the teleport term
-    (leaked mass is NOT redistributed — the standard simplification, and
-    the oracle mirrors it exactly). Output rank is rounded to 6dp; the
-    only engine-order-sensitive op is the small per-host incoming sum
-    (in-degree-bounded), which 6dp rounding absorbs.
-
-    The two scalar `count` actions run on the tiny host table, not the
-    corpus.
+    ``wf`` holds (src, dst, wfrac) and ``nodes`` holds ``key`` plus any
+    column ``tele``/``init`` read. A node with no incoming edge keeps
+    only its teleport term; leaked (dangling) mass is not redistributed.
+    The caller owns the teleport expression, so each operator keeps its
+    own FP expression tree. Every round is one join + partial agg over
+    the node table, lineage cut by ``localCheckpoint``. Output: (key,
+    rank), unrounded.
     """
+    ranks = nodes.select(key, init.alias("rank"))
+    for _ in range(iterations):
+        incoming = (
+            wf.join(ranks, wf[src] == ranks[key])
+            .select(
+                F.col(dst).alias(key),
+                (F.col("rank") * F.col("wfrac") * F.lit(damping)).alias("t"),
+            )
+            .groupBy(key)
+            .agg(F.sum("t").alias("s"))
+        )
+        ranks = (
+            nodes.join(incoming, key, "left")
+            .select(
+                key, (tele + F.coalesce(F.col("s"), F.lit(0.0))).alias("rank"),
+            )
+            .localCheckpoint(eager=True)
+        )
+    return ranks
+
+
+def _host_fractions(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(hosts, wf) for the damped ranks: self-edges dropped, every host
+    that keeps an edge, and each edge's share ``wfrac`` of its source's
+    out-weight. Both are host-table sized and checkpointed."""
     ce = edges.filter(F.col("src_host") != F.col("dst_host"))
     hosts = (
         ce.select(F.col("src_host").alias("host"))
@@ -106,11 +140,6 @@ def host_pagerank(edges: DataFrame, iterations: int = 3,
         .distinct()
         .localCheckpoint(eager=True)
     )
-    n = hosts.count()
-    if n == 0:
-        return hosts.withColumn("rank", F.lit(0.0))
-    teleport = (1.0 - damping) / n
-
     out_w = ce.groupBy("src_host").agg(F.sum("n_links").alias("out_w"))
     wf = (
         ce.join(out_w, "src_host")
@@ -120,26 +149,33 @@ def host_pagerank(edges: DataFrame, iterations: int = 3,
         )
         .localCheckpoint(eager=True)
     )
+    return hosts, wf
 
-    ranks = hosts.select("host", F.lit(1.0 / n).alias("rank"))
-    for _ in range(iterations):
-        incoming = (
-            wf.join(ranks, wf.src_host == ranks.host)
-            .select(
-                F.col("dst_host").alias("host"),
-                (F.col("rank") * F.col("wfrac") * F.lit(damping)).alias("t"),
-            )
-            .groupBy("host")
-            .agg(F.sum("t").alias("s"))
-        )
-        ranks = (
-            hosts.join(incoming, "host", "left")
-            .select(
-                "host",
-                (F.lit(teleport) + F.coalesce(F.col("s"), F.lit(0.0))).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
+
+def host_pagerank(edges: DataFrame, iterations: int = 3,
+                  damping: float = 0.85) -> DataFrame:
+    """Weighted host PageRank over an (src_host, dst_host, n_links) edge
+    list: fixed-iteration power method (:func:`damped_rank`)
+
+        r_{i+1}(h) = (1-d)/N + d * Σ_incoming r_i(src) * w / out_w(src)
+
+    Self-edges are dropped; dangling hosts keep only the teleport term
+    (leaked mass is NOT redistributed — the standard simplification, and
+    the oracle mirrors it exactly). Output rank is rounded to 6dp; the
+    only engine-order-sensitive op is the small per-host incoming sum
+    (in-degree-bounded), which 6dp rounding absorbs.
+
+    The scalar `count` action runs on the tiny host table, not the
+    corpus.
+    """
+    hosts, wf = _host_fractions(edges)
+    n = hosts.count()
+    if n == 0:
+        return hosts.withColumn("rank", F.lit(0.0))
+    ranks = damped_rank(
+        wf, hosts, "host", "src_host", "dst_host",
+        F.lit((1.0 - damping) / n), F.lit(1.0 / n), iterations, damping,
+    )
     return ranks.select("host", F.round(F.col("rank"), 6).alias("rank"))
 
 
@@ -157,18 +193,12 @@ def host_trustrank(edges: DataFrame, seeds: list[str],
     The crawl-frontier use: prioritize/keep hosts by trust, not raw
     in-link mass.
 
-    Same execution shape as :func:`host_pagerank`: fixed-iteration loop
-    over the HOST table (never the corpus), localCheckpoint per round,
-    dangling mass not redistributed, 6dp rounding absorbs the small
-    in-degree-bounded sum's engine order. Output: (host, trust).
+    Same edge weights and round loop (:func:`damped_rank`) as
+    :func:`host_pagerank`: fixed iterations over the HOST table (never
+    the corpus), dangling mass not redistributed, 6dp rounding absorbs
+    the small in-degree-bounded sum's engine order. Output: (host, trust).
     """
-    ce = edges.filter(F.col("src_host") != F.col("dst_host"))
-    hosts = (
-        ce.select(F.col("src_host").alias("host"))
-        .union(ce.select(F.col("dst_host").alias("host")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    hosts, wf = _host_fractions(edges)
     in_seed = F.col("host").isin(list(seeds))
     ns = hosts.filter(in_seed).count()
     if ns == 0:
@@ -177,39 +207,11 @@ def host_trustrank(edges: DataFrame, seeds: list[str],
         "host",
         F.when(in_seed, F.lit(1.0 / ns)).otherwise(F.lit(0.0)).alias("seed"),
     ).localCheckpoint(eager=True)
-
-    out_w = ce.groupBy("src_host").agg(F.sum("n_links").alias("out_w"))
-    wf = (
-        ce.join(out_w, "src_host")
-        .select(
-            "src_host", "dst_host",
-            (F.col("n_links") / F.col("out_w")).alias("wfrac"),
-        )
-        .localCheckpoint(eager=True)
+    trust = damped_rank(
+        wf, seedv, "host", "src_host", "dst_host",
+        F.lit(1.0 - damping) * F.col("seed"), F.col("seed"),
+        iterations, damping,
     )
-
-    trust = seedv.select("host", F.col("seed").alias("rank"))
-    for _ in range(iterations):
-        incoming = (
-            wf.join(trust, wf.src_host == trust.host)
-            .select(
-                F.col("dst_host").alias("host"),
-                (F.col("rank") * F.col("wfrac") * F.lit(damping)).alias("t"),
-            )
-            .groupBy("host")
-            .agg(F.sum("t").alias("s"))
-        )
-        trust = (
-            seedv.join(incoming, "host", "left")
-            .select(
-                "host",
-                (
-                    F.lit(1.0 - damping) * F.col("seed")
-                    + F.coalesce(F.col("s"), F.lit(0.0))
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
     return trust.select("host", F.round(F.col("rank"), 6).alias("trust"))
 
 
@@ -978,47 +980,34 @@ def host_hits(edges: DataFrame, iterations: int = 2) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=True)
     )
+
+    def half_step(vec, val, at, to, out):
+        # Σ of the ``at`` end's ``val`` per ``to`` end, rescaled by its max
+        s = (
+            ce.join(vec, ce[at] == vec.host)
+            .groupBy(F.col(to).alias("host"))
+            .agg(F.sum(val).alias("s"))
+        )
+        v = (
+            hosts.join(s, "host", "left")
+            .select("host", F.coalesce("s", F.lit(0.0)).alias(out))
+        )
+        vmax = v.agg(F.max(out).alias("m"))
+        return (
+            v.crossJoin(F.broadcast(vmax))
+            .select(
+                "host",
+                F.when(F.col("m") > 0, F.col(out) / F.col("m"))
+                .otherwise(F.lit(0.0)).alias(out),
+            )
+            .localCheckpoint(eager=True)
+        )
+
     auth = hosts.select("host", F.lit(1.0).alias("a"))
     hub = hosts.select("host", F.lit(1.0).alias("h"))
     for _ in range(iterations):
-        hsum = (
-            ce.join(auth, ce.dst_host == auth.host)
-            .groupBy(F.col("src_host").alias("host"))
-            .agg(F.sum("a").alias("s"))
-        )
-        hub = (
-            hosts.join(hsum, "host", "left")
-            .select("host", F.coalesce("s", F.lit(0.0)).alias("h"))
-        )
-        hmax = hub.agg(F.max("h").alias("m"))
-        hub = (
-            hub.crossJoin(F.broadcast(hmax))
-            .select(
-                "host",
-                F.when(F.col("m") > 0, F.col("h") / F.col("m"))
-                .otherwise(F.lit(0.0)).alias("h"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        asum = (
-            ce.join(hub, ce.src_host == hub.host)
-            .groupBy(F.col("dst_host").alias("host"))
-            .agg(F.sum("h").alias("s"))
-        )
-        auth = (
-            hosts.join(asum, "host", "left")
-            .select("host", F.coalesce("s", F.lit(0.0)).alias("a"))
-        )
-        amax = auth.agg(F.max("a").alias("m"))
-        auth = (
-            auth.crossJoin(F.broadcast(amax))
-            .select(
-                "host",
-                F.when(F.col("m") > 0, F.col("a") / F.col("m"))
-                .otherwise(F.lit(0.0)).alias("a"),
-            )
-            .localCheckpoint(eager=True)
-        )
+        hub = half_step(auth, "a", "dst_host", "src_host", "h")
+        auth = half_step(hub, "h", "src_host", "dst_host", "a")
     return (
         hub.join(auth, "host")
         .select(

@@ -743,22 +743,25 @@ def event_stationary(events: DataFrame, user: str = "user_id",
     product change mid-window) and per-type counts are NOT the rates a
     capacity or sampling plan should extrapolate.
 
-    Same damped power method as ``host_pagerank`` — teleport (1-d)/n,
-    dangling types (never a from-state) keep only the teleport term,
-    leaked mass not redistributed, fixed iterations unrolled in the
-    oracle — but over the TYPE graph with self-transitions KEPT: a
+    The rank is a ``linkgraph.damped_rank`` call, the loop behind
+    ``host_pagerank`` — teleport (1-d)/n, dangling types (never a
+    from-state) keep only the teleport term, leaked mass not
+    redistributed, fixed iterations unrolled in the oracle — but over
+    the TYPE graph with self-transitions KEPT: a
     view→view loop is real dwell mass in a Markov chain, unlike the
     chrome self-links the host graph drops. 6dp rounding absorbs the
     |types|-bounded incoming-sum order.
 
     Scale shape: one user-key window shuffle builds the pair matrix
-    (|types|² rows); every iteration runs over the TYPE table. The two
-    scalar counts and all joins are type-table-sized; the corpus is
+    (|types|² rows); every iteration runs over the TYPE table. The
+    scalar count and all joins are type-table-sized; the corpus is
     read twice (pairs + type counts), never in the loop.
 
     Output: (event_type, stationary_p, empirical_share), both round 6.
     """
     from pyspark.sql import Window
+
+    from .linkgraph import damped_rank
 
     pairs = _transition_pairs(
         events, user, ts_us, type_col, order_tiebreak
@@ -797,28 +800,10 @@ def event_stationary(events: DataFrame, user: str = "user_id",
         )
         .localCheckpoint(eager=True)
     )
-    teleport = (1.0 - damping) / n
-    ranks = types.select("event_type", F.lit(1.0 / n).alias("rank"))
-    for _ in range(iterations):
-        incoming = (
-            wf.join(ranks, wf.from_type == ranks.event_type)
-            .select(
-                F.col("to_type").alias("event_type"),
-                (F.col("rank") * F.col("wfrac") * F.lit(damping)).alias("t"),
-            )
-            .groupBy("event_type")
-            .agg(F.sum("t").alias("s"))
-        )
-        ranks = (
-            types.join(incoming, "event_type", "left")
-            .select(
-                "event_type",
-                (
-                    F.lit(teleport) + F.coalesce(F.col("s"), F.lit(0.0))
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
+    ranks = damped_rank(
+        wf, types, "event_type", "from_type", "to_type",
+        F.lit((1.0 - damping) / n), F.lit(1.0 / n), iterations, damping,
+    )
     return (
         ranks.join(share, "event_type")
         .select(
